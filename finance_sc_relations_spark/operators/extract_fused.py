@@ -7,9 +7,9 @@ twice. Profiling showed Arrow serialization dominating CPU, so the hot path
 fuses both into one mapInPandas: tagged strings never leave the Python
 worker — only the (r_id, entity1, entity2, scores) rows do.
 
-The unfused operators remain the public API (pairs are a real intermediate
-for debugging/eval); run_pipeline picks the fused path by default
-(PipelineConfig.fuse_extraction)."""
+Both KG runners take this fused path. The unfused operators remain public
+(pairs are a real intermediate for debugging/eval, and the tests use them
+as the oracle the fused path must equal)."""
 
 from __future__ import annotations
 

@@ -101,14 +101,15 @@ def link_triples(
 def build_edges(linked_triples: DataFrame) -> DataFrame:
     """Page-level edge rollup: one edge per (url, subj_id, obj_id), score
     summed per agg_relations semantics (reporter.py:59-69), evidence
-    sentence ids collected."""
+    sentence ids collected in sorted order. Surfaces are the least of the
+    pair's surfaces, so no column depends on row arrival order."""
     return (
         linked_triples.groupBy("url", "subj_id", "obj_id")
         .agg(
             F.first("pred").alias("pred"),
-            F.first("subj_surface").alias("subj_surface"),
-            F.first("obj_surface").alias("obj_surface"),
-            F.collect_list("sentence_id").alias("sentence_ids"),
+            F.min("subj_surface").alias("subj_surface"),
+            F.min("obj_surface").alias("obj_surface"),
+            F.array_sort(F.collect_list("sentence_id")).alias("sentence_ids"),
             F.sum("score").alias("score"),
         )
         .select(
@@ -128,8 +129,10 @@ def build_edges_global(
     Phase 1 groups on (subj_id, obj_id, salt(url)) so a mega-company pair's
     rows split across `salt_buckets` reducers; phase 2 combines the partial
     sums — the hot key touches one reducer only for `salt_buckets` pre-
-    aggregated rows. Evidence lists are capped at `evidence_cap` (logged by
-    column n_evidence, no silent truncation)."""
+    aggregated rows. Evidence lists keep the `evidence_cap` least sentence
+    ids (logged by column n_evidence, no silent truncation): each phase
+    sorts before it slices, so the kept ids do not depend on partition
+    order."""
     salted = linked_triples.withColumn(
         "salt", F.pmod(F.xxhash64("url"), F.lit(salt_buckets))
     )
@@ -137,26 +140,26 @@ def build_edges_global(
         F.first("pred").alias("pred"),
         F.sum("score").alias("p_score"),
         F.count("*").alias("p_count"),
-        F.slice(F.collect_list("sentence_id"), 1, evidence_cap).alias("p_sents"),
+        F.slice(F.array_sort(F.collect_list("sentence_id")), 1, evidence_cap)
+        .alias("p_sents"),
     )
     final = partial.groupBy("subj_id", "obj_id").agg(
         F.first("pred").alias("pred"),
         F.sum("p_score").alias("score"),
         F.sum("p_count").alias("n_evidence"),
-        F.slice(F.flatten(F.collect_list("p_sents")), 1, evidence_cap).alias(
-            "sentence_ids"
-        ),
+        F.slice(
+            F.array_sort(F.flatten(F.collect_list("p_sents"))), 1, evidence_cap
+        ).alias("sentence_ids"),
     )
     return final.select(
         "subj_id", "pred", "obj_id", "score", "n_evidence", "sentence_ids"
     )
 
 
-def build_vertices(
-    linked_triples: DataFrame, surface_to_entity: DataFrame
-) -> DataFrame:
-    """Vertex table: one row per canonical entity with observed aliases
-    (alias-item analog, reporter.py:359-384)."""
+def build_vertices(linked_triples: DataFrame) -> DataFrame:
+    """Vertex table: one row per canonical entity with its observed
+    surfaces as sorted aliases (alias-item analog, reporter.py:359-384).
+    canonical_name is the longest surface, ties broken by the greatest."""
     used = (
         linked_triples.select(F.col("subj_id").alias("entity_id"),
                               F.col("subj_surface").alias("surface"))
@@ -168,8 +171,10 @@ def build_vertices(
     return (
         used.groupBy("entity_id")
         .agg(
-            F.max_by("surface", F.length("surface")).alias("canonical_name"),
-            F.collect_set("surface").alias("aliases"),
+            F.max_by(
+                "surface", F.struct(F.length("surface"), F.col("surface"))
+            ).alias("canonical_name"),
+            F.array_sort(F.collect_set("surface")).alias("aliases"),
         )
         .select("entity_id", "canonical_name", "aliases",
                 F.lit(None).cast("timestamp").alias("first_seen_ts"))

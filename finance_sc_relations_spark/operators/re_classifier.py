@@ -160,15 +160,15 @@ def score_pairs(
     [E1]/[E2] markers are indexed in the subword-id sequence, and rows
     whose markers were truncated away at `max_length` (or never tagged) are
     DROPPED and counted into `dropped_acc` (a sc.accumulator — the
-    "Invalid rows/total" lineage). The accumulator is ADVISORY: Spark
-    accumulators updated inside transformations have at-least-once
-    semantics (task retries and speculative execution re-add), so treat it
-    as a progress signal; the authoritative drop count is the
-    input_rows - output_rows delta the checkpointed runner records per
-    stage in its `_lineage` table (exactly-once, derived from committed
-    row counts). A model exposing score_ids_batch (the padded-ids
-    transformer contract) receives the encoded form;
-    otherwise the surviving tagged strings are scored as before.
+    "Invalid rows/total" lineage). The accumulator is the only count of
+    these drops, and it is at-least-once: Spark accumulators updated inside
+    transformations re-add on task retries, speculative execution and
+    recomputation, so it can over-count. (The input_rows - output_rows
+    delta of a checkpointed stage is not a drop count: the stage also
+    aggregates positions into one row per r_id.) A model exposing
+    score_ids_batch (the padded-ids transformer contract) receives the
+    encoded form; otherwise the surviving tagged strings are scored as
+    before.
     """
     df = pairs
     if model_partitions:

@@ -35,6 +35,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .pipeline import KG_STAGES, PipelineConfig, kg_inputs, kg_outputs
+
 
 class CheckpointManager:
     """Directory-backed stage checkpointing with lineage."""
@@ -254,25 +256,16 @@ def run_pipeline_checkpointed(
     config=None,
     run_id: str | None = None,
 ) -> dict:
-    """The resumable form of plans.pipeline.run_pipeline: every major stage
-    materializes through the CheckpointManager; killing the job between
-    stages and rerunning with the same checkpoint_root resumes after the
-    last completed stage and yields byte-identical final tables (pytest
-    tests/test_resume.py)."""
-    from ..operators.segment import segment_sentences
-    from ..operators.ner import detect_mentions, gate_multi_org
-    from ..operators.sc_classifier import sc_gate
-    from ..operators.pairs import generate_tagged_pairs
-    from ..operators.re_classifier import classify_pairs
-    from ..operators.graph import (
-        build_alias_edges,
-        build_edges,
-        emit_triples,
-        link_triples,
-    )
-    from ..operators.linking import canonicalize_unmatched, link_surfaces
-    from .pipeline import PipelineConfig
+    """The resumable form of plans.pipeline.run_pipeline: the same
+    KG_STAGES, each materialized through CheckpointManager.run_stage instead
+    of persisted. Killing the job between stages and rerunning with the
+    same checkpoint_root resumes after the last completed stage and yields
+    the same final tables (pytest tests/test_resume.py).
 
+    Returns the same frames as run_pipeline, read back from the stage
+    tables, plus "checkpoint": the manager. Side frames (multi_org, gated,
+    linked_surfaces, alias_edges) are present only when the stage that
+    builds them ran rather than resumed."""
     cfg = config or PipelineConfig()
     ckpt = CheckpointManager(spark, checkpoint_root, run_id=run_id)
     fp = (
@@ -282,7 +275,7 @@ def run_pipeline_checkpointed(
 
     def _rows(stage: str) -> int:
         """Completed stage's output_rows from its manifest (feeds the next
-        stage's input_rows lineage column)."""
+        stage's input_rows lineage column); -1 when unknown."""
         mp = ckpt._manifest_path(stage)
         if mp.exists():
             try:
@@ -291,124 +284,12 @@ def run_pipeline_checkpointed(
                 return -1
         return -1
 
-    pages = spark.read.parquet(pages_path)
-    company_dict = spark.read.parquet(company_dict_path)
-    # same tier dispatch as plans.pipeline: never collect a dictionary
-    # bigger than the broadcast threshold; cap the NER gazetteer instead
-    dict_cols = company_dict.select(
-        "entity_id", "canonical_name", "prefix2", "aliases"
+    s = kg_inputs(
+        spark.read.parquet(pages_path), spark.read.parquet(company_dict_path),
+        cfg,
     )
-    use_distributed_linking = cfg.distributed_linking
-    if use_distributed_linking is None:
-        use_distributed_linking = dict_cols.count() > cfg.max_broadcast_dict_rows
-    company_pdf = (
-        dict_cols.limit(cfg.max_broadcast_dict_rows)
-        if use_distributed_linking
-        else dict_cols
-    ).toPandas()
-
-    n_part = cfg.model_partitions or spark.sparkContext.defaultParallelism * 2
-
-    sentences = ckpt.run_stage(
-        "sentences",
-        lambda: segment_sentences(pages, lang=cfg.lang).repartition(n_part),
-        fp,
-    )
-    mentions = ckpt.run_stage(
-        "mentions",
-        lambda: detect_mentions(
-            sentences, company_pdf, include_spans=False,
-            with_sc=cfg.use_sc_gate,
-            sc_model_broadcast=cfg.sc_model_broadcast,
-            sc_tokenizer_broadcast=cfg.sc_tokenizer_broadcast,
-            sc_max_length=cfg.sc_max_length,
-        ),
-        fp,
-        input_rows=_rows("sentences"),
-    )
-    gated = gate_multi_org(mentions)
-    if cfg.use_sc_gate:
-        gated = sc_gate(gated, threshold=cfg.sc_threshold)
-    pairs = ckpt.run_stage(
-        "pairs",
-        lambda: generate_tagged_pairs(
-            gated.select("url", "sentence_id", "sentence", "org_groups"),
-            num_positions=cfg.num_positions,
-        ),
-        fp,
-        input_rows=_rows("mentions"),
-    )
-    classified = ckpt.run_stage(
-        "classified",
-        lambda: classify_pairs(
-            pairs.select(
-                "url", "sentence_id", "r_id", "sents", "entity1", "entity2",
-                "org_groups",
-            ),
-            mutate=cfg.mutate,
-            reverse=cfg.reverse,
-            model_partitions=cfg.model_partitions,
-            model_broadcast=cfg.re_model_broadcast,
-            model_path=cfg.re_model_path,
-            tokenizer_broadcast=cfg.re_tokenizer_broadcast,
-            max_length=cfg.re_max_length,
-            dropped_acc=cfg.re_dropped_acc,
-        ),
-        fp,
-        input_rows=_rows("pairs"),
-    )
-    triples = ckpt.run_stage(
-        "triples", lambda: emit_triples(classified, cfg.score_threshold), fp,
-        input_rows=_rows("classified"),
-    )
-
-    _linked_cache: dict = {}
-
-    def _linked():
-        surfaces = (
-            triples.select(F.col("subj_surface").alias("surface"))
-            .unionByName(triples.select(F.col("obj_surface").alias("surface")))
-            .distinct()
+    for name, build, source, _ in KG_STAGES:
+        s[name] = ckpt.run_stage(
+            name, lambda b=build: b(s, cfg), fp, input_rows=_rows(source)
         )
-        if use_distributed_linking:
-            from ..operators.linking import link_surfaces_distributed
-
-            linked_surfaces = link_surfaces_distributed(
-                surfaces, company_dict,
-                cand_thresh=cfg.cand_thresh, match_thresh=cfg.match_thresh,
-            )
-        else:
-            linked_surfaces = link_surfaces(
-                surfaces, company_pdf,
-                cand_thresh=cfg.cand_thresh, match_thresh=cfg.match_thresh,
-            )
-        alias_edges = build_alias_edges(mentions)
-        s2e = canonicalize_unmatched(
-            linked_surfaces, alias_edges.select("target", "alias")
-        ).persist()
-        _linked_cache["s2e"] = s2e
-        # same broadcast-vs-equi-join auto-dispatch as plans.pipeline; the
-        # count materializes the persisted map so both endpoint joins read
-        # cache (explicitly unpersisted after the stage write — persisted
-        # plans are NOT ContextCleaner-managed)
-        out = link_triples(
-            triples,
-            s2e.select("surface", "entity_id"),
-            max_broadcast_rows=cfg.max_broadcast_dict_rows,
-        )
-        return out
-
-    linked = ckpt.run_stage(
-        "linked_triples", _linked, fp, input_rows=_rows("triples")
-    )
-    if "s2e" in _linked_cache:  # stage ran (not resumed): release the cache
-        _linked_cache.pop("s2e").unpersist()
-    edges = ckpt.run_stage(
-        "edges", lambda: build_edges(linked), fp,
-        input_rows=_rows("linked_triples"),
-    )
-    return dict(
-        sentences=sentences, mentions=mentions, pairs=pairs,
-        classified=classified, triples=triples, linked_triples=linked,
-        edges=edges, checkpoint=ckpt,
-    )
+    return {**kg_outputs(s), "checkpoint": ckpt}

@@ -1,27 +1,29 @@
 """End-to-end KG-construction pipeline (the Spark form of the reference's
 three entry points, SURVEY.md §3).
 
-pages -> clean+segment -> mentions -> [SC gate] -> pairs -> RE scores
+pages -> clean+segment -> mentions -> [SC gate] -> fused tag+score (RE)
       -> triples -> link -> edges/vertices
 
-Each stage is a pure DataFrame -> DataFrame function; this module wires them
-and (optionally) persists every stage through the checkpoint manager so a
-killed run resumes from the last completed stage (the Spark form of
-block_job_files/add_results, src/glue/glue_etl.py:313-444).
+The DAG is declared once, as the ordered KG_STAGES list; each stage is a
+pure DataFrame builder over the outputs of earlier stages. Two runners walk
+the same list and differ only in how they materialize a stage: run_pipeline
+keeps the DAG in memory and persists its branch points;
+plans.checkpoint.run_pipeline_checkpointed writes every stage to a stage
+table so a killed run resumes from the last completed stage (the Spark form
+of block_job_files/add_results, src/glue/glue_etl.py:313-444).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators import extract_fused, re_classifier
 from ..operators.segment import segment_sentences
 from ..operators.ner import detect_mentions, gate_multi_org
 from ..operators.sc_classifier import sc_gate
-from ..operators.pairs import generate_tagged_pairs
-from ..operators.re_classifier import classify_pairs
 from ..operators.graph import (
     build_alias_edges,
     build_edges,
@@ -50,13 +52,6 @@ class PipelineConfig:
     cand_thresh: float = 0.8
     model_partitions: int | None = None
     salt_buckets: int = 32
-    # Persist DAG branch points (mentions feeds both the pair fan-out and the
-    # alias-edge path; triples feeds both surface linking and edge building).
-    # Without this Spark recomputes the whole extraction subtree per branch.
-    persist_intermediate: bool = True
-    # Fuse tagging+scoring into one Arrow pass (tagged strings never cross
-    # the JVM boundary). False exposes the `pairs` intermediate for debugging.
-    fuse_extraction: bool = True
     # Optional sc.broadcast(models.serialize_model(...)) — swaps the RE
     # scorer for a checkpoint-loaded BatchModel (the GPU transformer
     # drop-in seam), deserialized once per executor.
@@ -88,7 +83,170 @@ class PipelineConfig:
     # for linking).
     distributed_linking: bool | None = None
     max_broadcast_dict_rows: int = 2_000_000
-    extra: dict = field(default_factory=dict)
+
+
+# The keys kg_inputs puts in the stage dict; everything else a runner
+# returns is a stage output or a side frame.
+KG_INPUTS = ("pages", "company_dict", "company_pdf", "distributed_linking")
+
+
+def kg_inputs(
+    pages: DataFrame, company_dict: DataFrame, cfg: PipelineConfig
+) -> dict:
+    """The DAG's inputs plus the driver-side dictionary both the NER
+    gazetteer and the broadcast linking tier read."""
+    # Decide the linking tier BEFORE collecting: a 10^8-row dictionary must
+    # never ride toPandas (SURVEY §1.1 — the large-dict case stays
+    # distributed; the NER gazetteer is capped instead).
+    distributed = cfg.distributed_linking
+    dict_cols = company_dict.select(
+        "entity_id", "canonical_name", "prefix2", "aliases"
+    )
+    if distributed is None:
+        distributed = dict_cols.count() > cfg.max_broadcast_dict_rows
+    company_pdf = (
+        dict_cols.limit(cfg.max_broadcast_dict_rows)
+        if distributed
+        else dict_cols
+    ).toPandas()
+    return dict(pages=pages, company_dict=company_dict,
+                company_pdf=company_pdf, distributed_linking=distributed)
+
+
+# -- stage builders ---------------------------------------------------------
+# build(s, cfg) -> the stage's DataFrame, where s holds the inputs and every
+# earlier stage's output. A builder may also record side frames in s (frames
+# callers read that are not stages); those exist only when the builder ran.
+# Layer functions are called through this module's names (and the fused
+# extraction pair through its modules) so they can be patched per call.
+
+def _sentences(s, cfg):
+    # The input often arrives as a handful of parquet files (or one); the
+    # model stages need >= slot-count partitions to parallelize. On a real
+    # cluster this is the repartition-before-model-fleet step (reference
+    # analog: instance-fleet sizing, glue_etl.py:548-593). Repartition the
+    # PAGES, not the sentences: the shuffle moves the same text bytes
+    # without the per-sentence url/id duplication, and the regex-heavy
+    # clean+segment stage then runs at full slot width.
+    pages = s["pages"]
+    n_part = (cfg.model_partitions
+              or pages.sparkSession.sparkContext.defaultParallelism * 2)
+    return segment_sentences(pages.repartition(n_part), lang=cfg.lang)
+
+
+def _mentions(s, cfg):
+    # Fused NER+SC pass, spans dropped: Arrow serialization of the wide span
+    # structs through back-to-back UDF stages dominated CPU (see operator
+    # docstring). spans remain available via detect_mentions(include_spans=True).
+    return detect_mentions(
+        s["sentences"], s["company_pdf"], include_spans=False,
+        with_sc=cfg.use_sc_gate,
+        sc_model_broadcast=cfg.sc_model_broadcast,
+        sc_tokenizer_broadcast=cfg.sc_tokenizer_broadcast,
+        sc_max_length=cfg.sc_max_length,
+    )
+
+
+def _classified(s, cfg):
+    s["multi_org"] = gate_multi_org(s["mentions"])
+    s["gated"] = (
+        sc_gate(s["multi_org"], threshold=cfg.sc_threshold)
+        if cfg.use_sc_gate else s["multi_org"]
+    )
+    # Only the columns the tagging UDF consumes cross the Arrow boundary.
+    scored = extract_fused.tag_and_score(
+        s["gated"].select("url", "sentence_id", "sentence", "org_groups"),
+        num_positions=cfg.num_positions,
+        mutate=cfg.mutate,
+        reverse=cfg.reverse,
+        model_broadcast=cfg.re_model_broadcast,
+        model_path=cfg.re_model_path,
+        tokenizer_broadcast=cfg.re_tokenizer_broadcast,
+        max_length=cfg.re_max_length,
+        dropped_acc=cfg.re_dropped_acc,
+    )
+    return re_classifier.aggregate_positions(scored)
+
+
+def _triples(s, cfg):
+    return emit_triples(s["classified"], score_threshold=cfg.score_threshold)
+
+
+def _surface_to_entity(s, cfg):
+    triples = s["triples"]
+    surfaces = (
+        triples.select(triples.subj_surface.alias("surface"))
+        .unionByName(triples.select(triples.obj_surface.alias("surface")))
+        .distinct()
+    )
+    if s["distributed_linking"]:
+        s["linked_surfaces"] = link_surfaces_distributed(
+            surfaces, s["company_dict"],
+            cand_thresh=cfg.cand_thresh, match_thresh=cfg.match_thresh,
+        )
+    else:
+        s["linked_surfaces"] = link_surfaces(
+            surfaces, s["company_pdf"],
+            cand_thresh=cfg.cand_thresh, match_thresh=cfg.match_thresh,
+        )
+    s["alias_edges"] = build_alias_edges(s["mentions"])
+    return canonicalize_unmatched(
+        s["linked_surfaces"], s["alias_edges"].select("target", "alias")
+    )
+
+
+def _linked_triples(s, cfg):
+    # auto-dispatch: broadcast the surface map only below the same row
+    # threshold as the dictionary — at web scale the per-distinct-surface map
+    # is ~10^7+ rows and must go through a plain (AQE) equi-join instead.
+    # The dispatch count materializes the surface map, so the two endpoint
+    # joins read it rather than re-running the linking subtree.
+    return link_triples(
+        s["triples"],
+        s["surface_to_entity"].select("surface", "entity_id"),
+        max_broadcast_rows=cfg.max_broadcast_dict_rows,
+    )
+
+
+def _edges(s, cfg):
+    return build_edges(s["linked_triples"])
+
+
+def _edges_global(s, cfg):
+    return build_edges_global(s["linked_triples"], salt_buckets=cfg.salt_buckets)
+
+
+def _vertices(s, cfg):
+    return build_vertices(s["linked_triples"])
+
+
+# ONE ordered stage list consumed by BOTH runners (the CURATION_GATES
+# pattern of plans/curate.py): (name, builder, source, branch point).
+# source is the stage (or, for sentences, the input) whose rows are this
+# stage's input: the lineage input_rows of the checkpointed runner. A branch point is read by more
+# than one later stage (mentions feeds the pair fan-out and the alias
+# edges; triples feeds surface linking and the endpoint joins; the surface
+# map feeds the dispatch count and both endpoint joins; linked_triples
+# feeds the three graph rollups): without materializing it, Spark
+# recomputes its whole subtree per consumer. run_pipeline persists branch
+# points (persist, NOT localCheckpoint: persist keeps lineage, so a lost
+# executor recomputes its partitions instead of failing the job).
+KG_STAGES = [
+    ("sentences", _sentences, "pages", False),
+    ("mentions", _mentions, "sentences", True),
+    ("classified", _classified, "mentions", False),
+    ("triples", _triples, "classified", True),
+    ("surface_to_entity", _surface_to_entity, "triples", True),
+    ("linked_triples", _linked_triples, "triples", True),
+    ("edges", _edges, "linked_triples", False),
+    ("edges_global", _edges_global, "linked_triples", False),
+    ("vertices", _vertices, "linked_triples", False),
+]
+
+
+def kg_outputs(s: dict) -> dict[str, DataFrame]:
+    """A runner's stage dict without its inputs."""
+    return {k: v for k, v in s.items() if k not in KG_INPUTS}
 
 
 def run_pipeline(
@@ -96,162 +254,19 @@ def run_pipeline(
     pages: DataFrame,
     company_dict: DataFrame,
     config: PipelineConfig | None = None,
-) -> dict[str, DataFrame]:
-    """Run the full extraction DAG; returns every stage DataFrame keyed by
-    stage name (callers persist what they need)."""
+) -> dict:
+    """Run the KG DAG in memory. Returns every stage's and side frame's
+    DataFrame keyed by name, plus "cached": the frames this call persisted.
+    Persisted blocks are NOT released when the frames are garbage-collected;
+    a long-lived session should unpersist the cached frames once it has
+    materialized the outputs it needs."""
     cfg = config or PipelineConfig()
-
-    # Decide the linking tier BEFORE collecting: a 10^8-row dictionary must
-    # never ride toPandas (SURVEY §1.1 — the large-dict case stays
-    # distributed; the NER gazetteer is capped instead).
-    use_distributed_linking = cfg.distributed_linking
-    dict_cols = company_dict.select(
-        "entity_id", "canonical_name", "prefix2", "aliases"
-    )
-    if use_distributed_linking is None:
-        use_distributed_linking = dict_cols.count() > cfg.max_broadcast_dict_rows
-    company_pdf = (
-        dict_cols.limit(cfg.max_broadcast_dict_rows)
-        if use_distributed_linking
-        else dict_cols
-    ).toPandas()
-
-    # The input often arrives as a handful of parquet files (or one); the
-    # model stages need >= slot-count partitions to parallelize. On a real
-    # cluster this is the repartition-before-model-fleet step
-    # (reference analog: instance-fleet sizing, glue_etl.py:548-593).
-    # r6: repartition the PAGES, not the sentences — the shuffle moves the
-    # same text bytes without the per-sentence url/id duplication, and the
-    # regex-heavy clean+segment stage then runs at full slot width instead
-    # of at the input's file count.
-    n_part = cfg.model_partitions or spark.sparkContext.defaultParallelism * 2
-    sentences = segment_sentences(pages.repartition(n_part), lang=cfg.lang)
-    # Fused NER+SC pass, spans dropped: Arrow serialization of the wide span
-    # structs through back-to-back UDF stages dominated CPU (see operator
-    # docstring). spans remain available via detect_mentions(include_spans=True).
-    mentions = detect_mentions(
-        sentences, company_pdf, include_spans=False, with_sc=cfg.use_sc_gate,
-        sc_model_broadcast=cfg.sc_model_broadcast,
-        sc_tokenizer_broadcast=cfg.sc_tokenizer_broadcast,
-        sc_max_length=cfg.sc_max_length,
-    )
-    if cfg.persist_intermediate:
-        mentions = mentions.persist(StorageLevel.MEMORY_AND_DISK)
-    multi_org = gate_multi_org(mentions)
-    if cfg.use_sc_gate:
-        gated = sc_gate(multi_org, threshold=cfg.sc_threshold)
-    else:
-        gated = multi_org
-    # Only the columns the tagging UDF consumes cross the Arrow boundary.
-    pair_input = gated.select("url", "sentence_id", "sentence", "org_groups")
-    if cfg.fuse_extraction:
-        from ..operators.extract_fused import tag_and_score
-        from ..operators.re_classifier import aggregate_positions
-
-        pairs = None
-        scored = tag_and_score(
-            pair_input,
-            num_positions=cfg.num_positions,
-            mutate=cfg.mutate,
-            reverse=cfg.reverse,
-            model_broadcast=cfg.re_model_broadcast,
-            model_path=cfg.re_model_path,
-            tokenizer_broadcast=cfg.re_tokenizer_broadcast,
-            max_length=cfg.re_max_length,
-            dropped_acc=cfg.re_dropped_acc,
-        )
-        classified = aggregate_positions(scored)
-    else:
-        pairs = generate_tagged_pairs(pair_input, num_positions=cfg.num_positions)
-        classified = classify_pairs(
-            pairs.select(
-                "url", "sentence_id", "r_id", "sents", "entity1", "entity2",
-                "org_groups",
-            ),
-            mutate=cfg.mutate,
-            reverse=cfg.reverse,
-            model_partitions=cfg.model_partitions,
-            model_broadcast=cfg.re_model_broadcast,
-            model_path=cfg.re_model_path,
-            tokenizer_broadcast=cfg.re_tokenizer_broadcast,
-            max_length=cfg.re_max_length,
-            dropped_acc=cfg.re_dropped_acc,
-        )
-    triples = emit_triples(classified, score_threshold=cfg.score_threshold)
-    if cfg.persist_intermediate:
-        triples = triples.persist(StorageLevel.MEMORY_AND_DISK)
-
-    surfaces = (
-        triples.select(triples.subj_surface.alias("surface"))
-        .unionByName(triples.select(triples.obj_surface.alias("surface")))
-        .distinct()
-    )
-    if use_distributed_linking:
-        linked_surfaces = link_surfaces_distributed(
-            surfaces, company_dict,
-            cand_thresh=cfg.cand_thresh, match_thresh=cfg.match_thresh,
-        )
-    else:
-        linked_surfaces = link_surfaces(
-            surfaces, company_pdf,
-            cand_thresh=cfg.cand_thresh, match_thresh=cfg.match_thresh,
-        )
-    alias_edges = build_alias_edges(mentions)
-    surface_to_entity = canonicalize_unmatched(
-        linked_surfaces,
-        alias_edges.select("target", "alias"),
-    )
-    # surface_to_entity feeds the broadcast-dispatch count AND both endpoint
-    # joins in link_triples — without materialization each action re-executes
-    # the whole linking subtree (measured ~17s per action at 100k pages).
-    # persist, NOT localCheckpoint: checkpoint blocks truncate lineage, so
-    # one lost executor (routine with spot nodes / dynamic allocation at the
-    # web scale this targets) would fail the job instead of recomputing the
-    # lost partitions. persist keeps lineage AND its blocks are still
-    # ContextCleaner-managed (freed when the frame is GC'd), so repeated
-    # run_pipeline calls in a long-lived session don't leak storage; callers
-    # wanting deterministic release can unpersist the returned
-    # surface_to_entity frame themselves. Bounded: one row per distinct
-    # surface. The dispatch count below materializes it eagerly.
-    if cfg.extra.get("surface_materialize") == "checkpoint":
-        # A/B lever (r6, VERDICT #2): eager localCheckpoint truncates
-        # lineage — faster repeat access, but blocks are unrecoverable on
-        # executor loss. Not the default; exists to price the resilience
-        # trade on a pinned workload.
-        surface_to_entity = surface_to_entity.localCheckpoint(eager=True)
-    else:
-        surface_to_entity = surface_to_entity.persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    # auto-dispatch: broadcast the surface map only below the same row
-    # threshold as the dictionary — at web scale the per-distinct-surface map
-    # is ~10^7+ rows and must go through a plain (AQE) equi-join instead.
-    # The dispatch count materializes the persisted map, so the two endpoint
-    # joins read cache rather than re-running the linking subtree.
-    linked = link_triples(
-        triples,
-        surface_to_entity.select("surface", "entity_id"),
-        max_broadcast_rows=cfg.max_broadcast_dict_rows,
-    )
-    if cfg.persist_intermediate:
-        linked = linked.persist(StorageLevel.MEMORY_AND_DISK)
-    edges = build_edges(linked)
-    edges_global = build_edges_global(linked, salt_buckets=cfg.salt_buckets)
-    vertices = build_vertices(linked, surface_to_entity)
-
-    return dict(
-        sentences=sentences,
-        mentions=mentions,
-        multi_org=multi_org,
-        gated=gated,
-        pairs=pairs,
-        classified=classified,
-        triples=triples,
-        linked_surfaces=linked_surfaces,
-        surface_to_entity=surface_to_entity,
-        alias_edges=alias_edges,
-        linked_triples=linked,
-        edges=edges,
-        edges_global=edges_global,
-        vertices=vertices,
-    )
+    s = kg_inputs(pages, company_dict, cfg)
+    cached = []
+    for name, build, _, branch in KG_STAGES:
+        df = build(s, cfg)
+        if branch:
+            df = df.persist(StorageLevel.MEMORY_AND_DISK)
+            cached.append(df)
+        s[name] = df
+    return {**kg_outputs(s), "cached": cached}

@@ -77,6 +77,10 @@ def stream_extract_triples(
             .partitionBy("_batch_id")
             .parquet(output_dir)
         )
+        # run_pipeline's persisted branch points outlive the batch unless
+        # released: one set per micro-batch would pile up in executor storage
+        for df in out["cached"]:
+            df.unpersist()
 
     return (
         stream.writeStream.foreachBatch(_process)

@@ -19,6 +19,8 @@ Local smoke:
 
 With --checkpoint the job runs the resumable pipeline (stage tables +
 _lineage; rerunning after a kill resumes). Without it, the in-memory DAG.
+Both runners walk the same stage list and return the same four outputs,
+written under --output as triples, edges, edges_global and vertices.
 """
 
 from __future__ import annotations
@@ -46,7 +48,6 @@ def main() -> int:
 
     from finance_sc_relations_spark.plans.pipeline import PipelineConfig, run_pipeline
     from finance_sc_relations_spark.plans.checkpoint import run_pipeline_checkpointed
-    from finance_sc_relations_spark.operators.graph import build_edges_global, build_vertices
 
     spark = SparkSession.builder.appName("fsr-kg-construct").getOrCreate()
     cfg = PipelineConfig(
@@ -60,30 +61,15 @@ def main() -> int:
         out = run_pipeline_checkpointed(
             spark, args.pages, args.company_dict, args.checkpoint, cfg
         )
-        linked = out["linked_triples"]
-        edges = out["edges"]
-        s2e = linked.select("subj_surface", "subj_id").withColumnRenamed(
-            "subj_surface", "surface"
-        ).withColumnRenamed("subj_id", "entity_id").unionByName(
-            linked.select("obj_surface", "obj_id").withColumnRenamed(
-                "obj_surface", "surface"
-            ).withColumnRenamed("obj_id", "entity_id")
-        ).distinct()
-        vertices = build_vertices(linked, s2e)
     else:
         pages = spark.read.parquet(args.pages)
         company_dict = spark.read.parquet(args.company_dict)
         out = run_pipeline(spark, pages, company_dict, cfg)
-        linked, edges, vertices = (
-            out["linked_triples"], out["edges"], out["vertices"]
-        )
 
-    linked.write.mode("overwrite").parquet(f"{args.output}/triples")
-    edges.write.mode("overwrite").parquet(f"{args.output}/edges")
-    build_edges_global(linked, salt_buckets=args.salt_buckets).write.mode(
-        "overwrite"
-    ).parquet(f"{args.output}/edges_global")
-    vertices.write.mode("overwrite").parquet(f"{args.output}/vertices")
+    for name, key in (("triples", "linked_triples"), ("edges", "edges"),
+                      ("edges_global", "edges_global"),
+                      ("vertices", "vertices")):
+        out[key].write.mode("overwrite").parquet(f"{args.output}/{name}")
     n_triples = spark.read.parquet(f"{args.output}/triples").count()
     wall = time.perf_counter() - t0
     print(

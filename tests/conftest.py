@@ -23,3 +23,42 @@ def fixture_corpus():
     from finance_sc_relations_spark.fixtures import generate_corpus
 
     return generate_corpus(300)
+
+
+@pytest.fixture(scope="session")
+def fused_and_unfused():
+    """The unfused extraction path as a test oracle for the fused one.
+
+    Returns f(out, cfg) -> (fused, unfused): the run_pipeline output's
+    `classified` rows, and the rows classify_pairs(generate_tagged_pairs(
+    out["gated"])) yields under the same model and tokenizer arguments.
+    Rows are sorted (r_id, entity1, entity2, relation, score to 1e-6)
+    tuples. Each call re-executes both paths."""
+    from finance_sc_relations_spark.operators.pairs import generate_tagged_pairs
+    from finance_sc_relations_spark.operators.re_classifier import classify_pairs
+
+    def rows(df):
+        return sorted(
+            (r["r_id"], r["entity1"], r["entity2"], r["relation"],
+             round(r["score"], 6))
+            for r in df.collect()
+        )
+
+    def run(out, cfg):
+        pairs = generate_tagged_pairs(
+            out["gated"].select("url", "sentence_id", "sentence", "org_groups"),
+            num_positions=cfg.num_positions,
+        )
+        unfused = classify_pairs(
+            pairs.select("url", "sentence_id", "r_id", "sents", "entity1",
+                         "entity2", "org_groups"),
+            mutate=cfg.mutate,
+            reverse=cfg.reverse,
+            model_broadcast=cfg.re_model_broadcast,
+            model_path=cfg.re_model_path,
+            tokenizer_broadcast=cfg.re_tokenizer_broadcast,
+            max_length=cfg.re_max_length,
+        )
+        return rows(out["classified"]), rows(unfused)
+
+    return run

@@ -1,5 +1,5 @@
 """Transformer drop-in contract: a non-default BatchModel shipped as a
-broadcast checkpoint must drive the whole pipeline (fused and unfused paths),
+broadcast checkpoint must drive the whole pipeline (and the unfused oracle),
 deserialized once per executor — the Spark analog of SageMaker's
 once-per-container model_fn (src/sagemaker/re_inference.py:24-35). On a GPU
 cluster the payload is the re_trf.py:51-65 checkpoint; the seam is the same."""
@@ -44,29 +44,25 @@ def test_broadcast_model_drives_fused_pipeline(spark):
     assert (abs(cls["score"] - 0.9) < 1e-6).all()
 
 
-def test_broadcast_model_drives_unfused_path_and_is_deterministic(spark):
+def test_broadcast_model_drives_unfused_path_and_is_deterministic(
+    spark, fused_and_unfused
+):
     pages_pdf, _, companies_pdf = generate_corpus(20)
     cfg = PipelineConfig(
-        fuse_extraction=False,
         reverse=False,
         re_model_broadcast=_bc(spark, [0.05, 0.9, 0.05], model_id="const-cus"),
     )
-    runs = []
-    for _ in range(2):
-        out = run_pipeline(
-            spark,
-            spark.createDataFrame(pages_pdf),
-            spark.createDataFrame(companies_pdf),
-            cfg,
-        )
-        runs.append(
-            sorted(
-                (r["r_id"], r["relation"], round(r["score"], 6))
-                for r in out["classified"].collect()
-            )
-        )
-    assert runs[0] == runs[1]  # deterministic across runs
-    assert all(rel == "customer" for _, rel, _ in runs[0])
+    out = run_pipeline(
+        spark,
+        spark.createDataFrame(pages_pdf),
+        spark.createDataFrame(companies_pdf),
+        cfg,
+    )
+    fused, unfused = fused_and_unfused(out, cfg)
+    assert unfused == fused and len(unfused) > 0
+    assert all(rel == "customer" for _, _, _, rel, _ in unfused)
+    # deterministic across executions of both paths
+    assert fused_and_unfused(out, cfg) == (fused, unfused)
 
 
 def test_model_from_broadcast_caches_per_model_id(spark):
@@ -79,7 +75,7 @@ def test_model_from_broadcast_caches_per_model_id(spark):
     assert out.shape == (2, 3)
 
 
-def test_checkpoint_file_model_drives_both_paths(spark, tmp_path):
+def test_checkpoint_file_model_drives_both_paths(spark, tmp_path, fused_and_unfused):
     """The model.pth.tar flow (infer.py:67-133): a checkpoint FILE loaded
     once per executor (keyed by path+mtime) drives the pipeline on the fused
     AND unfused paths — the broadcast seam's sibling for --files / shared-fs
@@ -103,19 +99,17 @@ def test_checkpoint_file_model_drives_both_paths(spark, tmp_path):
 
     save_model_checkpoint(ckpt, ConstantModel([0.05, 0.9, 0.05]))
     pages_pdf, _, companies_pdf = generate_corpus(20)
-    for fused in (True, False):
-        cfg = PipelineConfig(
-            fuse_extraction=fused, reverse=False, re_model_path=ckpt
-        )
-        out = run_pipeline(
-            spark,
-            spark.createDataFrame(pages_pdf),
-            spark.createDataFrame(companies_pdf),
-            cfg,
-        )
-        cls = out["classified"].select("relation", "score").toPandas()
-        assert len(cls) > 0 and set(cls["relation"]) == {"customer"}
-        assert (abs(cls["score"] - 0.9) < 1e-6).all()
+    cfg = PipelineConfig(reverse=False, re_model_path=ckpt)
+    out = run_pipeline(
+        spark,
+        spark.createDataFrame(pages_pdf),
+        spark.createDataFrame(companies_pdf),
+        cfg,
+    )
+    for rows in fused_and_unfused(out, cfg):
+        assert len(rows) > 0
+        assert {rel for _, _, _, rel, _ in rows} == {"customer"}
+        assert all(abs(score - 0.9) < 1e-6 for *_, score in rows)
 
 
 def test_broadcast_cache_keys_on_broadcast_not_id(spark):

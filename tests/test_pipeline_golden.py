@@ -82,11 +82,21 @@ def test_global_edges_consistent_with_page_edges(pipeline_output):
 
 def test_deterministic_rerun(spark, fixture_corpus):
     """Same input -> identical triple set (mutation seeding, grouping and
-    linking are all deterministic)."""
+    linking are all deterministic). Each run's persisted frames are
+    returned under "cached", and unpersisting them releases every block
+    the run pinned (garbage collection alone does not)."""
     pages_pdf, _, companies_pdf = fixture_corpus
     pages = spark.createDataFrame(pages_pdf.head(60))
     cd = spark.createDataFrame(companies_pdf)
-    a = run_pipeline(spark, pages, cd)["linked_triples"].toPandas()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    n0 = persistent().size()
+    out = run_pipeline(spark, pages, cd)
+    a = out["linked_triples"].toPandas()
+    assert len(out["cached"]) == 4
+    assert persistent().size() == n0 + 4
+    for df in out["cached"]:
+        df.unpersist()
+    assert persistent().size() == n0
     b = run_pipeline(spark, pages, cd)["linked_triples"].toPandas()
     key = ["sentence_id", "r_id", "subj_id", "obj_id"]
     assert sorted(map(tuple, a[key].values.tolist())) == sorted(
@@ -116,7 +126,7 @@ def test_html_fallback_extraction(spark):
     assert rows[0]["obj_surface"] == "Veltrix Systems Inc"
 
 
-def test_fused_equals_unfused_extraction(spark, fixture_corpus):
+def test_fused_equals_unfused_extraction(spark, fixture_corpus, fused_and_unfused):
     """The fused tagging+scoring path must be semantically identical to the
     composable two-stage path."""
     from finance_sc_relations_spark.plans.pipeline import PipelineConfig, run_pipeline
@@ -124,14 +134,9 @@ def test_fused_equals_unfused_extraction(spark, fixture_corpus):
     pages_pdf, _, companies_pdf = fixture_corpus
     pages = spark.createDataFrame(pages_pdf.head(80))
     cd = spark.createDataFrame(companies_pdf)
-    key = ["sentence_id", "r_id", "subj_id", "obj_id", "score"]
-    a = run_pipeline(spark, pages, cd, PipelineConfig(fuse_extraction=True))[
-        "linked_triples"].toPandas()
-    b = run_pipeline(spark, pages, cd, PipelineConfig(fuse_extraction=False))[
-        "linked_triples"].toPandas()
-    assert sorted(map(tuple, a[key].values.tolist())) == sorted(
-        map(tuple, b[key].values.tolist())
-    )
+    cfg = PipelineConfig()
+    fused, unfused = fused_and_unfused(run_pipeline(spark, pages, cd, cfg), cfg)
+    assert fused == unfused and len(fused) > 0
 
 
 def test_standalone_sc_classifier_matches_fused(spark, fixture_corpus):

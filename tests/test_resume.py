@@ -21,6 +21,9 @@ def fixture_paths(tmp_path_factory):
     return str(root / "pages.parquet"), str(root / "company_dict.parquet")
 
 
+KG_FINAL = ("linked_triples", "edges", "edges_global", "vertices")
+
+
 def _triples_set(out):
     rows = (
         out["linked_triples"]
@@ -30,7 +33,25 @@ def _triples_set(out):
     return sorted(tuple(r) for r in rows)
 
 
+def _row_multiset(df):
+    """Rows as a sorted multiset: arrays as tuples, float sums (scores)
+    rounded to 1e-9 so summation order cannot tell two runs apart."""
+    def value(v):
+        if isinstance(v, list):
+            return tuple(v)
+        return round(v, 9) if isinstance(v, float) else v
+
+    cols = sorted(df.columns)
+    return sorted(
+        (tuple(value(r[c]) for c in cols) for r in df.collect()), key=repr
+    )
+
+
 def test_full_run_then_resume_identical(spark, fixture_paths, tmp_path):
+    """A cold checkpointed run, a resume over it, and the in-memory runner
+    on the same parquet all yield the same four final tables."""
+    from finance_sc_relations_spark.plans.pipeline import run_pipeline
+
     pages_path, cd_path = fixture_paths
     ckpt_root = tmp_path / "ckpt"
 
@@ -43,11 +64,19 @@ def test_full_run_then_resume_identical(spark, fixture_paths, tmp_path):
     out2 = run_pipeline_checkpointed(spark, pages_path, cd_path, ckpt_root)
     assert _triples_set(out2) == t1
 
+    # one DAG, two runners: the in-memory plan equals the stage tables
+    eager = run_pipeline(spark, spark.read.parquet(pages_path),
+                         spark.read.parquet(cd_path))
+    for name in KG_FINAL:
+        assert _row_multiset(eager[name]) == _row_multiset(out2[name]), name
+    for df in eager["cached"]:
+        df.unpersist()
+
 
 def test_kill_mid_run_resumes(spark, fixture_paths, tmp_path):
-    """Simulate a crash after the pairs stage: later stage tables missing,
-    manifest for completed stages present -> rerun completes and matches a
-    from-scratch run."""
+    """Simulate a crash after the mentions stage: later stage tables
+    missing, manifest for completed stages present -> rerun completes and
+    matches a from-scratch run."""
     pages_path, cd_path = fixture_paths
     ckpt_a = tmp_path / "ckpt_a"
     ckpt_b = tmp_path / "ckpt_b"
@@ -55,9 +84,11 @@ def test_kill_mid_run_resumes(spark, fixture_paths, tmp_path):
     ref = run_pipeline_checkpointed(spark, pages_path, cd_path, ckpt_a)
     expected = _triples_set(ref)
 
-    # full run in B, then delete everything after 'pairs' to simulate the kill
+    # full run in B, then delete everything after 'mentions' to simulate
+    # the kill
     run_pipeline_checkpointed(spark, pages_path, cd_path, ckpt_b)
-    for stage in ["classified", "triples", "linked_triples", "edges"]:
+    for stage in ["classified", "triples", "surface_to_entity",
+                  "linked_triples", "edges", "edges_global", "vertices"]:
         shutil.rmtree(ckpt_b / stage)
 
     out = run_pipeline_checkpointed(spark, pages_path, cd_path, ckpt_b)
@@ -70,8 +101,9 @@ def test_lineage_rows_written(spark, fixture_paths, tmp_path):
     out = run_pipeline_checkpointed(spark, pages_path, cd_path, ckpt_root)
     lineage = out["checkpoint"].lineage().toPandas()
     stages = set(lineage["stage"])
-    assert {"sentences", "mentions", "pairs", "classified", "triples",
-            "linked_triples", "edges"} <= stages
+    assert {"sentences", "mentions", "classified", "triples",
+            "surface_to_entity", "linked_triples", "edges", "edges_global",
+            "vertices"} <= stages
     assert (lineage["output_rows"] >= 0).all()
     assert (lineage["wall_ms"] >= 0).all()
 

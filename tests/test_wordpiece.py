@@ -144,9 +144,12 @@ def test_tag_and_score_truncation_drop_fused(spark, re_tok_bc):
     assert acc2.value == 0
 
 
-def test_fused_unfused_tokenizer_paths_agree(spark, re_tok_bc, fixture_corpus):
-    """The tokenizer gate drops the same rows and yields the same triples
-    through both extraction paths (run_pipeline fuse_extraction=True/False)."""
+def test_fused_unfused_tokenizer_paths_agree(
+    spark, re_tok_bc, fixture_corpus, fused_and_unfused
+):
+    """The tokenizer gate drops the same rows and yields the same scores
+    through both extraction paths (run_pipeline's fused pass and the
+    unfused pairs -> classify_pairs oracle)."""
     from finance_sc_relations_spark.plans.pipeline import (
         PipelineConfig,
         run_pipeline,
@@ -155,26 +158,9 @@ def test_fused_unfused_tokenizer_paths_agree(spark, re_tok_bc, fixture_corpus):
     pages_pdf, _, companies_pdf = fixture_corpus
     pages = spark.createDataFrame(pages_pdf.head(40))
     cd = spark.createDataFrame(companies_pdf)
-    outs = []
-    for fused in (True, False):
-        cfg = PipelineConfig(
-            fuse_extraction=fused,
-            re_tokenizer_broadcast=re_tok_bc,
-            re_max_length=512,
-        )
-        out = run_pipeline(spark, pages, cd, cfg)
-        outs.append(
-            sorted(
-                map(
-                    tuple,
-                    out["linked_triples"]
-                    .select("sentence_id", "subj_id", "pred", "obj_id")
-                    .distinct()
-                    .collect(),
-                )
-            )
-        )
-    assert outs[0] == outs[1] and len(outs[0]) > 0
+    cfg = PipelineConfig(re_tokenizer_broadcast=re_tok_bc, re_max_length=512)
+    fused, unfused = fused_and_unfused(run_pipeline(spark, pages, cd, cfg), cfg)
+    assert fused == unfused and len(fused) > 0
 
 
 def test_score_ids_batch_seam(spark, re_tok_bc):
