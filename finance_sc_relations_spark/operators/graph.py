@@ -53,28 +53,17 @@ def emit_triples(classified_pairs: DataFrame, score_threshold: float = 0.5) -> D
     )
 
 
-def link_triples(
-    triples: DataFrame,
-    surface_to_entity: DataFrame,
-    broadcast: bool | None = None,
-    max_broadcast_rows: int = 2_000_000,
-) -> DataFrame:
-    """Attach canonical entity ids to both triple endpoints via two joins on
-    the distinct surface->entity map.
+def link_triples(triples: DataFrame, surface_to_entity: DataFrame) -> DataFrame:
+    """Attach canonical entity ids to both triple endpoints via two left
+    equi-joins on the distinct surface->entity map.
 
-    The map is one row per distinct corpus surface — ~10^7-10^8 strings at
-    web scale, a multi-GB payload an unconditional broadcast would ship
-    TWICE (subj + obj joins). Same auto-dispatch as the dictionary
-    (plans/pipeline.py max_broadcast_dict_rows): broadcast hint below
-    max_broadcast_rows, plain equi-join (AQE picks the strategy) above.
-
-    broadcast=None counts the map to decide — callers on the hot path should
-    persist the map first (plans/pipeline.py does) so the count materializes
-    the cache instead of re-running the linking lineage, or pass the
-    decision explicitly."""
-    if broadcast is None:
-        broadcast = surface_to_entity.count() <= max_broadcast_rows
-    s2e = F.broadcast(surface_to_entity) if broadcast else surface_to_entity
+    The map is one row per distinct corpus surface — a few hundred rows on a
+    small corpus, ~10^7-10^8 strings at web scale. No broadcast hint and no
+    size probe: AQE reads the materialized map's runtime size and turns a
+    join into a broadcast join below autoBroadcastJoinThreshold, and keeps
+    a shuffle join above it. Callers on the hot path should persist the map
+    (plans/pipeline.py does) so both joins read it once."""
+    s2e = surface_to_entity
     out = (
         triples.join(
             s2e.withColumnRenamed("surface", "subj_surface").withColumnRenamed(

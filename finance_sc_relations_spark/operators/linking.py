@@ -15,10 +15,11 @@ Spark realization:
 - Distinct surface forms FIRST (dedup-before-expensive-op; the reference does
   the same for encoding, spacy_loader.py:262-274). At 10^12 docs the distinct
   mention set is ~10^7 — tiny next to the corpus.
-- The dictionary is a broadcast (F.broadcast) — a hash join with no shuffle;
-  fuzzy tier runs inside one mapInPandas over the distinct surfaces with the
-  dictionary embeddings precomputed per executor and bucketed by prefix2
-  (the blocking trick, kept verbatim from the reference).
+- The dictionary rides a SparkContext broadcast; exact and fuzzy tiers run
+  inside one mapInPandas over the distinct surfaces. The dictionary index
+  (exact map, prefix2 blocks — the blocking trick, kept verbatim from the
+  reference — and their embeddings) is built once per Python worker
+  process and reused by every task that worker runs.
 - Canonicalization of unmatched surfaces: iterative min-label propagation
   (connected components) over alias edges + same-match edges, converging in
   O(log n) joins; each iteration is a broadcast-free shuffle on surface.
@@ -30,6 +31,7 @@ from __future__ import annotations
 
 import re
 import string
+import uuid
 from typing import Iterator, List
 
 import numpy as np
@@ -49,11 +51,11 @@ from ..functions.similarity import HashEmbedder
 
 _PUNCT_RE = f"[{re.escape(string.punctuation)}]"
 
-# Per-executor cache of the built dictionary index (exact map, prefix
+# Per-Python-worker cache of the built dictionary index (exact map, prefix
 # buckets, embeddings, sort keys), keyed by a per-call token: the
-# mapInPandas closure re-runs PER TASK, and rebuilding the index —
-# O(D log D) sort + encoding every form — per task scales with
-# dictionary size, not batch size.
+# mapInPandas function re-runs PER TASK, and rebuilding the index —
+# encoding every form — per task scales with dictionary size, not batch
+# size. Only module-level code may touch it (see _dict_index).
 _DICT_INDEX_CACHE: dict = {}
 
 LINKED_SCHEMA = StructType(
@@ -182,51 +184,62 @@ def link_surfaces(
             "entity_id", "canonical_name", "prefix2", "aliases"
         ).toPandas()
     )
+    bc = spark.sparkContext.broadcast(_dict_rows(dict_pdf))
+    return surfaces.select("surface").distinct().mapInPandas(
+        _surface_linker(bc, uuid.uuid4().hex, cand_thresh, match_thresh, top_k),
+        schema=LINKED_SCHEMA,
+    )
+
+
+def _dict_rows(dict_pdf: pd.DataFrame) -> list:
+    """(entity_id, canonical_name, prefix2, form) per name and alias, sorted
+    by (form, entity_id) once before the broadcast: exact ties resolve to
+    the min entity_id, as in the distributed tier."""
     rows = []
     for rec in dict_pdf.itertuples(index=False):
         rows.append((rec.entity_id, rec.canonical_name, rec.prefix2, rec.canonical_name))
-        for alias in list(rec.aliases or []):
+        # toPandas yields a numpy array (or None): never test its truth
+        for alias in [] if rec.aliases is None else list(rec.aliases):
             rows.append((rec.entity_id, rec.canonical_name, _prefix2(alias), alias))
-    # (form, entity_id) order ON THE DRIVER, once — exact ties (two entities
-    # sharing a form/alias) resolve to the min entity_id, identical to the
-    # distributed tier's sort_values, and executors never re-sort
     rows.sort(key=lambda r: (r[3], r[0]))
-    bc = spark.sparkContext.broadcast(rows)
-    import uuid
+    return rows
 
-    cache_token = uuid.uuid4().hex
+
+def _dict_index(token: str, bc) -> tuple:
+    """(exact, by_prefix, prefix_emb, prefix_sorts) of the broadcast rows,
+    built once per process and token. Module-level so cloudpickle ships it
+    by reference: a nested function would carry a private cache copy."""
+    cached = _DICT_INDEX_CACHE.get(token)
+    if cached is not None:
+        return cached
+    embedder = HashEmbedder()
+    exact = {}
+    by_prefix: dict = {}
+    for entity_id, canonical, prefix, form in bc.value:
+        exact.setdefault(form, (entity_id, canonical))
+        by_prefix.setdefault(prefix, []).append((entity_id, canonical, form))
+    prefix_emb = {
+        p: embedder.encode([f for _, _, f in items])
+        for p, items in by_prefix.items()
+    }
+    # sort-normalized forms per block for the L5 second-level (begins_with)
+    # condition — numpy str arrays so the per-surface eligibility test is
+    # one vectorized startswith per query prefix
+    prefix_sorts = {
+        p: np.array([sort_normalize(f) for _, _, f in items], dtype=np.str_)
+        for p, items in by_prefix.items()
+    }
+    _DICT_INDEX_CACHE.clear()  # one live index per worker
+    _DICT_INDEX_CACHE[token] = (exact, by_prefix, prefix_emb, prefix_sorts)
+    return _DICT_INDEX_CACHE[token]
+
+
+def _surface_linker(bc, token, cand_thresh, match_thresh, top_k):
+    """link_surfaces' mapInPandas function over the broadcast rows bc."""
 
     def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         embedder = HashEmbedder()
-        cached = _DICT_INDEX_CACHE.get(cache_token)
-        if cached is None:
-            exact = {}
-            by_prefix: dict = {}
-            for entity_id, canonical, prefix, form in bc.value:
-                exact.setdefault(form, (entity_id, canonical))
-                by_prefix.setdefault(prefix, []).append(
-                    (entity_id, canonical, form)
-                )
-            prefix_emb = {
-                p: embedder.encode([f for _, _, f in items])
-                for p, items in by_prefix.items()
-            }
-            # sort-normalized forms per block for the L5 second-level
-            # (begins_with) condition — numpy str arrays so the per-surface
-            # eligibility test is one vectorized startswith per query prefix
-            prefix_sorts = {
-                p: np.array(
-                    [sort_normalize(f) for _, _, f in items], dtype=np.str_
-                )
-                for p, items in by_prefix.items()
-            }
-            _DICT_INDEX_CACHE.clear()  # one live index per executor
-            _DICT_INDEX_CACHE[cache_token] = (
-                exact, by_prefix, prefix_emb, prefix_sorts
-            )
-        else:
-            exact, by_prefix, prefix_emb, prefix_sorts = cached
-
+        exact, by_prefix, prefix_emb, prefix_sorts = _dict_index(token, bc)
         for batch in batches:
             out = []
             surfaces = list(batch["surface"])
@@ -266,7 +279,7 @@ def link_surfaces(
                          "candidates"],
             )
 
-    return surfaces.select("surface").distinct().mapInPandas(_map, schema=LINKED_SCHEMA)
+    return _map
 
 
 def _prefix2(name: str, prefix_len: int = 2) -> str:

@@ -348,7 +348,8 @@ def detect_mentions(
     forms: List[str] = []
     for _, row in pdf.iterrows():
         forms.append(row["canonical_name"])
-        forms.extend(list(row["aliases"] or []))
+        # toPandas yields a numpy array (or None): never test its truth
+        forms.extend([] if row["aliases"] is None else list(row["aliases"]))
     bc = spark.sparkContext.broadcast(forms)
 
     fields = [f for f in MENTION_SCHEMA.fields if include_spans or f.name != "spans"]

@@ -264,8 +264,8 @@ def run_pipeline_checkpointed(
 
     Returns the same frames as run_pipeline, read back from the stage
     tables, plus "checkpoint": the manager. Side frames (multi_org, gated,
-    linked_surfaces, alias_edges) are present only when the stage that
-    builds them ran rather than resumed."""
+    alias_edges) are present only when the stage that builds them ran
+    rather than resumed; linked_surfaces is a stage table like any other."""
     cfg = config or PipelineConfig()
     ckpt = CheckpointManager(spark, checkpoint_root, run_id=run_id)
     fp = (

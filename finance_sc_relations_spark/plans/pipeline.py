@@ -172,7 +172,7 @@ def _triples(s, cfg):
     return emit_triples(s["classified"], score_threshold=cfg.score_threshold)
 
 
-def _surface_to_entity(s, cfg):
+def _linked_surfaces(s, cfg):
     triples = s["triples"]
     surfaces = (
         triples.select(triples.subj_surface.alias("surface"))
@@ -180,15 +180,17 @@ def _surface_to_entity(s, cfg):
         .distinct()
     )
     if s["distributed_linking"]:
-        s["linked_surfaces"] = link_surfaces_distributed(
+        return link_surfaces_distributed(
             surfaces, s["company_dict"],
             cand_thresh=cfg.cand_thresh, match_thresh=cfg.match_thresh,
         )
-    else:
-        s["linked_surfaces"] = link_surfaces(
-            surfaces, s["company_pdf"],
-            cand_thresh=cfg.cand_thresh, match_thresh=cfg.match_thresh,
-        )
+    return link_surfaces(
+        surfaces, s["company_pdf"],
+        cand_thresh=cfg.cand_thresh, match_thresh=cfg.match_thresh,
+    )
+
+
+def _surface_to_entity(s, cfg):
     s["alias_edges"] = build_alias_edges(s["mentions"])
     return canonicalize_unmatched(
         s["linked_surfaces"], s["alias_edges"].select("target", "alias")
@@ -196,15 +198,10 @@ def _surface_to_entity(s, cfg):
 
 
 def _linked_triples(s, cfg):
-    # auto-dispatch: broadcast the surface map only below the same row
-    # threshold as the dictionary — at web scale the per-distinct-surface map
-    # is ~10^7+ rows and must go through a plain (AQE) equi-join instead.
-    # The dispatch count materializes the surface map, so the two endpoint
-    # joins read it rather than re-running the linking subtree.
+    # Plain equi-joins on both endpoints: AQE reads the persisted map's
+    # runtime size and broadcasts it when it is small.
     return link_triples(
-        s["triples"],
-        s["surface_to_entity"].select("surface", "entity_id"),
-        max_broadcast_rows=cfg.max_broadcast_dict_rows,
+        s["triples"], s["surface_to_entity"].select("surface", "entity_id")
     )
 
 
@@ -223,20 +220,23 @@ def _vertices(s, cfg):
 # ONE ordered stage list consumed by BOTH runners (the CURATION_GATES
 # pattern of plans/curate.py): (name, builder, source, branch point).
 # source is the stage (or, for sentences, the input) whose rows are this
-# stage's input: the lineage input_rows of the checkpointed runner. A branch point is read by more
-# than one later stage (mentions feeds the pair fan-out and the alias
-# edges; triples feeds surface linking and the endpoint joins; the surface
-# map feeds the dispatch count and both endpoint joins; linked_triples
-# feeds the three graph rollups): without materializing it, Spark
-# recomputes its whole subtree per consumer. run_pipeline persists branch
-# points (persist, NOT localCheckpoint: persist keeps lineage, so a lost
-# executor recomputes its partitions instead of failing the job).
+# stage's input: the lineage input_rows of the checkpointed runner. A branch
+# point is read by more than one later stage or action (mentions feeds the
+# pair fan-out and the alias edges; triples feeds surface linking and the
+# endpoint joins; linked_surfaces feeds canonicalize_unmatched's isEmpty
+# probe and both branches of its union; the surface map feeds both endpoint
+# joins; linked_triples feeds the three graph rollups): without
+# materializing it, Spark recomputes its whole subtree per consumer — for
+# linked_surfaces, the dictionary-matching Python UDF. run_pipeline persists
+# branch points (persist, NOT localCheckpoint: persist keeps lineage, so a
+# lost executor recomputes its partitions instead of failing the job).
 KG_STAGES = [
     ("sentences", _sentences, "pages", False),
     ("mentions", _mentions, "sentences", True),
     ("classified", _classified, "mentions", False),
     ("triples", _triples, "classified", True),
-    ("surface_to_entity", _surface_to_entity, "triples", True),
+    ("linked_surfaces", _linked_surfaces, "triples", True),
+    ("surface_to_entity", _surface_to_entity, "linked_surfaces", True),
     ("linked_triples", _linked_triples, "triples", True),
     ("edges", _edges, "linked_triples", False),
     ("edges_global", _edges_global, "linked_triples", False),

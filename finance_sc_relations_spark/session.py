@@ -42,6 +42,11 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Let AQE coalesce a persisted frame's final shuffle too (default
+        # false keeps every cached frame at shuffle.partitions partitions).
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
         # Prefer shuffled-hash over sort-merge when size conditions are met
         # (guide §3.1/§9): the engine's join build sides are bounded
         # (dictionaries, signature tables, stats rows) while probe sides can

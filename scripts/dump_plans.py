@@ -57,10 +57,10 @@ def main() -> None:
         " auto-broadcasts instead. Dim joins stay broadcast by hint.\n"
         f"\n```\n{plan}```\n"
     )
-    # link_triples above the broadcast threshold: the surface map (one row
-    # per distinct corpus surface, ~10^7+ at web scale) must NOT ride a
-    # broadcast — with the dispatch forced to the large-map tier and
-    # auto-broadcast off, both endpoint joins plan as shuffle joins.
+    # link_triples at scale: the surface map (one row per distinct corpus
+    # surface, ~10^7+ at web scale) carries no broadcast hint — with
+    # auto-broadcast off, both endpoint joins plan as shuffle joins; below
+    # the threshold AQE turns them into broadcast joins at runtime.
     from finance_sc_relations_spark.operators.graph import link_triples
 
     triples = spark.createDataFrame(
@@ -71,16 +71,16 @@ def main() -> None:
     s2e = spark.createDataFrame(
         [("A", "LEI1"), ("B", "LEI2")], "surface string, entity_id string"
     )
-    df = link_triples(triples, s2e, max_broadcast_rows=1)
+    df = link_triples(triples, s2e)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
     out.append(
-        "## link_triples (surface map ABOVE max_broadcast_rows — the 100 TB"
-        " shape)\n\nNo broadcast hint on the surface→entity map: both"
-        " endpoint joins are plain equi-joins (SMJ here with auto-broadcast"
-        " off; AQE picks the strategy at runtime). Below the threshold the"
-        " same code emits the broadcast-hint plan.\n"
+        "## link_triples (autoBroadcastJoinThreshold=-1 — the 100 TB shape)"
+        "\n\nNo broadcast hint on the surface→entity map: both endpoint"
+        " joins are plain equi-joins (SMJ here with auto-broadcast off). With"
+        " auto-broadcast on, AQE reads the materialized map's size at runtime"
+        " and broadcasts a small map.\n"
         f"\n```\n{plan}```\n"
     )
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")

@@ -9,6 +9,13 @@ sys.path.insert(0, str(REPO_ROOT))
 from finance_sc_relations_spark.session import build_session  # noqa: E402
 
 
+def pytest_configure(config):
+    # A deprecated call in package code fails the test that reaches it.
+    config.addinivalue_line(
+        "filterwarnings", "error::DeprecationWarning:finance_sc_relations_spark"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = build_session(app_name="fsr-tests", master="local[4]")

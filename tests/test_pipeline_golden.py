@@ -92,8 +92,8 @@ def test_deterministic_rerun(spark, fixture_corpus):
     n0 = persistent().size()
     out = run_pipeline(spark, pages, cd)
     a = out["linked_triples"].toPandas()
-    assert len(out["cached"]) == 4
-    assert persistent().size() == n0 + 4
+    assert len(out["cached"]) == 5
+    assert persistent().size() == n0 + 5
     for df in out["cached"]:
         df.unpersist()
     assert persistent().size() == n0

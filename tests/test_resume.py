@@ -87,8 +87,9 @@ def test_kill_mid_run_resumes(spark, fixture_paths, tmp_path):
     # full run in B, then delete everything after 'mentions' to simulate
     # the kill
     run_pipeline_checkpointed(spark, pages_path, cd_path, ckpt_b)
-    for stage in ["classified", "triples", "surface_to_entity",
-                  "linked_triples", "edges", "edges_global", "vertices"]:
+    for stage in ["classified", "triples", "linked_surfaces",
+                  "surface_to_entity", "linked_triples", "edges",
+                  "edges_global", "vertices"]:
         shutil.rmtree(ckpt_b / stage)
 
     out = run_pipeline_checkpointed(spark, pages_path, cd_path, ckpt_b)
@@ -102,8 +103,8 @@ def test_lineage_rows_written(spark, fixture_paths, tmp_path):
     lineage = out["checkpoint"].lineage().toPandas()
     stages = set(lineage["stage"])
     assert {"sentences", "mentions", "classified", "triples",
-            "surface_to_entity", "linked_triples", "edges", "edges_global",
-            "vertices"} <= stages
+            "linked_surfaces", "surface_to_entity", "linked_triples", "edges",
+            "edges_global", "vertices"} <= stages
     assert (lineage["output_rows"] >= 0).all()
     assert (lineage["wall_ms"] >= 0).all()
 
