@@ -127,7 +127,7 @@ def linking_probe_surfaces(companies: pd.DataFrame) -> List[str]:
     surfaces: List[str] = []
     for rec in companies.itertuples(index=False):
         surfaces.append(rec.canonical_name)
-        surfaces.extend(list(rec.aliases or []))
+        surfaces.extend([] if rec.aliases is None else list(rec.aliases))
         words = rec.canonical_name.split()
         if len(words) >= 3:
             surfaces.append(" ".join(words[:-1]) + " Holdings")

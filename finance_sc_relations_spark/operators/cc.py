@@ -26,7 +26,7 @@ from __future__ import annotations
 import warnings
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -92,10 +92,12 @@ def cc_min_label(
         jump = frontier.select(
             F.col(key).alias("_jk"), F.col("label").alias("jlabel")
         )
-        # The convergence flag rides INSIDE the checkpointed frame: the
-        # count below then reads materialized rows instead of recomputing
-        # the round's joins a second time (halves per-iteration work).
-        new_labels = (
+        # The convergence flag is counted by an Observation on the
+        # checkpoint's own job: no second job reads the round back. Only
+        # zero vs non-zero is used, so a retried task's over-count cannot
+        # change the result.
+        changed_obs = Observation()
+        labels = (
             labels.join(neighbor_min, key, "left")
             .join(jump, node_of(F.col("label")) == F.col("_jk"), "left")
             .select(
@@ -113,10 +115,11 @@ def cc_min_label(
                     < F.col("label")
                 ).alias("_changed"),
             )
+            .observe(changed_obs, F.count_if("_changed").alias("changed"))
+            .drop("_changed")
             .localCheckpoint(eager=True)
         )
-        changed = new_labels.filter(F.col("_changed")).limit(1).count()
-        labels = new_labels.drop("_changed")
+        changed = changed_obs.get["changed"]
         if changed == 0:
             break
     if changed != 0:

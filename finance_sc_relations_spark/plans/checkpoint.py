@@ -3,39 +3,58 @@
 The Spark form of the reference's job-state machinery: S3 JSON meta files
 holding inputs/success/failed/blocked file-ID sets with a freeze-mutex
 (src/glue/glue_etl.py:213-374) and per-document stage counters in a logs
-table (glue_etl.py:620-647). Here:
+table (glue_etl.py:620-647). `CheckpointManager.run_stage` runs a stage as
+ONE Spark action, a plain unpartitioned parquet write into a temp dir, and
+takes the rest from what that write left on disk:
 
-- every stage's output is written to a stage table (parquet dir; Iceberg
-  when a catalog is configured — see sources/catalog.py), partitioned by
-  a stable bucket of the row key;
-- a `_lineage` table records (run_id, stage, partition_id, input_rows,
-  output_rows, dropped_invalid, wall_ms) per completed stage — the
-  metrics/lineage row the north rule requires;
-- resume = if the stage table exists and `_lineage` marks the stage
-  complete for this input fingerprint, read it back instead of recomputing
-  (the anti-join analog of `set(requested) - set(existed)`,
-  glue_etl.py:652-660). Snapshot isolation comes from writing to a temp
-  suffix and renaming — no freeze-mutex needed.
+- row counts come from the part files' parquet footers, summed per
+  `part-NNNNN-` file name, so a `_lineage` row's `partition_id` is the
+  partition of the task that wrote the rows;
+- the driver appends (run_id, stage, partition_id, input_rows,
+  output_rows, dropped_invalid, wall_ms) rows to the `_lineage` parquet
+  dir as one file;
+- the temp dir is renamed to `<stage>/data`, and `<stage>/_MANIFEST.json`
+  records the input fingerprint, the row count and the frame's schema;
+  stage tables are read back with that schema, so no read infers one.
 
-Granularity note: the reference claims work in blocks of FILES
-(block_job_files, glue_etl.py:313-374); our unit is the STAGE x input-
-fingerprint. Finer-grained (per-partition) resume falls out of Iceberg
-dynamic-partition overwrite when the catalog is enabled: re-running a
-stage only replaces partitions whose inputs changed.
+Resume: a stage whose manifest names the same input fingerprint is read
+back instead of recomputed (the analog of `set(requested) - set(existed)`,
+glue_etl.py:652-660). The unit is the STAGE x input fingerprint, not the
+reference's block of files (glue_etl.py:313-374); the temp-dir rename
+gives snapshot isolation without a freeze-mutex. The manager works on the
+checkpoint root from the driver, so the root must be a filesystem path
+the driver can see.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import time
 import uuid
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
+from ..schemas import LINEAGE
 from .pipeline import KG_STAGES, PipelineConfig, kg_inputs, kg_outputs
+
+
+def footer_rows(path: str | Path) -> dict[Path, int]:
+    """Row count of every parquet file Spark reads at `path` (the file
+    itself, or the files under the dir outside `_`/`.`-prefixed names),
+    from the footers alone: no Spark job, no data pages read."""
+    p = Path(path)
+    files = [p] if p.is_file() else [
+        f for f in sorted(p.rglob("*")) if f.is_file() and not any(
+            part.startswith(("_", ".")) for part in f.relative_to(p).parts)
+    ]
+    return {f: pq.read_metadata(f).num_rows for f in files}
 
 
 class CheckpointManager:
@@ -49,9 +68,6 @@ class CheckpointManager:
 
     # -- lineage ----------------------------------------------------------
 
-    def _lineage_dir(self) -> Path:
-        return self.root / "_lineage"
-
     def _manifest_path(self, stage: str) -> Path:
         return self.root / stage / "_MANIFEST.json"
 
@@ -59,41 +75,45 @@ class CheckpointManager:
                       dropped_invalid: int, wall_ms: int,
                       partition_counts: dict[int, int] | None = None) -> None:
         """One lineage row per output partition. partition_counts maps
-        partition_id -> that partition's actual output row count (the
-        per-partition metrics the north rule requires); input_rows/wall_ms
-        are stage-level and repeated on each row for self-contained reads."""
+        partition_id -> that partition's output row count; input_rows and
+        wall_ms are stage-level and repeated on each row for self-contained
+        reads. Written by the driver as one parquet file, renamed into
+        place so a reader never sees it half-written."""
         parts = partition_counts or {0: output_rows}
         rows = [
-            (self.run_id, stage, int(p), int(input_rows), int(n),
-             int(dropped_invalid), int(wall_ms))
+            dict(run_id=self.run_id, stage=stage, partition_id=p,
+                 input_rows=input_rows, output_rows=n,
+                 dropped_invalid=dropped_invalid, wall_ms=wall_ms)
             for p, n in sorted(parts.items())
         ]
-        df = self.spark.createDataFrame(
-            rows,
-            "run_id string, stage string, partition_id int, input_rows long, "
-            "output_rows long, dropped_invalid long, wall_ms long",
-        )
-        df.write.mode("append").parquet(str(self._lineage_dir()))
+        table = pa.Table.from_pylist(rows, schema=to_arrow_schema(LINEAGE))
+        lineage_dir = self.root / "_lineage"
+        lineage_dir.mkdir(exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        pq.write_table(table, lineage_dir / f".{name}")
+        os.replace(lineage_dir / f".{name}", lineage_dir / name)
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(str(self._lineage_dir()))
+        return self.spark.read.schema(LINEAGE).parquet(str(self.root / "_lineage"))
 
     # -- stage tables -----------------------------------------------------
 
-    def is_complete(self, stage: str, input_fingerprint: str) -> bool:
-        mp = self._manifest_path(stage)
-        if not mp.exists():
-            return False
+    def _manifest(self, stage: str) -> dict:
         try:
-            manifest = json.loads(mp.read_text())
+            return json.loads(self._manifest_path(stage).read_text())
         except (OSError, json.JSONDecodeError):
-            return False
-        return manifest.get("input_fingerprint") == input_fingerprint and manifest.get(
-            "complete", False
-        )
+            return {}
+
+    def is_complete(self, stage: str, input_fingerprint: str) -> bool:
+        # a manifest is written only after its stage's data; one without a
+        # schema predates stored schemas and is recomputed once
+        manifest = self._manifest(stage)
+        return (manifest.get("input_fingerprint") == input_fingerprint
+                and "schema" in manifest)
 
     def read_stage(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(str(self.root / stage / "data"))
+        schema = StructType.fromJson(json.loads(self._manifest(stage)["schema"]))
+        return self.spark.read.schema(schema).parquet(str(self.root / stage / "data"))
 
     def run_stage(
         self,
@@ -124,12 +144,11 @@ class CheckpointManager:
         t0 = time.perf_counter()
         df = df_fn()
         df.write.mode("overwrite").parquet(str(tmp_dir))
-        out = self.spark.read.parquet(str(tmp_dir))
-        # real per-partition output counts (single scan, map-side combine)
-        pc_rows = (
-            out.groupBy(F.spark_partition_id().alias("pid")).count().collect()
-        )
-        partition_counts = {int(r["pid"]): int(r["count"]) for r in pc_rows}
+        # committed part files only: a retried task's rows are counted once
+        partition_counts: dict[int, int] = {}
+        for f, n in footer_rows(tmp_dir).items():
+            pid = int(f.name.split("-")[1])
+            partition_counts[pid] = partition_counts.get(pid, 0) + n
         output_rows = sum(partition_counts.values())
         wall_ms = int((time.perf_counter() - t0) * 1000)
 
@@ -137,25 +156,14 @@ class CheckpointManager:
             shutil.rmtree(data_dir)
         tmp_dir.rename(data_dir)
         self.write_lineage(
-            stage,
-            input_rows if input_rows is not None else -1,
-            output_rows,
-            0,
-            wall_ms,
-            partition_counts,
+            stage, -1 if input_rows is None else input_rows, output_rows, 0,
+            wall_ms, partition_counts,
         )
-        self._manifest_path(stage).write_text(
-            json.dumps(
-                {
-                    "stage": stage,
-                    "run_id": self.run_id,
-                    "input_fingerprint": input_fingerprint,
-                    "output_rows": output_rows,
-                    "wall_ms": wall_ms,
-                    "complete": True,
-                }
-            )
-        )
+        self._manifest_path(stage).write_text(json.dumps(dict(
+            stage=stage, run_id=self.run_id,
+            input_fingerprint=input_fingerprint, output_rows=output_rows,
+            wall_ms=wall_ms, schema=df.schema.json(), complete=True,
+        )))
         return self.read_stage(stage)
 
 
@@ -273,23 +281,15 @@ def run_pipeline_checkpointed(
         f"|{_input_signature(pages_path)}|{_input_signature(company_dict_path)}"
     )
 
-    def _rows(stage: str) -> int:
-        """Completed stage's output_rows from its manifest (feeds the next
-        stage's input_rows lineage column); -1 when unknown."""
-        mp = ckpt._manifest_path(stage)
-        if mp.exists():
-            try:
-                return int(json.loads(mp.read_text()).get("output_rows", -1))
-            except (OSError, json.JSONDecodeError, ValueError):
-                return -1
-        return -1
-
     s = kg_inputs(
         spark.read.parquet(pages_path), spark.read.parquet(company_dict_path),
         cfg,
     )
     for name, build, source, _ in KG_STAGES:
+        # the source stage's manifest count is this stage's input_rows
+        # (-1 for the raw inputs, which have no manifest)
         s[name] = ckpt.run_stage(
-            name, lambda b=build: b(s, cfg), fp, input_rows=_rows(source)
+            name, lambda b=build: b(s, cfg), fp,
+            input_rows=ckpt._manifest(source).get("output_rows", -1),
         )
     return {**kg_outputs(s), "checkpoint": ckpt}

@@ -171,7 +171,7 @@ def run_curation_checkpointed(
     checkpointing instead of costing extra actions.
 
     Returns {"curated", "lineage", "run_id", "manager"}."""
-    from .checkpoint import CheckpointManager, _input_signature
+    from .checkpoint import CheckpointManager, _input_signature, footer_rows
 
     ckpt = CheckpointManager(spark, checkpoint_root, run_id=run_id)
     # EVERY result-affecting parameter folds into the fingerprint —
@@ -197,14 +197,9 @@ def run_curation_checkpointed(
         id_col=id_col, text_col=text_col, minhash_params=minhash_params,
         eval_texts=eval_texts,
     )
-    # Lineage input_rows for the first stage: counting the raw corpus is a
-    # full scan, so it happens ONLY when that stage actually runs — a
-    # fully-resumed rerun pays no input pass at all.
-    n_input = (
-        docs.count()
-        if not ckpt.is_complete("curate_lang", fp)
-        else -1
-    )
+    # Lineage input_rows for the first stage, from the input's parquet
+    # footers: no Spark job, no data read.
+    n_input = sum(footer_rows(docs_path).values())
 
     cur = docs
     for name, gate in CURATION_GATES:

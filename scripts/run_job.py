@@ -8,7 +8,7 @@ Cluster usage (the north-rule shipping form):
         --py-files dist/finance_sc_relations_spark.zip \
         scripts/run_job.py \
         --pages s3://bucket/pages/ --company-dict s3://bucket/dict/ \
-        --output s3://bucket/kg/ --checkpoint s3://bucket/ckpt/
+        --output s3://bucket/kg/ --checkpoint /mnt/shared/ckpt/
 
 Local smoke:
 
@@ -18,7 +18,11 @@ Local smoke:
         --company-dict <dir>/company_dict.parquet --output /tmp/kg_out
 
 With --checkpoint the job runs the resumable pipeline (stage tables +
-_lineage; rerunning after a kill resumes). Without it, the in-memory DAG.
+_lineage; rerunning after a kill resumes). The checkpoint root must be a
+filesystem path the driver can see, not an object-store URI: the driver
+reads the stage tables' footers and writes their manifests and _lineage
+files itself (a shared mount when the executors are remote). Without it,
+the in-memory DAG.
 Both runners walk the same stage list and return the same four outputs,
 written under --output as triples, edges, edges_global and vertices.
 """

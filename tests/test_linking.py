@@ -398,6 +398,23 @@ def test_linking_index_built_once_per_worker():
     )
 
 
+def test_linking_probe_surfaces_accepts_numpy_aliases():
+    """A companies frame read from parquet carries each row's aliases as a
+    numpy array; a row with two aliases must not be truth-tested."""
+    import numpy as np
+
+    from finance_sc_relations_spark.fixtures import linking_probe_surfaces
+
+    companies = pd.DataFrame({
+        "entity_id": ["LEI1", "LEI2"],
+        "canonical_name": ["Sonexa Corporation", "Veltrix Systems"],
+        "aliases": [np.array(["Sonexa", "Sonexa Corp"]), None],
+    })
+    surfaces = linking_probe_surfaces(companies)
+    assert {"Sonexa", "Sonexa Corp", "Sonexa Corporation",
+            "Veltrix Systems"} <= set(surfaces)
+
+
 def test_pagerank_constant_work_per_iteration(spark):
     """The iterative shape: every iteration materializes ONE checkpointed
     distributed pass over constant-depth lineage — no per-iteration driver

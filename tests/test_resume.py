@@ -2,16 +2,22 @@
 (BASELINE.md resumability target; reference analog block_job_files/add_results,
 src/glue/glue_etl.py:313-444)."""
 
+import json
 import shutil
+import time
+import uuid
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 from finance_sc_relations_spark.fixtures import write_fixture_parquet
 from finance_sc_relations_spark.plans.checkpoint import (
     CheckpointManager,
     run_pipeline_checkpointed,
 )
+from finance_sc_relations_spark.plans.pipeline import KG_STAGES
 
 
 @pytest.fixture(scope="module")
@@ -136,6 +142,118 @@ def test_lineage_partition_counts_sum_to_output(spark, fixture_paths, tmp_path):
     triples_rows = lineage[lineage.stage == "triples"]
     assert triples_rows["output_rows"].sum() == out["triples"].count()
     assert triples_rows["partition_id"].nunique() == len(triples_rows)
+
+
+def _jobs(spark, fn) -> int:
+    """Number of Spark jobs fn() launches, from the StatusTracker. The
+    listener bus registers jobs in order, so once a sentinel job run
+    afterwards is visible every job of fn() is too."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group, sentinel = uuid.uuid4().hex, uuid.uuid4().hex
+    for name, action in ((group, fn), (sentinel, sc.parallelize([0], 1).count)):
+        sc.setJobGroup(name, "job-count probe")
+        try:
+            action()
+        finally:
+            sc.setJobGroup(None, None)
+    deadline = time.monotonic() + 60
+    while not tracker.getJobIdsForGroup(sentinel):
+        assert time.monotonic() < deadline, "sentinel job never registered"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def _never():
+    raise AssertionError("recomputed!")
+
+
+def test_run_stage_launches_only_the_write(spark, tmp_path):
+    """Counting rows, appending _lineage and reading the stage back launch
+    no Spark job: run_stage costs what a plain parquet write of the same
+    frame costs, and a resumed run_stage or a lineage read costs none."""
+    def frame():
+        return (
+            spark.range(2000).repartition(4)
+            .withColumn("k", F.col("id") % 7)
+            .groupBy("k")
+            .agg(F.count("*").alias("n"), F.collect_list("id").alias("ids"))
+        )
+
+    plain = _jobs(spark, lambda: frame().write.parquet(str(tmp_path / "plain")))
+    ckpt = CheckpointManager(spark, tmp_path / "ckpt")
+    assert 0 < _jobs(spark, lambda: ckpt.run_stage("s", frame, "fp")) <= plain
+    resumed = CheckpointManager(spark, tmp_path / "ckpt")
+    assert _jobs(spark, lambda: resumed.run_stage("s", _never, "fp")) == 0
+    assert _jobs(spark, resumed.lineage) == 0
+    assert resumed.read_stage("s").count() == 7
+
+
+def test_lineage_counts_sum_the_files_of_one_task(spark, tmp_path):
+    """A task that writes several part files (maxRecordsPerFile) yields one
+    _lineage row whose count is the sum of its files' footers."""
+    ckpt = CheckpointManager(spark, tmp_path / "c")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", 3)
+    try:
+        ckpt.run_stage(
+            "s", lambda: spark.range(20).repartition(2), input_fingerprint="a"
+        )
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    assert len(list((tmp_path / "c" / "s" / "data").glob("part-*"))) > 2
+    lineage = ckpt.lineage().toPandas()
+    assert sorted(lineage["partition_id"]) == [0, 1]
+    assert lineage["output_rows"].sum() == 20
+
+
+def test_manifest_without_schema_recomputes_once(spark, tmp_path):
+    """A manifest that stores no schema marks the stage incomplete: the
+    stage recomputes once, and the rewritten manifest then resumes."""
+    CheckpointManager(spark, tmp_path / "c").run_stage(
+        "s", lambda: spark.range(5).toDF("id"), input_fingerprint="a"
+    )
+    mp = tmp_path / "c" / "s" / "_MANIFEST.json"
+    manifest = json.loads(mp.read_text())
+    del manifest["schema"]
+    mp.write_text(json.dumps(manifest))
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(7).toDF("id")
+
+    for _ in range(2):
+        df = CheckpointManager(spark, tmp_path / "c").run_stage("s", build, "a")
+        assert df.count() == 7
+    assert len(calls) == 1
+
+
+def test_stage_tables_keep_schema_and_footer_counts(spark, fixture_paths,
+                                                    tmp_path):
+    """A stage table read with its stored schema has the schema an inferring
+    read finds, nested array/struct columns included; per stage, _lineage
+    output_rows sum to the manifest's output_rows, which equal the table's
+    row count."""
+    pages_path, cd_path = fixture_paths
+    root = tmp_path / "ckpt"
+    ckpt = run_pipeline_checkpointed(spark, pages_path, cd_path, root)[
+        "checkpoint"
+    ]
+    for stage in ("mentions", "linked_triples"):
+        schema = ckpt.read_stage(stage).schema
+        assert schema == spark.read.parquet(str(root / stage / "data")).schema
+    assert any(
+        isinstance(f.dataType, ArrayType)
+        and isinstance(f.dataType.elementType, StructType)
+        for f in ckpt.read_stage("mentions").schema.fields
+    )
+    lineage = ckpt.lineage().toPandas()
+    for stage, *_ in KG_STAGES:
+        manifest = json.loads((root / stage / "_MANIFEST.json").read_text())
+        lineage_rows = lineage.loc[lineage.stage == stage, "output_rows"].sum()
+        assert lineage_rows == manifest["output_rows"], stage
+        assert manifest["output_rows"] == ckpt.read_stage(stage).count(), stage
 
 
 def test_in_place_input_regeneration_invalidates(spark, tmp_path):
