@@ -155,6 +155,23 @@ def _cands_from_sims(sims, items, cand_thresh, match_thresh, top_k):
     return cands
 
 
+# Similarities closer than this to a block's best score tie with it: about
+# 16 float32 ulps near 1.0, far below the 1e-5-scale margins that separate
+# genuinely different forms.
+_TIE_EPS = 1e-6
+
+
+def _best_form(sims: np.ndarray) -> int:
+    """Index of the best-scoring form: the lowest index whose similarity is
+    within _TIE_EPS of the maximum. Both tiers order a block's forms by
+    (form, entity_id), so a tie links the min (form, entity_id). Forms equal
+    up to a stop suffix ("... Inc" / "... Ltd") tie in real arithmetic, and
+    their float32 cosines differ by an ulp that depends on the BLAS kernel
+    and the batch shape: a raw argmax would pick the link by accident. The
+    reported link_score stays the form's own similarity."""
+    return int(np.flatnonzero(sims >= sims.max() - _TIE_EPS)[0])
+
+
 def link_surfaces(
     surfaces: DataFrame,
     company_dict,
@@ -261,7 +278,7 @@ def _surface_linker(bc, token, cand_thresh, match_thresh, top_k):
                             sims, [items[j] for j in idxs],
                             cand_thresh, match_thresh, top_k,
                         )
-                        b = int(np.argmax(sims))
+                        b = _best_form(sims)
                         if sims[b] >= match_thresh:
                             best_item, best_score = items[idxs[b]], float(sims[b])
                 hit = exact.get(surface)
@@ -380,7 +397,7 @@ def link_surfaces_distributed(
                     sims, [items[j] for j in idxs],
                     cand_thresh, match_thresh, top_k,
                 )
-                b = int(np.argmax(sims))
+                b = _best_form(sims)
                 if sims[b] >= match_thresh:
                     best_item, best_score = items[idxs[b]], float(sims[b])
             hit = exact.get(surface)

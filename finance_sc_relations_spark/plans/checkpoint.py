@@ -273,7 +273,8 @@ def run_pipeline_checkpointed(
     Returns the same frames as run_pipeline, read back from the stage
     tables, plus "checkpoint": the manager. Side frames (multi_org, gated,
     alias_edges) are present only when the stage that builds them ran
-    rather than resumed; linked_surfaces is a stage table like any other."""
+    rather than resumed; linked_surfaces is a stage table like any other.
+    A run that resumes every stage launches no Spark job."""
     cfg = config or PipelineConfig()
     ckpt = CheckpointManager(spark, checkpoint_root, run_id=run_id)
     fp = (
@@ -281,10 +282,12 @@ def run_pipeline_checkpointed(
         f"|{_input_signature(pages_path)}|{_input_signature(company_dict_path)}"
     )
 
-    s = kg_inputs(
-        spark.read.parquet(pages_path), spark.read.parquet(company_dict_path),
-        cfg,
-    )
+    # Read the inputs only when a stage must run: a read infers the parquet
+    # schema with a Spark job, and kg_inputs collects the dictionary.
+    s = {}
+    if not all(ckpt.is_complete(name, fp) for name, *_ in KG_STAGES):
+        s = kg_inputs(spark.read.parquet(pages_path),
+                      spark.read.parquet(company_dict_path), cfg)
     for name, build, source, _ in KG_STAGES:
         # the source stage's manifest count is this stage's input_rows
         # (-1 for the raw inputs, which have no manifest)

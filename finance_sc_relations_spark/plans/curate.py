@@ -186,36 +186,33 @@ def run_curation_checkpointed(
     if eval_texts_path is not None:
         fp += f"|{_input_signature(eval_texts_path)}"
 
-    docs = spark.read.parquet(docs_path)
-    eval_texts = (
-        spark.read.parquet(eval_texts_path)
-        if eval_texts_path is not None
-        else None
-    )
+    gates = [(f"curate_{name}", gate) for name, gate in CURATION_GATES]
+    if eval_texts_path is not None:
+        gates.append(("curate_decontaminate", _gate_decontaminate))
+    # Read the inputs only when a stage must run: a read infers the parquet
+    # schema with a Spark job.
+    docs = eval_texts = n_input = None
+    if not all(ckpt.is_complete(name, fp) for name, _ in gates):
+        docs = spark.read.parquet(docs_path)
+        if eval_texts_path is not None:
+            eval_texts = spark.read.parquet(eval_texts_path)
+        # Lineage input_rows for the first stage, from the input's parquet
+        # footers: no Spark job, no data read.
+        n_input = sum(footer_rows(docs_path).values())
     params = dict(
         lang=lang, min_quality=min_quality, decontaminate_n=decontaminate_n,
         id_col=id_col, text_col=text_col, minhash_params=minhash_params,
         eval_texts=eval_texts,
     )
-    # Lineage input_rows for the first stage, from the input's parquet
-    # footers: no Spark job, no data read.
-    n_input = sum(footer_rows(docs_path).values())
 
     cur = docs
-    for name, gate in CURATION_GATES:
+    for i, (name, gate) in enumerate(gates):
         prev = cur
         cur = ckpt.run_stage(
-            f"curate_{name}",
+            name,
             lambda g=gate, p=prev: g(p, **params),
             fp,
-            input_rows=n_input if name == "lang" else None,
-        )
-    if eval_texts_path is not None:
-        prev = cur
-        cur = ckpt.run_stage(
-            "curate_decontaminate",
-            lambda p=prev: _gate_decontaminate(p, **params),
-            fp,
+            input_rows=n_input if i == 0 else None,
         )
     return {
         "curated": cur,

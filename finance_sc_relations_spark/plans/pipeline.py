@@ -19,6 +19,7 @@ from dataclasses import dataclass
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..operators import extract_fused, re_classifier
 from ..operators.segment import segment_sentences
@@ -94,21 +95,26 @@ def kg_inputs(
     pages: DataFrame, company_dict: DataFrame, cfg: PipelineConfig
 ) -> dict:
     """The DAG's inputs plus the driver-side dictionary both the NER
-    gazetteer and the broadcast linking tier read."""
-    # Decide the linking tier BEFORE collecting: a 10^8-row dictionary must
-    # never ride toPandas (SURVEY §1.1 — the large-dict case stays
-    # distributed; the NER gazetteer is capped instead).
-    distributed = cfg.distributed_linking
+    gazetteer and the broadcast linking tier read.
+
+    One Spark job: the dictionary rides toPandas through a
+    max_broadcast_dict_rows + 1 limit, so the driver never holds more than
+    that many rows (SURVEY §1.1: a 10^8-row dictionary stays distributed).
+    On the auto tier, a full limit means the dictionary is larger than the
+    cap: linking takes the distributed tier and the NER gazetteer keeps the
+    first max_broadcast_dict_rows entries."""
+    cap = cfg.max_broadcast_dict_rows
     dict_cols = company_dict.select(
         "entity_id", "canonical_name", "prefix2", "aliases"
     )
-    if distributed is None:
-        distributed = dict_cols.count() > cfg.max_broadcast_dict_rows
+    distributed = cfg.distributed_linking
     company_pdf = (
-        dict_cols.limit(cfg.max_broadcast_dict_rows)
-        if distributed
-        else dict_cols
+        dict_cols if distributed is False else dict_cols.limit(cap + 1)
     ).toPandas()
+    if distributed is None:
+        distributed = len(company_pdf) > cap
+    if distributed:
+        company_pdf = company_pdf.iloc[:cap]
     return dict(pages=pages, company_dict=company_dict,
                 company_pdf=company_pdf, distributed_linking=distributed)
 
@@ -122,15 +128,19 @@ def kg_inputs(
 
 def _sentences(s, cfg):
     # The input often arrives as a handful of parquet files (or one); the
-    # model stages need >= slot-count partitions to parallelize. On a real
+    # model stages need one partition per slot to parallelize. On a real
     # cluster this is the repartition-before-model-fleet step (reference
-    # analog: instance-fleet sizing, glue_etl.py:548-593). Repartition the
+    # analog: instance-fleet sizing, glue_etl.py:548-593). One partition per
+    # slot, not more: every Python task pays a fixed launch cost (PySpark's
+    # worker setup re-reads each zip on its import path, ~0.1 s per task on
+    # a 4-CPU VM with Python 3.11), and round-robin pages already balance
+    # the slots, so a second wave of tasks buys no balance. Repartition the
     # PAGES, not the sentences: the shuffle moves the same text bytes
     # without the per-sentence url/id duplication, and the regex-heavy
     # clean+segment stage then runs at full slot width.
     pages = s["pages"]
     n_part = (cfg.model_partitions
-              or pages.sparkSession.sparkContext.defaultParallelism * 2)
+              or pages.sparkSession.sparkContext.defaultParallelism)
     return segment_sentences(pages.repartition(n_part), lang=cfg.lang)
 
 
@@ -173,11 +183,11 @@ def _triples(s, cfg):
 
 
 def _linked_surfaces(s, cfg):
-    triples = s["triples"]
-    surfaces = (
-        triples.select(triples.subj_surface.alias("surface"))
-        .unionByName(triples.select(triples.obj_surface.alias("surface")))
-        .distinct()
+    # Both endpoints in one pass over the persisted triples: a union of two
+    # selects would launch one cache-fill job per branch. Both linking
+    # tiers take the distinct surfaces themselves.
+    surfaces = s["triples"].select(
+        F.explode(F.array("subj_surface", "obj_surface")).alias("surface")
     )
     if s["distributed_linking"]:
         return link_surfaces_distributed(
@@ -198,8 +208,8 @@ def _surface_to_entity(s, cfg):
 
 
 def _linked_triples(s, cfg):
-    # Plain equi-joins on both endpoints: AQE reads the persisted map's
-    # runtime size and broadcasts it when it is small.
+    # Plain equi-joins on both endpoints: AQE reads the map's runtime size
+    # and broadcasts it when it is small.
     return link_triples(
         s["triples"], s["surface_to_entity"].select("surface", "entity_id")
     )
@@ -224,19 +234,26 @@ def _vertices(s, cfg):
 # point is read by more than one later stage or action (mentions feeds the
 # pair fan-out and the alias edges; triples feeds surface linking and the
 # endpoint joins; linked_surfaces feeds canonicalize_unmatched's isEmpty
-# probe and both branches of its union; the surface map feeds both endpoint
-# joins; linked_triples feeds the three graph rollups): without
-# materializing it, Spark recomputes its whole subtree per consumer — for
-# linked_surfaces, the dictionary-matching Python UDF. run_pipeline persists
-# branch points (persist, NOT localCheckpoint: persist keeps lineage, so a
-# lost executor recomputes its partitions instead of failing the job).
+# probe and both branches of its union; linked_triples feeds the three
+# graph rollups): without materializing it, Spark recomputes its whole
+# subtree per consumer — for linked_surfaces, the dictionary-matching
+# Python UDF. run_pipeline persists branch points (persist, NOT
+# localCheckpoint: persist keeps lineage, so a lost executor recomputes its
+# partitions instead of failing the job).
+# surface_to_entity is read by both endpoint joins but is not a branch
+# point: its inputs are already materialized (linked_surfaces is persisted,
+# the component labels are eagerly checkpointed), so recomputing it per
+# join is a scan of the surface map. Persisting it would only add work:
+# the first plan that reads a persisted frame fills it with jobs of its
+# own, one per plan branch that reads it (two concurrent 1-task jobs for
+# the two endpoint joins), before the plan's own job runs.
 KG_STAGES = [
     ("sentences", _sentences, "pages", False),
     ("mentions", _mentions, "sentences", True),
     ("classified", _classified, "mentions", False),
     ("triples", _triples, "classified", True),
     ("linked_surfaces", _linked_surfaces, "triples", True),
-    ("surface_to_entity", _surface_to_entity, "linked_surfaces", True),
+    ("surface_to_entity", _surface_to_entity, "linked_surfaces", False),
     ("linked_triples", _linked_triples, "triples", True),
     ("edges", _edges, "linked_triples", False),
     ("edges_global", _edges_global, "linked_triples", False),

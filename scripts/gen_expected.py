@@ -930,7 +930,10 @@ def gen_linked_mentions(
                     continue
                 form, eid, _ = items[eligible[j]]
                 cands.append((eid, s))
-            top = order[0]
+            # best form: the first (min (form, entity_id)) within 1e-6 of
+            # the top score; a raw float32 argmax flips on an ulp
+            top = min(j for j in range(len(eligible))
+                      if sims[j] >= sims[order[0]] - 1e-6)
             if float(sims[top]) >= match_thresh:
                 form, eid, canon = items[eligible[top]]
                 best = (eid, canon, float(sims[top]))

@@ -1,4 +1,6 @@
 import sys
+import time
+import uuid
 from pathlib import Path
 
 import pytest
@@ -22,6 +24,32 @@ def spark():
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """f(fn) -> the number of Spark jobs fn() launches, from the
+    StatusTracker. The listener bus registers jobs in order, so once a
+    sentinel job run afterwards is visible every job of fn() is too."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def count(fn) -> int:
+        group, sentinel = uuid.uuid4().hex, uuid.uuid4().hex
+        for name, action in ((group, fn),
+                             (sentinel, sc.parallelize([0], 1).count)):
+            sc.setJobGroup(name, "job-count probe")
+            try:
+                action()
+            finally:
+                sc.setJobGroup(None, None)
+        deadline = time.monotonic() + 60
+        while not tracker.getJobIdsForGroup(sentinel):
+            assert time.monotonic() < deadline, "sentinel job never registered"
+            time.sleep(0.05)
+        return len(tracker.getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

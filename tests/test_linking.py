@@ -193,16 +193,30 @@ def test_doc_relations_carry_candidate_ids(spark):
 
 def test_distributed_linking_equals_broadcast_tier(spark):
     """The cogroup-by-prefix large-dictionary tier must produce the same
-    links AND candidate lists as the broadcast tier."""
+    links AND candidate lists as the broadcast tier. "<name> Holdings"
+    scores the "<name> Inc" and "<name> Ltd" forms equally in real
+    arithmetic; their float32 cosines differ by an ulp either way, and
+    both tiers must link the min (form, entity_id) of the tie."""
+    import numpy as np
+
     from finance_sc_relations_spark.operators.linking import (
+        _best_form,
         link_surfaces_distributed,
     )
+
+    # a forced one-ulp tie in either order picks the first form; a margin
+    # of a fraction of a basis point still decides
+    top = np.float32(0.9958805)
+    assert _best_form(np.array([top, np.nextafter(top, np.float32(2))])) == 0
+    assert _best_form(np.array([np.nextafter(top, np.float32(0)), top])) == 0
+    assert _best_form(np.array([0.99496215, 0.99499995], np.float32)) == 1
 
     cd = spark.createDataFrame(company_universe())
     surfaces = spark.createDataFrame(
         [("Sonexa",), ("Sonexa Corporation",), ("Veltrix Systems",),
          ("Quantrix Semiconductors Corp",), ("Totally Unknown Ventures LLC",),
-         ("Quantrix",)],
+         ("Quantrix",), ("Rustfield Semiconductors Holdings",),
+         ("Bluecrest Materials Holdings",)],
         "surface string",
     )
 
@@ -221,6 +235,12 @@ def test_distributed_linking_equals_broadcast_tier(spark):
     broadcast_out = norm(link_surfaces(surfaces, cd))
     distributed_out = norm(link_surfaces_distributed(surfaces, cd))
     assert broadcast_out == distributed_out
+    for surface, name in (
+        ("Rustfield Semiconductors Holdings", "Rustfield Semiconductors Inc"),
+        ("Bluecrest Materials Holdings", "Bluecrest Materials Inc"),
+    ):
+        for out in (broadcast_out, distributed_out):
+            assert out[surface][1] == name, (surface, out[surface])
 
 
 def test_pipeline_with_forced_distributed_linking(spark):

@@ -9,7 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from finance_sc_relations_spark.functions.text_clean import rm_special_char
-from finance_sc_relations_spark.plans.pipeline import PipelineConfig, run_pipeline
+from finance_sc_relations_spark.fixtures import company_universe
+from finance_sc_relations_spark.plans.pipeline import (
+    PipelineConfig,
+    kg_inputs,
+    run_pipeline,
+)
 from finance_sc_relations_spark.operators.segment import segment_sentences
 
 
@@ -92,8 +97,8 @@ def test_deterministic_rerun(spark, fixture_corpus):
     n0 = persistent().size()
     out = run_pipeline(spark, pages, cd)
     a = out["linked_triples"].toPandas()
-    assert len(out["cached"]) == 5
-    assert persistent().size() == n0 + 5
+    assert len(out["cached"]) == 4
+    assert persistent().size() == n0 + 4
     for df in out["cached"]:
         df.unpersist()
     assert persistent().size() == n0
@@ -102,6 +107,47 @@ def test_deterministic_rerun(spark, fixture_corpus):
     assert sorted(map(tuple, a[key].values.tolist())) == sorted(
         map(tuple, b[key].values.tolist())
     )
+
+
+def test_one_python_task_per_slot(spark, pipeline_output):
+    """The model stages run one partition, so one Python task, per slot."""
+    out, _ = pipeline_output
+    assert (out["mentions"].rdd.getNumPartitions()
+            == spark.sparkContext.defaultParallelism)
+
+
+def test_kg_inputs_one_bounded_collect(spark, count_jobs):
+    """The auto tier decides and collects the dictionary in one Spark job:
+    a dictionary of n rows takes the broadcast tier at cap n and the
+    distributed tier at cap n - 1, whose gazetteer keeps n - 1 rows."""
+    cd = spark.createDataFrame(company_universe())
+    n = cd.count()
+    for cap, distributed, rows in ((n, False, n), (n - 1, True, n - 1)):
+        s = {}
+        cfg = PipelineConfig(max_broadcast_dict_rows=cap)
+        assert count_jobs(lambda: s.update(kg_inputs(None, cd, cfg))) == 1
+        assert s["distributed_linking"] is distributed
+        assert len(s["company_pdf"]) == rows
+
+
+def test_run_pipeline_job_count(spark, fixture_corpus, count_jobs):
+    """Pins the Spark jobs of one run_pipeline call plus forcing its four
+    outputs on 60 fixture pages. Persisting the surface map again, or a
+    second dictionary job, moves the count."""
+    pages_pdf, _, companies_pdf = fixture_corpus
+    pages = spark.createDataFrame(pages_pdf.head(60))
+    cd = spark.createDataFrame(companies_pdf)
+    out = {}
+
+    def run():
+        out.update(run_pipeline(spark, pages, cd))
+        for name in ("linked_triples", "edges", "edges_global", "vertices"):
+            out[name].write.format("noop").mode("overwrite").save()
+
+    jobs = count_jobs(run)
+    for df in out["cached"]:
+        df.unpersist()
+    assert jobs == 19
 
 
 def test_html_fallback_extraction(spark):

@@ -3,9 +3,8 @@
 src/glue/glue_etl.py:313-444)."""
 
 import json
+import random
 import shutil
-import time
-import uuid
 from pathlib import Path
 
 import pytest
@@ -144,31 +143,11 @@ def test_lineage_partition_counts_sum_to_output(spark, fixture_paths, tmp_path):
     assert triples_rows["partition_id"].nunique() == len(triples_rows)
 
 
-def _jobs(spark, fn) -> int:
-    """Number of Spark jobs fn() launches, from the StatusTracker. The
-    listener bus registers jobs in order, so once a sentinel job run
-    afterwards is visible every job of fn() is too."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group, sentinel = uuid.uuid4().hex, uuid.uuid4().hex
-    for name, action in ((group, fn), (sentinel, sc.parallelize([0], 1).count)):
-        sc.setJobGroup(name, "job-count probe")
-        try:
-            action()
-        finally:
-            sc.setJobGroup(None, None)
-    deadline = time.monotonic() + 60
-    while not tracker.getJobIdsForGroup(sentinel):
-        assert time.monotonic() < deadline, "sentinel job never registered"
-        time.sleep(0.05)
-    return len(tracker.getJobIdsForGroup(group))
-
-
 def _never():
     raise AssertionError("recomputed!")
 
 
-def test_run_stage_launches_only_the_write(spark, tmp_path):
+def test_run_stage_launches_only_the_write(spark, tmp_path, count_jobs):
     """Counting rows, appending _lineage and reading the stage back launch
     no Spark job: run_stage costs what a plain parquet write of the same
     frame costs, and a resumed run_stage or a lineage read costs none."""
@@ -180,13 +159,49 @@ def test_run_stage_launches_only_the_write(spark, tmp_path):
             .agg(F.count("*").alias("n"), F.collect_list("id").alias("ids"))
         )
 
-    plain = _jobs(spark, lambda: frame().write.parquet(str(tmp_path / "plain")))
+    plain = count_jobs(lambda: frame().write.parquet(str(tmp_path / "plain")))
     ckpt = CheckpointManager(spark, tmp_path / "ckpt")
-    assert 0 < _jobs(spark, lambda: ckpt.run_stage("s", frame, "fp")) <= plain
+    assert 0 < count_jobs(lambda: ckpt.run_stage("s", frame, "fp")) <= plain
     resumed = CheckpointManager(spark, tmp_path / "ckpt")
-    assert _jobs(spark, lambda: resumed.run_stage("s", _never, "fp")) == 0
-    assert _jobs(spark, resumed.lineage) == 0
+    assert count_jobs(lambda: resumed.run_stage("s", _never, "fp")) == 0
+    assert count_jobs(resumed.lineage) == 0
     assert resumed.read_stage("s").count() == 7
+
+
+def test_full_resume_launches_no_job(spark, fixture_paths, tmp_path,
+                                     count_jobs):
+    """A checkpointed KG run whose every stage resumes reads neither input
+    (no schema-inference job, no dictionary collect): it launches no Spark
+    job at all."""
+    pages_path, cd_path = fixture_paths
+    root = tmp_path / "ckpt"
+    run_pipeline_checkpointed(spark, pages_path, cd_path, root)
+    out = {}
+    assert count_jobs(lambda: out.update(
+        run_pipeline_checkpointed(spark, pages_path, cd_path, root))) == 0
+    assert out["linked_triples"].count() > 0
+
+
+def test_full_curation_resume_launches_no_job(spark, tmp_path, count_jobs):
+    """The same for the checkpointed curation runner, eval texts included."""
+    from finance_sc_relations_spark.plans.curate import run_curation_checkpointed
+
+    rng = random.Random(7)
+    words = ("the and of a to in is for with on that data spark query table "
+             "join scan filter group value stream window batch row").split()
+    texts = [" ".join(rng.choice(words) for _ in range(80)) for _ in range(40)]
+    docs_path, eval_path = str(tmp_path / "docs"), str(tmp_path / "evals")
+    spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    ).write.parquet(docs_path)
+    spark.createDataFrame([(t,) for t in texts[:3]], "text string").write.parquet(
+        eval_path)
+    root = tmp_path / "ckpt"
+    cold = run_curation_checkpointed(spark, docs_path, root, eval_path)
+    out = {}
+    assert count_jobs(lambda: out.update(run_curation_checkpointed(
+        spark, docs_path, root, eval_path))) == 0
+    assert out["curated"].count() == cold["curated"].count() > 0
 
 
 def test_lineage_counts_sum_the_files_of_one_task(spark, tmp_path):
