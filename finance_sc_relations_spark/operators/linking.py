@@ -161,15 +161,21 @@ def _cands_from_sims(sims, items, cand_thresh, match_thresh, top_k):
 _TIE_EPS = 1e-6
 
 
-def _best_form(sims: np.ndarray) -> int:
-    """Index of the best-scoring form: the lowest index whose similarity is
-    within _TIE_EPS of the maximum. Both tiers order a block's forms by
+def _best_form(sims: np.ndarray, match_thresh: float) -> int | None:
+    """Index of the linked form, or None when no form reaches match_thresh:
+    the lowest index among the forms that reach match_thresh and lie within
+    _TIE_EPS of the maximum. Both tiers order a block's forms by
     (form, entity_id), so a tie links the min (form, entity_id). Forms equal
     up to a stop suffix ("... Inc" / "... Ltd") tie in real arithmetic, and
     their float32 cosines differ by an ulp that depends on the BLAS kernel
-    and the batch shape: a raw argmax would pick the link by accident. The
-    reported link_score stays the form's own similarity."""
-    return int(np.flatnonzero(sims >= sims.max() - _TIE_EPS)[0])
+    and the batch shape: a raw argmax would pick the link by accident. A
+    form just under match_thresh never wins a tie, so a tie that straddles
+    the threshold still links. The reported link_score stays the form's own
+    similarity."""
+    top = sims.max()
+    if top < match_thresh:
+        return None
+    return int(np.flatnonzero(sims >= max(top - _TIE_EPS, match_thresh))[0])
 
 
 def link_surfaces(
@@ -278,8 +284,8 @@ def _surface_linker(bc, token, cand_thresh, match_thresh, top_k):
                             sims, [items[j] for j in idxs],
                             cand_thresh, match_thresh, top_k,
                         )
-                        b = _best_form(sims)
-                        if sims[b] >= match_thresh:
+                        b = _best_form(sims, match_thresh)
+                        if b is not None:
                             best_item, best_score = items[idxs[b]], float(sims[b])
                 hit = exact.get(surface)
                 if hit is not None:
@@ -397,8 +403,8 @@ def link_surfaces_distributed(
                     sims, [items[j] for j in idxs],
                     cand_thresh, match_thresh, top_k,
                 )
-                b = _best_form(sims)
-                if sims[b] >= match_thresh:
+                b = _best_form(sims, match_thresh)
+                if b is not None:
                     best_item, best_score = items[idxs[b]], float(sims[b])
             hit = exact.get(surface)
             if hit is not None:

@@ -111,6 +111,11 @@ class CheckpointManager:
         return (manifest.get("input_fingerprint") == input_fingerprint
                 and "schema" in manifest)
 
+    def all_complete(self, stages, input_fingerprint: str) -> bool:
+        """True when every named stage would resume: a runner reads its
+        inputs only when this is False, so a full resume launches no job."""
+        return all(self.is_complete(s, input_fingerprint) for s in stages)
+
     def read_stage(self, stage: str) -> DataFrame:
         schema = StructType.fromJson(json.loads(self._manifest(stage)["schema"]))
         return self.spark.read.schema(schema).parquet(str(self.root / stage / "data"))
@@ -285,7 +290,7 @@ def run_pipeline_checkpointed(
     # Read the inputs only when a stage must run: a read infers the parquet
     # schema with a Spark job, and kg_inputs collects the dictionary.
     s = {}
-    if not all(ckpt.is_complete(name, fp) for name, *_ in KG_STAGES):
+    if not ckpt.all_complete((name for name, *_ in KG_STAGES), fp):
         s = kg_inputs(spark.read.parquet(pages_path),
                       spark.read.parquet(company_dict_path), cfg)
     for name, build, source, _ in KG_STAGES:

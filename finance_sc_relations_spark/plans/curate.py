@@ -192,7 +192,7 @@ def run_curation_checkpointed(
     # Read the inputs only when a stage must run: a read infers the parquet
     # schema with a Spark job.
     docs = eval_texts = n_input = None
-    if not all(ckpt.is_complete(name, fp) for name, _ in gates):
+    if not ckpt.all_complete((name for name, _ in gates), fp):
         docs = spark.read.parquet(docs_path)
         if eval_texts_path is not None:
             eval_texts = spark.read.parquet(eval_texts_path)

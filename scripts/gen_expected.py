@@ -930,13 +930,14 @@ def gen_linked_mentions(
                     continue
                 form, eid, _ = items[eligible[j]]
                 cands.append((eid, s))
-            # best form: the first (min (form, entity_id)) within 1e-6 of
-            # the top score; a raw float32 argmax flips on an ulp
-            top = min(j for j in range(len(eligible))
-                      if sims[j] >= sims[order[0]] - 1e-6)
-            if float(sims[top]) >= match_thresh:
-                form, eid, canon = items[eligible[top]]
-                best = (eid, canon, float(sims[top]))
+            # best form: the first (min (form, entity_id)) among the forms
+            # that reach match_thresh and lie within 1e-6 of the top score;
+            # a raw float32 argmax flips on an ulp
+            floor = max(float(sims[order[0]]) - 1e-6, match_thresh)
+            linked = [j for j in range(len(eligible)) if sims[j] >= floor]
+            if linked:
+                form, eid, canon = items[eligible[linked[0]]]
+                best = (eid, canon, float(sims[linked[0]]))
         hit = exact.get(surface)
         if hit is not None:
             eid, canon, score = hit[0], hit[1], 1.0

@@ -7,8 +7,9 @@
 Each revision is `git archive`d into its own directory under --scratch, so
 both sides run from the same kind of directory (identical code reads
 measurably slower from a repository root than from a fresh copy). Pair i
-runs `perfbench/run.py --seed <seeds[i]> --trace 0` once per side, base
-first on even pairs and head first on odd ones. Prints each pair's wall_s,
+runs `perfbench/run.py --seed <seeds[i]> --trace 0` once per side, at
+perfbench's own run length, base first on even pairs and head first on odd
+ones. Prints each pair's wall_s,
 each end-to-end metric's median per side, each side's wall_s quartiles and
 the head's win count; the last line is the same summary as JSON.
 """
@@ -25,6 +26,8 @@ import tarfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+# seconds allowed per perfbench run (a kg_crawl run takes about a minute)
+RUN_TIMEOUT_S = 900
 
 
 def checkout(rev: str, dest: Path) -> Path:
@@ -39,13 +42,12 @@ def checkout(rev: str, dest: Path) -> Path:
     return dest
 
 
-def run_once(root: Path, workload: str, seed: int, seconds: float,
-             timeout: float) -> dict:
+def run_once(root: Path, workload: str, seed: int) -> dict:
     """One untraced perfbench run from root; its final JSON line."""
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
-        cwd=root, capture_output=True, text=True, timeout=timeout,
+         "--seed", str(seed), "--trace", "0"],
+        cwd=root, capture_output=True, text=True, timeout=RUN_TIMEOUT_S,
     )
     lines = proc.stdout.strip().splitlines()
     if proc.returncode != 0 or not lines:
@@ -72,9 +74,6 @@ def main(argv=None) -> int:
     ap.add_argument("--workload", default="kg_crawl")
     ap.add_argument("--seeds", required=True, type=int, nargs="+",
                     help="one pair of runs per seed")
-    ap.add_argument("--seconds", type=float, default=10.0)
-    ap.add_argument("--timeout", type=float, default=900.0,
-                    help="seconds allowed per run")
     args = ap.parse_args(argv)
 
     roots = {side: checkout(rev, args.scratch / side)
@@ -83,8 +82,7 @@ def main(argv=None) -> int:
     wins = 0
     for i, seed in enumerate(args.seeds):
         order = ("base", "head") if i % 2 == 0 else ("head", "base")
-        pair = {side: run_once(roots[side], args.workload, seed, args.seconds,
-                               args.timeout)
+        pair = {side: run_once(roots[side], args.workload, seed)
                 for side in order}
         for side in order:
             results[side].append(pair[side])

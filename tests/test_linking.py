@@ -207,9 +207,15 @@ def test_distributed_linking_equals_broadcast_tier(spark):
     # a forced one-ulp tie in either order picks the first form; a margin
     # of a fraction of a basis point still decides
     top = np.float32(0.9958805)
-    assert _best_form(np.array([top, np.nextafter(top, np.float32(2))])) == 0
-    assert _best_form(np.array([np.nextafter(top, np.float32(0)), top])) == 0
-    assert _best_form(np.array([0.99496215, 0.99499995], np.float32)) == 1
+    up, down = np.float32(2), np.float32(0)
+    assert _best_form(np.array([top, np.nextafter(top, up)]), 0.95) == 0
+    assert _best_form(np.array([np.nextafter(top, down), top]), 0.95) == 0
+    assert _best_form(np.array([0.99496215, 0.99499995], np.float32), 0.95) == 1
+    # a tie that straddles the threshold links the form that reaches it;
+    # no form reaching it links none
+    thresh = np.float32(0.95)
+    assert _best_form(np.array([np.nextafter(thresh, down), thresh]), thresh) == 1
+    assert _best_form(np.array([np.nextafter(thresh, down)] * 2), thresh) is None
 
     cd = spark.createDataFrame(company_universe())
     surfaces = spark.createDataFrame(
