@@ -633,8 +633,8 @@ GROUP BY p.p_brand
 
 
 def _q_events_daily(spark, sf_dir):
-    """Windowed event aggregation (the batch twin of the streaming
-    tumbling-window rollup in streaming/windows.py)."""
+    """Windowed event aggregation: event count and value total per day
+    (a one-day tumbling window) and event type."""
     return (
         _t(spark, sf_dir, "events")
         .groupBy(

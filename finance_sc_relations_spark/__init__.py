@@ -12,9 +12,11 @@ file:line in docstrings) as staged Spark DataFrame transforms:
       -> pair generation + [E1]/[E2] tagging
       -> supply-chain sentence gate
       -> relation classification (supplier/customer/other, reverse ensemble)
-      -> LLM-assisted relabel verification
       -> entity linking + corpus-level canonicalization
       -> graph materialize (edge/vertex tables) with lineage + resume
+
+LLM-assisted relabel verification (operators/llm_verify.py) is a
+stand-alone operator over annotated rows, not a stage of this DAG.
 
 All heavy per-row work runs through Arrow-vectorized pandas UDFs
 (mapInPandas / applyInPandas); relational logic stays in Catalyst-planned

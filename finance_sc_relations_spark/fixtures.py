@@ -1,4 +1,4 @@
-"""Deterministic synthetic Common-Crawl-style corpus (FIXTURES.md F1-F6).
+"""Deterministic synthetic Common-Crawl-style corpus (FIXTURES.md F1-F4).
 
 Everything is generated from seed 42 with per-page RNG keyed by
 blake2(url), so any scale regenerates identically — no external data.
@@ -297,81 +297,6 @@ def generate_corpus(n_pages: int, companies: pd.DataFrame | None = None):
                  "subj_surface", "obj_surface"],
     )
     return pages_df, gold_df, companies
-
-
-# ---------------------------------------------------------------------------
-# F5: gold_eval_pairs — RE evaluation set analog of
-# data/raw/gold_eval_ensemble.json (params.yaml:28-37), ~700 rows
-# ---------------------------------------------------------------------------
-
-def generate_eval_pairs(n_rows: int = 700) -> pd.DataFrame:
-    companies = company_universe()
-    rng = random.Random(SEED + 1)
-    rows = []
-    for i in range(n_rows):
-        a = companies.iloc[rng.randrange(len(companies))]
-        b = companies.iloc[rng.randrange(len(companies))]
-        while b.entity_id == a.entity_id:
-            b = companies.iloc[rng.randrange(len(companies))]
-        roll = rng.random()
-        if roll < 0.40:
-            template = SUPPLIER_TEMPLATES[rng.randrange(len(SUPPLIER_TEMPLATES))]
-            sent = template.format(A=a.canonical_name, B=b.canonical_name)
-            # Filer = entity_1 analog; label is the role of entity_2=Company
-            # (create_re_dataset column semantics,
-            #  src/labels_generator/data_aggregation.py:124-130)
-            filer, company, relationship = b.canonical_name, a.canonical_name, "supplier"
-        elif roll < 0.70:
-            template = SUPPLIER_TEMPLATES[rng.randrange(len(SUPPLIER_TEMPLATES))]
-            sent = template.format(A=b.canonical_name, B=a.canonical_name)
-            filer, company, relationship = b.canonical_name, a.canonical_name, "customer"
-        else:
-            template = OTHER_TEMPLATES[rng.randrange(len(OTHER_TEMPLATES))]
-            sent = template.format(A=a.canonical_name, B=b.canonical_name)
-            filer, company, relationship = b.canonical_name, a.canonical_name, "other"
-        rows.append(
-            dict(
-                Sentence=sent,
-                Filer=filer,
-                Company=company,
-                Relationship=relationship,
-                org_groups={a.canonical_name: 0, b.canonical_name: 1},
-            )
-        )
-    return pd.DataFrame(rows)
-
-
-# ---------------------------------------------------------------------------
-# F6: llm_labels — relabel-verification input
-# (fixture shape per test/test_re_dataset_creation.py:19-28)
-# ---------------------------------------------------------------------------
-
-def generate_llm_labels(n_rows: int = 200) -> pd.DataFrame:
-    companies = company_universe()
-    rng = random.Random(SEED + 2)
-    rows = []
-    fuzzers = ["{} Inc", "{} inc", "{}"]
-    for i in range(n_rows):
-        a = companies.iloc[rng.randrange(len(companies))]
-        b = companies.iloc[rng.randrange(len(companies))]
-        while b.entity_id == a.entity_id:
-            b = companies.iloc[rng.randrange(len(companies))]
-        sent = SUPPLIER_TEMPLATES[i % len(SUPPLIER_TEMPLATES)].format(
-            A=a.canonical_name, B=b.canonical_name
-        )
-        a_name = fuzzers[rng.randrange(3)].format(a.canonical_name)
-        relations = [[a_name, "supplier", b.canonical_name]]
-        if rng.random() < 0.2:  # bogus relation that must be dropped
-            relations.append(["MISTAKE CORP", "supplier", "WRONG NAME LLC"])
-        rows.append(
-            dict(
-                sentence=sent,
-                filer=b.canonical_name,
-                relations=relations,
-                org_groups={a.canonical_name: 0, b.canonical_name: 1},
-            )
-        )
-    return pd.DataFrame(rows)
 
 
 # ---------------------------------------------------------------------------

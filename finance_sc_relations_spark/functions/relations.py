@@ -18,12 +18,9 @@ from itertools import chain
 from typing import Iterable, List, Sequence, Tuple
 
 INVERSE_DICT = {"supplier": "customer", "customer": "supplier", "other": "other"}
-MAIN_RELATIONS = ["supplier", "customer"]
 
 # Fixed label order for score vectors everywhere in this engine.
 LABELS = ["supplier", "customer", "other"]
-LABEL2ID = {l: i for i, l in enumerate(LABELS)}
-ID2LABEL = {i: l for i, l in enumerate(LABELS)}
 
 PRED_SUPPLIES_TO = "supplies_to"
 
@@ -39,23 +36,6 @@ def assign_relation(sent: str, relation: str, score: float) -> dict:
     e1 = sent[sent.find(e1_start) + len(e1_start) : sent.rfind(e1_end)]
     e2 = sent[sent.find(e2_start) + len(e2_start) : sent.rfind(e2_end)]
     return {e2: relation, e1: INVERSE_DICT.get(relation, "other"), "score": round(score, 4)}
-
-
-def triple_from_pair(entity1: str, entity2: str, relation: str) -> tuple | None:
-    """Normalize a scored pair into a (subj, supplies_to, obj) triple.
-
-    The predicted ``relation`` is the role of entity2 (assign_relation
-    semantics, infer.py:446-459) and direction is normalized per
-    resort_relation (agg_utils.py:105-110):
-      relation == supplier  -> entity2 supplies entity1
-      relation == customer  -> entity1 supplies entity2
-      other                 -> no edge
-    """
-    if relation == "supplier":
-        return (entity2, PRED_SUPPLIES_TO, entity1)
-    if relation == "customer":
-        return (entity1, PRED_SUPPLIES_TO, entity2)
-    return None
 
 
 def resort_relation(relation_tuple: Tuple[str, str, str], relations_map: dict | None = None) -> list:
@@ -94,22 +74,3 @@ def check_relation_tuples(relations: List[Iterable]) -> bool:
         )
     except TypeError:
         return False
-
-
-def sc_label_from_relations(relation_tuples, main_relations=MAIN_RELATIONS) -> int:
-    """Port of sc_label_from_relations (src/labels_generator/agg_utils.py:9-19)."""
-    if not relation_tuples:
-        return 0
-    for relation_tuple in relation_tuples:
-        if len(relation_tuple) != 3:
-            continue
-        if relation_tuple[1] in main_relations:
-            return 1
-    return 0
-
-
-def get_other_relations(ids2org: dict) -> List[tuple]:
-    """Port of get_other_relations (src/labels_generator/agg_utils.py:37-58)."""
-    comp_keys = sorted(ids2org.keys())
-    other_ids = set(return_possible_pairs(comp_keys))
-    return [(ids2org[pair[0]][0], "other", ids2org[pair[1]][0]) for pair in other_ids]

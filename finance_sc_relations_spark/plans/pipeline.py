@@ -44,13 +44,10 @@ from ..operators.linking import (
 class PipelineConfig:
     lang: str = "en"
     use_sc_gate: bool = True
-    sc_threshold: float = 0.95
     mutate: bool = True
     reverse: bool = True
     num_positions: float = float("inf")
     score_threshold: float = 0.5
-    match_thresh: float = 0.95
-    cand_thresh: float = 0.8
     model_partitions: int | None = None
     salt_buckets: int = 32
     # Optional sc.broadcast(models.serialize_model(...)) — swaps the RE
@@ -159,10 +156,7 @@ def _mentions(s, cfg):
 
 def _classified(s, cfg):
     s["multi_org"] = gate_multi_org(s["mentions"])
-    s["gated"] = (
-        sc_gate(s["multi_org"], threshold=cfg.sc_threshold)
-        if cfg.use_sc_gate else s["multi_org"]
-    )
+    s["gated"] = sc_gate(s["multi_org"]) if cfg.use_sc_gate else s["multi_org"]
     # Only the columns the tagging UDF consumes cross the Arrow boundary.
     scored = extract_fused.tag_and_score(
         s["gated"].select("url", "sentence_id", "sentence", "org_groups"),
@@ -190,14 +184,8 @@ def _linked_surfaces(s, cfg):
         F.explode(F.array("subj_surface", "obj_surface")).alias("surface")
     )
     if s["distributed_linking"]:
-        return link_surfaces_distributed(
-            surfaces, s["company_dict"],
-            cand_thresh=cfg.cand_thresh, match_thresh=cfg.match_thresh,
-        )
-    return link_surfaces(
-        surfaces, s["company_pdf"],
-        cand_thresh=cfg.cand_thresh, match_thresh=cfg.match_thresh,
-    )
+        return link_surfaces_distributed(surfaces, s["company_dict"])
+    return link_surfaces(surfaces, s["company_pdf"])
 
 
 def _surface_to_entity(s, cfg):

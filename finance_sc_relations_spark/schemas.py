@@ -1,4 +1,5 @@
-"""Canonical StructType schemas for every stage table.
+"""StructType schemas that code reads: the pages input, the NER span and
+alias structs, the tagged-pair output and the lineage table.
 
 Nested values are real Spark types (ARRAY/STRUCT/MAP) — never JSON-string
 smuggling as the reference's Glue tables do (src/sagemaker/re_inference.py:91-102,
@@ -8,10 +9,7 @@ src/glue/glue_etl.py:100-133).
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    DoubleType,
-    FloatType,
     IntegerType,
     LongType,
     MapType,
@@ -28,17 +26,6 @@ PAGES = StructType(
         StructField("warc_ts", TimestampType(), True),
         StructField("html", BinaryType(), True),
         StructField("text", StringType(), True),
-        StructField("lang", StringType(), True),
-    ]
-)
-
-# F7: sentences — cleaned text, byte-identical to rm_special_char per url
-SENTENCES = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("sentence_id", StringType(), False),
-        StructField("sent_index", IntegerType(), False),
-        StructField("sentence", StringType(), False),
         StructField("lang", StringType(), True),
     ]
 )
@@ -62,19 +49,6 @@ ALIAS_PAIR = StructType(
     ]
 )
 
-# F7: mentions
-MENTIONS = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("sentence_id", StringType(), False),
-        StructField("sentence", StringType(), False),
-        StructField("spans", ArrayType(SPAN), False),
-        StructField("org_groups", MapType(StringType(), IntegerType()), False),
-        StructField("aliases", ArrayType(ALIAS_PAIR), False),
-        StructField("num_orgs", IntegerType(), False),
-    ]
-)
-
 # F7: pairs — one row per tagged position (reference IR #1, infer.py:252-288)
 PAIRS = StructType(
     [
@@ -86,66 +60,6 @@ PAIRS = StructType(
         StructField("entity1", StringType(), False),
         StructField("entity2", StringType(), False),
         StructField("org_groups", MapType(StringType(), IntegerType()), False),
-    ]
-)
-
-# F7: scored pairs after position-mean + reverse-ensemble
-SCORED_PAIRS = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("sentence_id", StringType(), False),
-        StructField("r_id", StringType(), False),
-        StructField("entity1", StringType(), False),
-        StructField("entity2", StringType(), False),
-        StructField("scores", ArrayType(FloatType()), False),
-        StructField("relation", StringType(), False),
-        StructField("score", FloatType(), False),
-    ]
-)
-
-# Final edge/vertex tables (F3 + FIXTURES.md F7 'edges')
-EDGES = StructType(
-    [
-        StructField("subj_id", StringType(), False),
-        StructField("pred", StringType(), False),
-        StructField("obj_id", StringType(), False),
-        StructField("subj_surface", StringType(), False),
-        StructField("obj_surface", StringType(), False),
-        StructField("url", StringType(), False),
-        StructField("sentence_ids", ArrayType(StringType()), False),
-        StructField("score", DoubleType(), False),
-    ]
-)
-
-VERTICES = StructType(
-    [
-        StructField("entity_id", StringType(), False),
-        StructField("canonical_name", StringType(), False),
-        StructField("aliases", ArrayType(StringType()), True),
-        StructField("first_seen_ts", TimestampType(), True),
-    ]
-)
-
-# F4: broadcast alias dictionary
-COMPANY_DICT = StructType(
-    [
-        StructField("entity_id", StringType(), False),
-        StructField("canonical_name", StringType(), False),
-        StructField("prefix2", StringType(), False),
-        StructField("aliases", ArrayType(StringType()), True),
-    ]
-)
-
-# F3: gold triples oracle
-GOLD_TRIPLES = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("sentence_id", StringType(), False),
-        StructField("subj_id", StringType(), False),
-        StructField("pred", StringType(), False),
-        StructField("obj_id", StringType(), False),
-        StructField("subj_surface", StringType(), False),
-        StructField("obj_surface", StringType(), False),
     ]
 )
 

@@ -1,14 +1,11 @@
-"""Label-algebra semantics (G5-G7, R9) vs the reference's own test values."""
+"""Label-algebra semantics (G5, G6, R9) vs the reference's own test values."""
 
 from finance_sc_relations_spark.functions.relations import (
     INVERSE_DICT,
     assign_relation,
     check_relation_tuples,
-    get_other_relations,
     resort_relation,
     return_possible_pairs,
-    sc_label_from_relations,
-    triple_from_pair,
 )
 
 
@@ -42,30 +39,8 @@ def test_check_relation_tuples_reference_cases():
     assert check_relation_tuples([(1, 2, 3), (4, 5, 6), (7, 8, 9)]) is True
 
 
-def test_sc_label_from_relations():
-    # src/labels_generator/agg_utils.py:9-19
-    assert sc_label_from_relations([("a", "supplier", "b")], ["supplier", "customer"]) == 1
-    assert sc_label_from_relations([("a", "other", "b")], ["supplier", "customer"]) == 0
-    assert sc_label_from_relations([], ["supplier", "customer"]) == 0
-    assert sc_label_from_relations(None, ["supplier", "customer"]) == 0
-
-
-def test_get_other_relations():
-    ids2org = {0: ["Acme"], 1: ["Beta"], 2: ["Gamma"]}
-    out = set(get_other_relations(ids2org))
-    assert out == {("Acme", "other", "Beta"), ("Acme", "other", "Gamma"),
-                   ("Beta", "other", "Gamma")}
-
-
 def test_assign_relation():
     # src/relation_extraction/infer.py:446-459
     sent = "[E1] Acme Corp [/E1] supplies [E2] Beta Inc [/E2]"
     out = assign_relation(sent, "supplier", 0.97)
     assert out == {"Beta Inc": "supplier", "Acme Corp": "customer", "score": 0.97}
-
-
-def test_triple_from_pair_direction_normalization():
-    # supplier = role of entity2 -> entity2 supplies entity1
-    assert triple_from_pair("Acme", "Beta", "supplier") == ("Beta", "supplies_to", "Acme")
-    assert triple_from_pair("Acme", "Beta", "customer") == ("Acme", "supplies_to", "Beta")
-    assert triple_from_pair("Acme", "Beta", "other") is None

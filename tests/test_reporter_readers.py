@@ -1,10 +1,8 @@
-"""Doc-level reporter aggregation (L7-L10) and suffix-dispatched reader (S1)."""
+"""Doc-level reporter aggregation (L7-L10)."""
 
-import pandas as pd
 import pytest
 
 from finance_sc_relations_spark.operators.reporter import aggregate_doc_relations
-from finance_sc_relations_spark.sources.readers import read_frame
 
 
 @pytest.fixture()
@@ -50,21 +48,3 @@ def test_log_sum_top_n_scoring_variant(spark, doc_triples):
     b = out.set_index("company").loc["Borealis Logistics Group"]
     # avg(0.97,0.95) * (1 + log(1.92)) = 0.96 * 1.652...
     assert b["score"] == pytest.approx(0.96 * (1 + __import__("math").log(1.92)), abs=1e-3)
-
-
-def test_read_frame_dispatch(spark, tmp_path):
-    pdf = pd.DataFrame({"a": [1, 2], "b": ["x", "y"]})
-    csv = tmp_path / "t.csv"
-    pdf.to_csv(csv, index=False)
-    tsv = tmp_path / "t.tsv"
-    pdf.to_csv(tsv, sep="\t", index=False)
-    jsonl = tmp_path / "t.jsonl"
-    pdf.to_json(jsonl, orient="records", lines=True)
-    pq = tmp_path / "t.parquet"
-    pdf.to_parquet(pq, index=False)
-    for p in (csv, tsv, jsonl, pq):
-        df = read_frame(spark, str(p))
-        assert df.count() == 2
-        assert set(df.columns) == {"a", "b"}
-    with pytest.raises(ValueError):
-        read_frame(spark, "file.unsupported")  # xlsx is handled now (test_readers.py)
