@@ -887,8 +887,8 @@ WHERE doc_id % 50 != 0 AND doc_id NOT IN (SELECT doc_id FROM contaminated)
 def _q_dedup_clusters(spark, sf_dir):
     """The dedup DECISION layer: MinHash pairs -> connected components ->
     min-id canonical per cluster. Oracle: union-find over the independently
-    computed pair set (scripts/gen_expected.py) — a second algorithm checks
-    the Spark min-label propagation."""
+    computed pair set (scripts/gen_expected.py), which checks the pair
+    mining and the Spark components kernel (operators/cc.py) together."""
     return D.near_dup_clusters(
         _t(spark, sf_dir, "documents"), num_perm=64, bands=16, threshold=0.5
     )

@@ -1,11 +1,9 @@
 """Relation-label algebra: the {supplier, customer, other} label space.
 
 Reference semantics:
-- ``inverse_dict`` defined identically at src/relation_extraction/infer.py:24,
-  preprocessing_funcs.py:24, misc.py:22, trainer.py:23.
-- A predicted label is the role of the [E2]-tagged entity; ``assign_relation``
-  (src/relation_extraction/infer.py:446-459) emits
-  ``{e2: relation, e1: inverse(relation)}``.
+- A predicted label is the role of the [E2]-tagged entity (the reference's
+  ``assign_relation``, src/relation_extraction/infer.py:446-459);
+  ``operators/graph.py::emit_triples`` applies that rule.
 - ``resort_relation`` (src/labels_generator/agg_utils.py:105-110) normalizes
   triple direction: (c1, customer, c2) -> (c2, supplier, c1). We adopt the
   normalized predicate name ``supplies_to``: (subj, supplies_to, obj) means
@@ -17,25 +15,10 @@ from __future__ import annotations
 from itertools import chain
 from typing import Iterable, List, Sequence, Tuple
 
-INVERSE_DICT = {"supplier": "customer", "customer": "supplier", "other": "other"}
-
 # Fixed label order for score vectors everywhere in this engine.
 LABELS = ["supplier", "customer", "other"]
 
 PRED_SUPPLIES_TO = "supplies_to"
-
-
-def assign_relation(sent: str, relation: str, score: float) -> dict:
-    """Port of assign_relation (src/relation_extraction/infer.py:446-459).
-
-    Extracts the [E1]/[E2] surface forms back out of a tagged sentence and
-    returns ``{e2: relation, e1: inverse(relation), 'score': round(score,4)}``.
-    """
-    e1_start, e1_end = "[E1] ", " [/E1]"
-    e2_start, e2_end = "[E2] ", " [/E2]"
-    e1 = sent[sent.find(e1_start) + len(e1_start) : sent.rfind(e1_end)]
-    e2 = sent[sent.find(e2_start) + len(e2_start) : sent.rfind(e2_end)]
-    return {e2: relation, e1: INVERSE_DICT.get(relation, "other"), "score": round(score, 4)}
 
 
 def resort_relation(relation_tuple: Tuple[str, str, str], relations_map: dict | None = None) -> list:

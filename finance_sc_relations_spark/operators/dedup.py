@@ -307,7 +307,9 @@ def minhash_lsh_pairs(
     Jaccard >= threshold.
 
     bands * rows_per_band == num_perm; the S-curve collision probability is
-    1-(1-s^r)^b. Bucket join key = (band index, hash of the band slice).
+    1-(1-s^r)^b. Bucket join key = (band index, hash of the band slice);
+    the band rows are shuffled once on it, and that one shuffle feeds both
+    sides of the join, so the signatures are computed once.
 
     Candidate de-duplication (r6) is a FILTER, not a shuffle: a pair
     meeting in several band buckets is kept only from its FIRST matching
@@ -333,6 +335,13 @@ def minhash_lsh_pairs(
     bands_df = base.select(
         "id", "signature", "_bh", F.posexplode("_bh").alias("band", "bucket")
     )
+    # One shuffle on the bucket key feeds both sides of the self-join: the
+    # two sides share the exchange, so the signature UDF runs once (a join
+    # of the unshuffled band rows runs the UDF once per side). The
+    # shuffle-hash hint keeps AQE from broadcasting one side, which would
+    # cost its own job and ship every band row to every task; each task
+    # hashes its own buckets and streams a hot bucket's pairs.
+    bands_df = bands_df.repartition("band", "bucket")
     a = bands_df.select(
         F.col("id").alias("id_a"), F.col("signature").alias("sig_a"),
         F.col("_bh").alias("_bh_a"), "band", "bucket",
@@ -350,7 +359,7 @@ def minhash_lsh_pairs(
         1,
     )
     cands = (
-        a.join(b, ["band", "bucket"])
+        a.join(b.hint("shuffle_hash"), ["band", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(F.col("band") == first_match)
         .select("id_a", "id_b", "sig_a", "sig_b")
@@ -607,7 +616,7 @@ def embedding_near_dup_pairs_lsh(
     a = sig.withColumnRenamed("id", "id_a")
     b = sig.withColumnRenamed("id", "id_b")
     cand = (
-        a.join(b, ["band", "bucket"])
+        a.join(b.hint("shuffle_hash"), ["band", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
@@ -653,14 +662,13 @@ def near_dup_clusters(
     """The dedup DECISION layer: (doc_id, cluster_id, is_canonical).
 
     Connected components over the near-dup pair graph (default: MinHash+LSH
-    pairs) by min-label propagation WITH pointer jumping: each round a node
-    adopts the smallest of (its label, its neighbors' labels, its label's
-    OWN label). The neighbor step alone moves the minimum one hop per round
-    (O(diameter)); the label-of-label jump doubles the reach, giving true
-    O(log diameter) convergence — a 10^6-node chain converges in ~20 rounds
-    instead of never. Each round is two shuffles on id (neighbor agg +
-    pointer join). If the loop exhausts before converging, a RuntimeWarning
-    is raised instead of silently returning split components.
+    pairs) by the shared kernel operators/cc.py::cc_min_label: union-find
+    per task of at most EDGES_PER_TASK edges, and min-label propagation
+    with pointer jumping (O(log diameter) rounds) only over the links
+    between tasks. A graph that fits one task costs a fixed number of jobs
+    and no propagation round. If the propagation loop exhausts
+    max_iterations before converging, a RuntimeWarning is raised instead
+    of silently returning split components.
 
     cluster_id = min doc_id in the component; is_canonical marks the one
     row per cluster a curation pipeline keeps. Singletons are their own
@@ -695,7 +703,6 @@ def duplicate_spans(
     min_docs: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: str = "disk_only",
 ) -> DataFrame:
     """Exact duplicate-SUBSTRING detection — the span-level dedup tier
     between exact-document dedup and MinHash near-dup (the "Deduplicating
@@ -732,22 +739,12 @@ def duplicate_spans(
          (doc_id, pos) — a single shuffle on doc_id.
     Nothing is quadratic; every stage is a hash shuffle Catalyst plans.
 
-    `materialize` picks the branch-point strategy for the position table
-    (one 16-byte row per corpus token position, consumed by BOTH the
-    dup-fingerprint aggregate and the semi-join leg):
-      - "disk_only" (default): persist(DISK_ONLY). Lineage is kept, so an
-        executor loss recomputes the lost blocks instead of failing the
-        job, and the blocks spill to local disk rather than doubling
-        executor memory — the right trade at the 100-TB target, where the
-        position table is roughly corpus-sized.
-      - "checkpoint": eager localCheckpoint. Fastest for repeated local /
-        interactive reuse (plan truncation, no re-analysis), but blocks
-        are unrecoverable on executor loss and the eager copy roughly
-        doubles the operation's transient storage footprint at scale.
-      - "recompute": no materialization — the window explode runs once per
-        consumer (twice total). Zero storage overhead; choose it when the
-        corpus scan is cheaper than spilling the position table (e.g.
-        highly selective text_col pruning on fast object storage).
+    The position table (one 16-byte row per corpus token position) feeds
+    BOTH the dup-fingerprint aggregate and the semi-join leg, so it is
+    persisted DISK_ONLY: lineage is kept, so an executor loss recomputes
+    the lost blocks instead of failing the job, and the blocks spill to
+    local disk rather than doubling executor memory — the position table
+    is roughly corpus-sized.
     """
     words = F.filter(
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
@@ -787,23 +784,17 @@ def duplicate_spans(
     ).otherwise(F.array().cast("array<struct<pos:int,h1:bigint,h2:bigint>>"))
     # Branch point: the window explode (the dominant cost — one fingerprint
     # pair per corpus token position) feeds BOTH the dup-fingerprint
-    # aggregate and the semi-join leg; materialize once instead of
-    # exploding twice. Only the 16-byte fingerprint survives into the
-    # checkpoint/shuffles.
-    if materialize not in ("disk_only", "checkpoint", "recompute"):
-        raise ValueError(f"unknown materialize mode {materialize!r}")
+    # aggregate and the semi-join leg; persist once instead of exploding
+    # twice. Only the 16-byte fingerprint survives into the persisted
+    # blocks and the shuffles.
+    from pyspark import StorageLevel
+
     w = hashed.select("doc_id", F.explode(wins).alias("w")).select(
         "doc_id",
         F.col("w.pos").alias("pos"),
         F.col("w.h1").alias("h1"),
         F.col("w.h2").alias("h2"),
-    )
-    if materialize == "checkpoint":
-        w = w.localCheckpoint(eager=True)
-    elif materialize == "disk_only":
-        from pyspark import StorageLevel
-
-        w = w.persist(StorageLevel.DISK_ONLY)
+    ).persist(StorageLevel.DISK_ONLY)
     dup_grams = (
         w.groupBy("h1", "h2")
         .agg(F.countDistinct("doc_id").alias("nd"))
@@ -876,7 +867,6 @@ def cut_duplicate_spans(
     min_docs: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: str = "disk_only",
 ) -> DataFrame:
     """Span SURGERY over duplicate_spans: remove every duplicated passage
     from every document's text instead of dropping whole documents — the
@@ -895,8 +885,7 @@ def cut_duplicate_spans(
     higher-order array functions (filter + exists with an outer index
     capture) — no Python in the path."""
     spans = duplicate_spans(
-        docs, n=n, min_docs=min_docs, text_col=text_col, id_col=id_col,
-        materialize=materialize,
+        docs, n=n, min_docs=min_docs, text_col=text_col, id_col=id_col
     )
     per_doc = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans")

@@ -20,11 +20,11 @@ Spark realization:
   (exact map, prefix2 blocks — the blocking trick, kept verbatim from the
   reference — and their embeddings) is built once per Python worker
   process and reused by every task that worker runs.
-- Canonicalization of unmatched surfaces: iterative min-label propagation
-  (connected components) over alias edges + same-match edges, converging in
-  O(log n) joins; each iteration is a broadcast-free shuffle on surface.
-  Hot surfaces (mega-company skew) are handled by AQE skew-join plus the
-  fact that propagation joins are on DISTINCT surfaces, not mention rows.
+- Canonicalization of unmatched surfaces: connected components over the
+  alias edges (operators/cc.py: union-find per task, min-label propagation
+  only over the links between tasks). The kernel works on DISTINCT
+  surfaces, not mention rows, so hot surfaces (mega-company skew) add no
+  rows to it.
 """
 
 from __future__ import annotations
@@ -437,15 +437,14 @@ def canonicalize_unmatched(
 ) -> DataFrame:
     """Assign corpus-level canonical ids to dictionary-unmatched surfaces.
 
-    Connected components by min-label propagation WITH pointer jumping over
-    the undirected surface graph whose edges are (a) page-level alias pairs
-    (alias_edges: target, alias) and (b) normalized-form equality. Each
-    round a surface adopts the least of (its label, its neighbors' labels,
-    the current label OF the surface its label points at) — the jump step
-    doubles the reach per round, so convergence is O(log diameter) joins
-    (neighbor-only propagation is O(diameter): a long alias chain would
-    exhaust the iteration cap and silently split). A RuntimeWarning is
-    raised if the cap is still hit.
+    Connected components (operators/cc.py::cc_min_label) over the
+    undirected surface graph of page-level alias pairs (alias_edges:
+    target, alias): union-find per task of at most EDGES_PER_TASK edges,
+    then min-label propagation with pointer jumping (O(log diameter)
+    rounds) only over the links between tasks; a graph that fits one task
+    runs no round. A RuntimeWarning is raised if max_iterations rounds do
+    not converge. Dictionary-matched surfaces are fixed seeds: each offers
+    its LEI to the components it touches but joins none of them.
     The reference only clusters within a document (reporter.py:283-311);
     corpus-level components are the north-rule extension (SURVEY.md §7.4).
 
@@ -460,37 +459,31 @@ def canonicalize_unmatched(
     )
     unmatched = linked.filter(F.col("entity_id").isNull()).select("surface")
 
-    # label = struct(pri, val, rep). pri 0 = dictionary LEI, pri 1 =
-    # normalized surface form; F.min over the struct orders field-by-field,
-    # so a dictionary id always beats any SF label within a component.
-    # rep = the surface that CARRIES this label — the pointer the jump step
-    # chases; it only tie-breaks among equal (pri, val), so the emitted
-    # entity_id (pri/val) is identical to the 2-field formulation.
+    # label = struct(pri, val). pri 0 = dictionary LEI, pri 1 = normalized
+    # surface form; F.min over the struct orders field-by-field, so a
+    # dictionary id always beats any SF label within a component.
     labels = unmatched.select(
         "surface",
         F.struct(
             F.lit(1).alias("pri"),
             normalized_name_col("surface").alias("val"),
-            F.col("surface").alias("rep"),
         ).alias("label"),
     )
     if alias_edges is not None and unmatched.isEmpty():
-        alias_edges = None  # nothing to propagate — skip the iteration loop
+        alias_edges = None  # nothing to relabel — skip the kernel
     if alias_edges is not None:
         from .cc import cc_min_label
 
-        # seeds = dictionary-matched surfaces with FIXED labels: they
-        # propagate into the graph every round but are never relabeled (a
-        # matched endpoint re-entering as a labeled surface would be
+        # seeds = dictionary-matched surfaces with FIXED labels: they offer
+        # their LEI to every component they touch but are never relabeled
+        # (a matched endpoint re-entering as a labeled surface would be
         # emitted twice — its LEI row plus a propagated SF: row — and fan
         # out every downstream triple join; cc_min_label returns only the
         # relabeled `labels` frame, so that cannot happen).
         seeds = matched.select(
             "surface",
             F.struct(
-                F.lit(0).alias("pri"),
-                F.col("entity_id").alias("val"),
-                F.col("surface").alias("rep"),
+                F.lit(0).alias("pri"), F.col("entity_id").alias("val"),
             ).alias("label"),
         )
         labels = cc_min_label(
@@ -498,7 +491,6 @@ def canonicalize_unmatched(
             labels,
             key="surface",
             seeds=seeds,
-            label_node=lambda c: c.getField("rep"),
             max_iterations=max_iterations,
             warn_name="canonicalize_unmatched",
         )

@@ -1,5 +1,5 @@
-"""StructType schemas that code reads: the pages input, the NER span and
-alias structs, the tagged-pair output and the lineage table.
+"""StructType schemas that code reads: the NER span and alias structs,
+the tagged-pair output and the lineage table.
 
 Nested values are real Spark types (ARRAY/STRUCT/MAP) — never JSON-string
 smuggling as the reference's Glue tables do (src/sagemaker/re_inference.py:91-102,
@@ -9,25 +9,12 @@ src/glue/glue_etl.py:100-133).
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     MapType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
-)
-
-# F1: primary input (BASELINE.json input_hint)
-PAGES = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("warc_ts", TimestampType(), True),
-        StructField("html", BinaryType(), True),
-        StructField("text", StringType(), True),
-        StructField("lang", StringType(), True),
-    ]
 )
 
 # NER span struct per src/language_model/spacy_loader.py:85-97

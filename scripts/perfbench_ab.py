@@ -11,7 +11,19 @@ runs `perfbench/run.py --seed <seeds[i]> --trace 0` once per side, at
 perfbench's own run length, base first on even pairs and head first on odd
 ones. Prints each pair's wall_s,
 each end-to-end metric's median per side, each side's wall_s quartiles and
-the head's win count; the last line is the same summary as JSON.
+the head's win count, then one verdict line per end-to-end metric of
+BENCHMARK.json; the last line is the same summary as JSON.
+
+A verdict applies the metric's `better` direction and `bound` (a share of
+the base median):
+- wins: pairs where the head reads better; ties count for neither side;
+- gain: the head wins at least nine tenths of the pairs and the medians
+  differ, in the head's favour, by more than the base's interquartile
+  range;
+- bound: "worse" when the head median is worse than the base median by
+  more than the bound; "unresolved" when the base's own spread (IQR over
+  median) is wider than the bound, unless every head run reads better
+  than every base run; "within" otherwise.
 """
 
 from __future__ import annotations
@@ -65,6 +77,33 @@ def quartiles(xs: list[float]) -> tuple[float, float]:
     return q1, q3
 
 
+def verdict(base: list[float], head: list[float], better: str,
+            bound: float) -> dict:
+    """Acceptance verdict for one end-to-end metric over paired runs
+    (base[i] and head[i] ran as pair i)."""
+    sign = 1.0 if better == "higher" else -1.0
+    wins = sum(sign * (h - b) > 0 for b, h in zip(base, head))
+    med_base, med_head = statistics.median(base), statistics.median(head)
+    q1, q3 = quartiles(base) if len(base) >= 2 else (med_base, med_base)
+    iqr = q3 - q1
+    gap = sign * (med_head - med_base)  # > 0: the head is better
+    scale = abs(med_base)
+    if min(sign * h for h in head) > max(sign * b for b in base):
+        status = "within"
+    elif iqr > bound * scale:
+        status = "unresolved"
+    elif -gap > bound * scale:
+        status = "worse"
+    else:
+        status = "within"
+    return {
+        "wins": wins, "pairs": len(base),
+        "gain": 10 * wins >= 9 * len(base) and gap > iqr,
+        "median_base": med_base, "median_head": med_head, "base_iqr": iqr,
+        "bound": status,
+    }
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--base", required=True, help="parent revision")
@@ -114,6 +153,18 @@ def main(argv=None) -> int:
         for side, (q1, q3) in summary["wall_s_quartiles"].items():
             print(f"{side} wall_s quartiles {q1:.2f} .. {q3:.2f} (IQR {q3 - q1:.3f})")
     print(f"head wins {wins}/{len(args.seeds)}")
+    spec = json.loads((REPO / "BENCHMARK.json").read_text())
+    summary["verdict"] = {}
+    for metric in spec["end_to_end"]:
+        name = metric["name"]
+        v = verdict([value(r, name) for r in results["base"]],
+                    [value(r, name) for r in results["head"]],
+                    metric["better"], metric["bound"])
+        summary["verdict"][name] = v
+        print(f"verdict {name}: head wins {v['wins']}/{v['pairs']}, "
+              f"gain {'met' if v['gain'] else 'not met'}, "
+              f"bound {v['bound']} (medians {v['median_base']:.4g} -> "
+              f"{v['median_head']:.4g}, base IQR {v['base_iqr']:.3g})")
     print(json.dumps(summary))
     return 0
 

@@ -254,6 +254,26 @@ def test_near_dup_clusters_planted(spark, docs):
     assert (per == 1).all()
 
 
+def test_near_dup_clusters_job_count(spark, docs, count_jobs):
+    """The near-dup decision layer costs a fixed number of jobs: one
+    MinHash pass (the signature UDF appears once in the executed plan)
+    and a connected-components kernel that runs no propagation round
+    while the edges fit one union-find task."""
+    def run():
+        D.near_dup_clusters(docs, threshold=0.95).write.format(
+            "noop").mode("overwrite").save()
+
+    # the MinHash shuffle and edge checkpoint, the union-find task, and
+    # the final relabeling join with its write
+    assert count_jobs(run) <= 8
+    pairs = D.minhash_lsh_pairs(docs, threshold=0.95)
+    pairs.collect()
+    adaptive = pairs._jdf.queryExecution().executedPlan()
+    assert adaptive.toString().startswith("AdaptiveSparkPlan isFinalPlan=true")
+    final = adaptive.executedPlan().toString()
+    assert final.count("MapInPandas") == 1, final
+
+
 def test_near_dup_clusters_transitive_chain(spark):
     """Explicit pair graph: a-b, b-c, plus isolated d — one component with
     min-id canonical, singleton untouched."""
@@ -317,15 +337,18 @@ def test_decontaminate_removes_eval_overlap(spark):
     assert 2 in kept5
 
 
-def test_near_dup_clusters_long_chain_pointer_jumping(spark):
+def test_near_dup_clusters_long_chain_pointer_jumping(spark, monkeypatch):
     """A 30-node chain (the ADVICE r2 repro: one-hop propagation yields 10
     split clusters at the default iteration cap) must converge to ONE
     component with one canonical row — pointer jumping gives O(log n)
-    rounds."""
+    rounds. Two edges per union-find task spread the chain over many
+    partitions, so the merge runs the propagation loop."""
     import warnings
 
+    from finance_sc_relations_spark.operators import cc
     from finance_sc_relations_spark.operators.dedup import near_dup_clusters
 
+    monkeypatch.setattr(cc, "EDGES_PER_TASK", 2)
     n = 30
     docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     pairs = spark.createDataFrame(
@@ -339,11 +362,13 @@ def test_near_dup_clusters_long_chain_pointer_jumping(spark):
     assert sum(r["is_canonical"] for r in out) == 1
 
 
-def test_near_dup_clusters_warns_when_cap_hit(spark):
+def test_near_dup_clusters_warns_when_cap_hit(spark, monkeypatch):
     import pytest
 
+    from finance_sc_relations_spark.operators import cc
     from finance_sc_relations_spark.operators.dedup import near_dup_clusters
 
+    monkeypatch.setattr(cc, "EDGES_PER_TASK", 2)
     n = 40
     docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     pairs = spark.createDataFrame(

@@ -13,7 +13,6 @@ from finance_sc_relations_spark.operators.linking import (
     normalized_name_col,
 )
 from finance_sc_relations_spark.plans.pipeline import PipelineConfig, run_pipeline
-from finance_sc_relations_spark.schemas import PAGES
 
 
 def test_normalize_matches_reference_rules(spark):
@@ -474,16 +473,20 @@ def test_pagerank_constant_work_per_iteration(spark):
     )
 
 
-def test_canonicalize_long_alias_chain_inherits_lei(spark):
+def test_canonicalize_long_alias_chain_inherits_lei(spark, monkeypatch):
     """A 30-surface alias chain anchored by ONE dictionary match at the far
     end: every surface must inherit the LEI within the default iteration cap
-    (one-hop propagation needs 29 rounds; pointer jumping needs ~5)."""
+    (one-hop propagation needs 29 rounds; pointer jumping needs ~5). Two
+    edges per union-find task spread the chain over many partitions, so the
+    merge runs the propagation loop."""
     import warnings
 
+    from finance_sc_relations_spark.operators import cc
     from finance_sc_relations_spark.operators.linking import (
         canonicalize_unmatched,
     )
 
+    monkeypatch.setattr(cc, "EDGES_PER_TASK", 2)
     n = 30
     surfaces = [f"Chain Co {i:02d}" for i in range(n)]
     linked = spark.createDataFrame(

@@ -229,40 +229,3 @@ def test_cut_duplicate_spans_surgery(spark):
     assert out[2] == "totally unique text here"
     # a fully-duplicated doc cuts to the empty string
     assert out[3] == ""
-
-
-def test_duplicate_spans_materialize_modes_agree(spark):
-    """The three branch-point strategies (disk_only persist / eager
-    localCheckpoint / recompute) are pure execution choices: span output
-    and the cut_duplicate_spans surgery must be identical under each."""
-    from finance_sc_relations_spark.operators.dedup import (
-        cut_duplicate_spans,
-        duplicate_spans,
-    )
-
-    uniq = lambda tag, k: " ".join(f"{tag}{i}" for i in range(k))
-    docs = spark.createDataFrame(
-        [
-            (0, f"{uniq('a', 6)} {PASSAGE} {uniq('b', 4)}"),
-            (1, f"{uniq('c', 3)} {PASSAGE}"),
-            (2, "the quick brown fox left " + uniq("d", 10)),
-            (3, f"{PASSAGE} {uniq('e', 7)} {PASSAGE}"),
-        ],
-        "doc_id long, text string",
-    )
-    span_runs, cut_runs = [], []
-    for mode in ("disk_only", "checkpoint", "recompute"):
-        span_runs.append(
-            sorted(map(tuple, duplicate_spans(docs, n=5, materialize=mode).collect()))
-        )
-        cut_runs.append(
-            sorted(map(tuple, cut_duplicate_spans(docs, n=5, materialize=mode).collect()))
-        )
-    assert span_runs[0] == span_runs[1] == span_runs[2]
-    assert len(span_runs[0]) > 0
-    assert cut_runs[0] == cut_runs[1] == cut_runs[2]
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        duplicate_spans(docs, n=5, materialize="nope")
