@@ -23,7 +23,12 @@ the base median):
 - bound: "worse" when the head median is worse than the base median by
   more than the bound; "unresolved" when the base's own spread (IQR over
   median) is wider than the bound, unless every head run reads better
-  than every base run; "within" otherwise.
+  than every base run; "within" otherwise;
+- spread: "too wide" when either side's interquartile range is wider than
+  the bound, both taken as a share of the base median (a faster head
+  reads a larger throughput, so the same relative noise spreads it
+  further), since such runs cannot tell a change from noise; "steady"
+  otherwise.
 """
 
 from __future__ import annotations
@@ -73,6 +78,8 @@ def value(result: dict, metric: str) -> float:
 
 
 def quartiles(xs: list[float]) -> tuple[float, float]:
+    if len(xs) < 2:
+        return xs[0], xs[0]
     q1, _, q3 = statistics.quantiles(xs, n=4, method="inclusive")
     return q1, q3
 
@@ -84,8 +91,7 @@ def verdict(base: list[float], head: list[float], better: str,
     sign = 1.0 if better == "higher" else -1.0
     wins = sum(sign * (h - b) > 0 for b, h in zip(base, head))
     med_base, med_head = statistics.median(base), statistics.median(head)
-    q1, q3 = quartiles(base) if len(base) >= 2 else (med_base, med_base)
-    iqr = q3 - q1
+    iqr, head_iqr = (q3 - q1 for q1, q3 in (quartiles(base), quartiles(head)))
     gap = sign * (med_head - med_base)  # > 0: the head is better
     scale = abs(med_base)
     if min(sign * h for h in head) > max(sign * b for b in base):
@@ -100,7 +106,8 @@ def verdict(base: list[float], head: list[float], better: str,
         "wins": wins, "pairs": len(base),
         "gain": 10 * wins >= 9 * len(base) and gap > iqr,
         "median_base": med_base, "median_head": med_head, "base_iqr": iqr,
-        "bound": status,
+        "head_iqr": head_iqr, "bound": status,
+        "spread": "too wide" if max(iqr, head_iqr) > bound * scale else "steady",
     }
 
 
@@ -163,8 +170,9 @@ def main(argv=None) -> int:
         summary["verdict"][name] = v
         print(f"verdict {name}: head wins {v['wins']}/{v['pairs']}, "
               f"gain {'met' if v['gain'] else 'not met'}, "
-              f"bound {v['bound']} (medians {v['median_base']:.4g} -> "
-              f"{v['median_head']:.4g}, base IQR {v['base_iqr']:.3g})")
+              f"bound {v['bound']}, spread {v['spread']} (medians "
+              f"{v['median_base']:.4g} -> {v['median_head']:.4g}, IQR "
+              f"{v['base_iqr']:.3g} -> {v['head_iqr']:.3g})")
     print(json.dumps(summary))
     return 0
 

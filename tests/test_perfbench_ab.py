@@ -44,4 +44,16 @@ def test_bound_worse_and_unresolved():
     assert ab.verdict(wide, [1.0, 2.0, 1.5, 1.2], "lower", 0.25)["bound"] == "within"
     # a ratio pinned at 1.0 on both sides
     v = ab.verdict([1.0] * 4, [1.0] * 4, "higher", 0.02)
-    assert (v["wins"], v["gain"], v["bound"]) == (0, False, "within")
+    assert (v["wins"], v["gain"], v["bound"], v["spread"]) == (0, False, "within", "steady")
+
+
+def test_spread_judges_both_sides_against_the_base_median():
+    base = [100.0, 104.0, 96.0, 100.0]
+    # every head run beats every base run, but the head's quartiles lie
+    # further apart than 25% of the base median: too wide to tell
+    v = ab.verdict(base, [150.0, 200.0, 100.0, 160.0], "higher", 0.25)
+    assert v["head_iqr"] > 25.0 and v["spread"] == "too wide"
+    v = ab.verdict(base, [150.0, 156.0, 144.0, 150.0], "higher", 0.25)
+    assert v["spread"] == "steady"
+    assert ab.verdict([6.0, 14.0, 8.0, 12.0], [1.0, 2.0, 1.5, 1.2],
+                      "lower", 0.25)["spread"] == "too wide"
