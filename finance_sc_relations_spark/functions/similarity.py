@@ -111,10 +111,3 @@ class HashEmbedder:
             results.append([(corpus[i], float(row[i])) for i in idx if row[i] >= threshold])
         return results
 
-
-def cosine_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Cosine similarity between two row-major embedding matrices
-    (nb_cosine analog, src/language_model/spacy_loader.py:43-50, vectorized)."""
-    an = a / np.maximum(np.linalg.norm(a, axis=1, keepdims=True), 1e-12)
-    bn = b / np.maximum(np.linalg.norm(b, axis=1, keepdims=True), 1e-12)
-    return an @ bn.T

@@ -67,18 +67,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 # N-gram Jaccard (exact set similarity, the verification oracle)
 # ---------------------------------------------------------------------------
 
-def _ngram_col(text_col: str, n: int) -> F.Column:
-    """Distinct word-level n-grams as an array<string> (JVM-side)."""
-    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    ngrams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-    )
-    return F.array_distinct(
-        F.filter(ngrams, lambda g: F.length(g) > 0)
-    )
-
-
 def _word_hash_col(text_col: str) -> F.Column:
     """Per-word 64-bit hashes of the lowercased whitespace tokens — the
     materialization step of the hashed-gram path. Must be bound to a REAL
@@ -96,8 +84,9 @@ def _ngram_hash_from(wh_col: str, n: int) -> F.Column:
     """Distinct word-level n-grams as 64-bit fingerprints (array<long>)
     over a materialized word-hash column (_word_hash_col).
 
-    Same gram identity as _ngram_col (two grams hash equal iff their word
-    sequences are equal, modulo a ~2^-64 xxhash64 collision), but the gram
+    A gram is the space-joined slice of n lowercased whitespace words (a
+    doc shorter than n words is one gram); two grams hash equal iff their
+    word sequences are equal, modulo a ~2^-64 xxhash64 collision. The gram
     STRING is never built: each word is hashed once, and a window's
     fingerprint is xxhash64 over the slice of word hashes — O(len) string
     hashing + O(len*n) long folding instead of O(len*n) string building +

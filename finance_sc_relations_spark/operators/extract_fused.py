@@ -29,7 +29,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.tagging import entity_annotation, mutate_sent
-from .models import resolve_model
+from .models import REPatternModel
 from .pairs import enumerate_pairs
 from .re_classifier import gate_and_score
 
@@ -51,7 +51,6 @@ def tag_and_score(
     mutate: bool = True,
     reverse: bool = True,
     model_broadcast=None,
-    model_path: str | None = None,
     tokenizer_broadcast=None,
     max_length: int | None = None,
     dropped_acc=None,
@@ -60,9 +59,9 @@ def tag_and_score(
     position rows, one Arrow pass. Feed to
     re_classifier.aggregate_positions for R7/R8.
 
-    model_broadcast: optional sc.broadcast(serialize_model(...)) — the
-    transformer drop-in seam (loaded once per executor). model_path: LOCAL
-    checkpoint file alternative (model.pth.tar flow, infer.py:67-133).
+    model_broadcast: optional sc.broadcast(model) of a BatchModel — the
+    transformer drop-in seam (models.py: unpickled once per Python worker);
+    None scores with REPatternModel.
     tokenizer_broadcast / max_length / dropped_acc: token-ID preprocessing
     (same contract as re_classifier.score_pairs): encode each tagged
     sentence with the broadcast WordPieceTokenizer, index [E1]/[E2] in the
@@ -73,7 +72,8 @@ def tag_and_score(
     preprocessing_funcs.py:233-285) via the shared gate_and_score kernel."""
 
     def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = resolve_model(model_broadcast, model_path)
+        model = (model_broadcast.value if model_broadcast is not None
+                 else REPatternModel())
         tok = tokenizer_broadcast.value if tokenizer_broadcast is not None else None
         for batch in batches:
             meta = []  # (url, sentence_id, r_id, entity1, entity2)

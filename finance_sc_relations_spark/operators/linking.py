@@ -18,8 +18,9 @@ Spark realization:
 - The dictionary rides a SparkContext broadcast; exact and fuzzy tiers run
   inside one mapInPandas over the distinct surfaces. The dictionary index
   (exact map, prefix2 blocks — the blocking trick, kept verbatim from the
-  reference — and their embeddings) is built once per Python worker
-  process and reused by every task that worker runs.
+  reference — and their embeddings) is built on first use of the broadcast
+  value, which PySpark keeps once per Python worker, so every task that
+  worker runs reuses it.
 - Canonicalization of unmatched surfaces: connected components over the
   alias edges (operators/cc.py: union-find per task, min-label propagation
   only over the links between tasks). The kernel works on DISTINCT
@@ -31,7 +32,7 @@ from __future__ import annotations
 
 import re
 import string
-import uuid
+from functools import cached_property
 from typing import Iterator, List
 
 import numpy as np
@@ -50,13 +51,6 @@ from pyspark.sql.types import (
 from ..functions.similarity import HashEmbedder
 
 _PUNCT_RE = f"[{re.escape(string.punctuation)}]"
-
-# Per-Python-worker cache of the built dictionary index (exact map, prefix
-# buckets, embeddings, sort keys), keyed by a per-call token: the
-# mapInPandas function re-runs PER TASK, and rebuilding the index —
-# encoding every form — per task scales with dictionary size, not batch
-# size. Only module-level code may touch it (see _dict_index).
-_DICT_INDEX_CACHE: dict = {}
 
 LINKED_SCHEMA = StructType(
     [
@@ -207,9 +201,9 @@ def link_surfaces(
             "entity_id", "canonical_name", "prefix2", "aliases"
         ).toPandas()
     )
-    bc = spark.sparkContext.broadcast(_dict_rows(dict_pdf))
+    bc = spark.sparkContext.broadcast(_DictIndex(_dict_rows(dict_pdf)))
     return surfaces.select("surface").distinct().mapInPandas(
-        _surface_linker(bc, uuid.uuid4().hex, cand_thresh, match_thresh, top_k),
+        _surface_linker(bc, cand_thresh, match_thresh, top_k),
         schema=LINKED_SCHEMA,
     )
 
@@ -228,41 +222,48 @@ def _dict_rows(dict_pdf: pd.DataFrame) -> list:
     return rows
 
 
-def _dict_index(token: str, bc) -> tuple:
-    """(exact, by_prefix, prefix_emb, prefix_sorts) of the broadcast rows,
-    built once per process and token. Module-level so cloudpickle ships it
-    by reference: a nested function would carry a private cache copy."""
-    cached = _DICT_INDEX_CACHE.get(token)
-    if cached is not None:
-        return cached
-    embedder = HashEmbedder()
-    exact = {}
-    by_prefix: dict = {}
-    for entity_id, canonical, prefix, form in bc.value:
-        exact.setdefault(form, (entity_id, canonical))
-        by_prefix.setdefault(prefix, []).append((entity_id, canonical, form))
-    prefix_emb = {
-        p: embedder.encode([f for _, _, f in items])
-        for p, items in by_prefix.items()
-    }
-    # sort-normalized forms per block for the L5 second-level (begins_with)
-    # condition — numpy str arrays so the per-surface eligibility test is
-    # one vectorized startswith per query prefix
-    prefix_sorts = {
-        p: np.array([sort_normalize(f) for _, _, f in items], dtype=np.str_)
-        for p, items in by_prefix.items()
-    }
-    _DICT_INDEX_CACHE.clear()  # one live index per worker
-    _DICT_INDEX_CACHE[token] = (exact, by_prefix, prefix_emb, prefix_sorts)
-    return _DICT_INDEX_CACHE[token]
+class _DictIndex:
+    """The broadcast dictionary rows (_dict_rows) and their index
+    (exact, by_prefix, prefix_emb, prefix_sorts). Pickles only the rows:
+    the index, which encodes every form, is built on first use and kept on
+    the object, so a broadcast _DictIndex builds once per Python worker
+    (PySpark keeps one unpickled value per broadcast there) rather than once
+    per task."""
+
+    def __init__(self, rows: list):
+        self.rows = rows
+
+    def __getstate__(self):
+        return {"rows": self.rows}
+
+    @cached_property
+    def index(self) -> tuple:
+        embedder = HashEmbedder()
+        exact = {}
+        by_prefix: dict = {}
+        for entity_id, canonical, prefix, form in self.rows:
+            exact.setdefault(form, (entity_id, canonical))
+            by_prefix.setdefault(prefix, []).append((entity_id, canonical, form))
+        prefix_emb = {
+            p: embedder.encode([f for _, _, f in items])
+            for p, items in by_prefix.items()
+        }
+        # sort-normalized forms per block for the L5 second-level
+        # (begins_with) condition — numpy str arrays so the per-surface
+        # eligibility test is one vectorized startswith per query prefix
+        prefix_sorts = {
+            p: np.array([sort_normalize(f) for _, _, f in items], dtype=np.str_)
+            for p, items in by_prefix.items()
+        }
+        return exact, by_prefix, prefix_emb, prefix_sorts
 
 
-def _surface_linker(bc, token, cand_thresh, match_thresh, top_k):
-    """link_surfaces' mapInPandas function over the broadcast rows bc."""
+def _surface_linker(bc, cand_thresh, match_thresh, top_k):
+    """link_surfaces' mapInPandas function over the broadcast _DictIndex bc."""
 
     def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         embedder = HashEmbedder()
-        exact, by_prefix, prefix_emb, prefix_sorts = _dict_index(token, bc)
+        exact, by_prefix, prefix_emb, prefix_sorts = bc.value.index
         for batch in batches:
             out = []
             surfaces = list(batch["surface"])

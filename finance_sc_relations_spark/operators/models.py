@@ -14,14 +14,23 @@ Label convention (functions.relations.LABELS): index 0=supplier, 1=customer,
 2=other. A predicted label is the role of the [E2]-tagged entity
 (assign_relation semantics, src/relation_extraction/infer.py:446-459).
 
-On a GPU cluster you replace `REPatternModel.score_batch` with the
-transformer forward of re_trf.py:51-65 loaded once per executor from a
-broadcast checkpoint; nothing else in the DAG changes.
+The model seam: PipelineConfig.re_model_broadcast / sc_model_broadcast hold
+sc.broadcast(model) of any object with this interface, and the scoring UDFs
+read bc.value, falling back to REPatternModel / SCLexicalModel. PySpark
+unpickles a broadcast value once per Python worker and keeps it for the
+broadcast's lifetime, so a model is loaded once per executor process like
+the reference's model_fn (src/sagemaker/re_inference.py:24-35). A model too
+large to broadcast is broadcast as a small object that loads its checkpoint
+file on first use and keeps it on itself (its __getstate__ pickles only the
+path); nothing else in the DAG changes.
+
+A model may also expose score_ids_batch, the token-ID contract that the
+tokenizer broadcasts feed (re_classifier.gate_and_score for RE,
+sc_classifier.sc_scores for SC).
 """
 
 from __future__ import annotations
 
-import itertools
 import re
 from typing import List, Protocol, Sequence
 
@@ -135,232 +144,3 @@ class SCLexicalModel:
             else:
                 out[i] = (self.CONF, 1 - self.CONF)
         return out
-
-
-_RE_MODEL: REPatternModel | None = None
-_SC_MODEL: SCLexicalModel | None = None
-# Monotonic token source for broadcasts lacking _path/_jbroadcast — see
-# model_from_broadcast (id() recycling hazard)
-_BC_TOKEN_COUNTER = itertools.count()
-# Per-executor cache of models deserialized from broadcast checkpoints,
-# keyed by checkpoint id — one load per executor process, shared by every
-# task/batch on that executor (model_fn semantics).
-_BROADCAST_LOADED: dict = {}
-
-
-def serialize_model(model_id: str, model) -> tuple:
-    """Package a BatchModel for sc.broadcast(): (model_id, payload bytes).
-    On a GPU cluster the payload is the checkpoint blob and the deserializer
-    builds the transformer (re_trf.py:51-65); here it's a pickle."""
-    import pickle
-
-    return (model_id, pickle.dumps(model))
-
-
-def model_from_broadcast(bc) -> BatchModel:
-    """Per-executor singleton loaded from a broadcast checkpoint — the Spark
-    analog of SageMaker's once-per-container model_fn
-    (src/sagemaker/re_inference.py:24-35). Deserializes at most once per
-    (executor, broadcast); every Arrow batch reuses the cached instance.
-
-    Cache key = (broadcast id, model_id), NOT model_id alone: two seams
-    sharing a checkpoint id (an SC and an RE model both named "model"), or
-    a retrained model re-broadcast under the same id in a long-lived app,
-    must each load their OWN payload — a model_id-only key would let
-    whichever stage ran first poison the other with the wrong weights.
-    The per-broadcast token is cheap (no payload hashing) and exact:
-    executor-side Broadcast objects carry a unique _path (the spill file of
-    THIS broadcast), driver-side ones a unique JVM broadcast id; Broadcast
-    objects exposing neither (e.g. the encrypted sock_file branch) get a
-    MONOTONIC counter token pinned on the object — never id(), whose
-    values CPython recycles after GC (a recycled id could alias a dead
-    broadcast's cache entry and resurrect stale weights)."""
-    model_id, payload = bc.value
-    token = getattr(bc, "_path", None)
-    if token is None:
-        jb = getattr(bc, "_jbroadcast", None)
-        if jb is not None:
-            token = jb.id()
-        else:
-            token = getattr(bc, "_fscr_cache_token", None)
-            if token is None:
-                token = f"anon{next(_BC_TOKEN_COUNTER)}"
-                try:
-                    bc._fscr_cache_token = token
-                except Exception:  # frozen/slotted object: load uncached
-                    import pickle
-
-                    return pickle.loads(payload)
-    key = (token, model_id)
-    model = _BROADCAST_LOADED.get(key)
-    if model is None:
-        import pickle
-
-        model = pickle.loads(payload)
-        # Bound the per-model_id entries to the 2 most recent: a long-lived
-        # executor must not accumulate every superseded checkpoint, but two
-        # CONCURRENTLY-live broadcasts sharing an id (an SC and an RE head
-        # both named "model") must both stay cached — evicting all siblings
-        # on each miss would re-deserialize per alternating stage batch.
-        same = [k for k in _BROADCAST_LOADED if k[1] == model_id]
-        for k in same[:-1]:  # keep the most recently USED existing sibling
-            del _BROADCAST_LOADED[k]
-        _BROADCAST_LOADED[key] = model
-    else:
-        # true LRU: refresh recency on hit (dict insertion order is the
-        # eviction order above) — without this, three alternating live
-        # broadcasts sharing a model_id would thrash, re-deserializing a
-        # payload on every other stage batch
-        _BROADCAST_LOADED[key] = _BROADCAST_LOADED.pop(key)
-    return model
-
-
-# Per-executor cache of models loaded from checkpoint FILES, keyed by
-# (path, mtime_ns) so a replaced checkpoint reloads on next task.
-_PATH_LOADED: dict = {}
-
-
-def save_model_checkpoint(path, model) -> None:
-    """Write a BatchModel checkpoint file (the model.pth.tar analog). On a
-    GPU cluster this is torch.save of the state dict; here a pickle."""
-    import pickle
-
-    with open(path, "wb") as f:
-        pickle.dump(model, f)
-
-
-def model_from_path(path: str) -> BatchModel:
-    """Per-executor singleton loaded from a LOCAL checkpoint file — the
-    reference's model.pth.tar flow (src/relation_extraction/infer.py:67-133:
-    load_state(net, ... 'model.pth.tar') once, then batch inference). On a
-    real cluster the file is shipped via spark-submit --files or a shared
-    filesystem, and each executor process deserializes it at most once.
-    The sibling of model_from_broadcast for checkpoints too large or too
-    node-local to ride a broadcast."""
-    import os
-    import pickle
-
-    key = (path, os.stat(path).st_mtime_ns)
-    model = _PATH_LOADED.get(key)
-    if model is None:
-        with open(path, "rb") as f:
-            model = pickle.load(f)
-        # evict stale versions of the SAME path: a long-lived executor that
-        # sees periodically-replaced checkpoints must not accumulate every
-        # old model (they can be GBs each for the transformer drop-in)
-        for k in [k for k in _PATH_LOADED if k[0] == path]:
-            del _PATH_LOADED[k]
-        _PATH_LOADED[key] = model
-    return model
-
-
-def resolve_model(model_broadcast=None, model_path: str | None = None):
-    """Scoring-stage model resolution: broadcast checkpoint > file
-    checkpoint > built-in lexical scorer. Runs inside the executor UDF."""
-    if model_broadcast is not None:
-        return model_from_broadcast(model_broadcast)
-    if model_path is not None:
-        return model_from_path(model_path)
-    return get_re_model()
-
-
-def get_re_model() -> REPatternModel:
-    """Per-executor model singleton (the Spark analog of SageMaker's
-    once-per-container model_fn, src/sagemaker/re_inference.py:24-35)."""
-    global _RE_MODEL
-    if _RE_MODEL is None:
-        _RE_MODEL = REPatternModel()
-    return _RE_MODEL
-
-
-def get_sc_model() -> SCLexicalModel:
-    global _SC_MODEL
-    if _SC_MODEL is None:
-        _SC_MODEL = SCLexicalModel()
-    return _SC_MODEL
-
-
-class MarkerProbeModel:
-    """Contract probe for the token-ID scoring seam: a model exposing
-    score_ids_batch(ids, e1_e2_starts, attention_mask) receives the ENCODED
-    form the transformer RE head consumes — a (B, L) id matrix padded to
-    batch max plus its 0/1 attention mask (the Pad_Sequence collate,
-    preprocessing_funcs.py:233-285) and the marker positions re_trf.py:51-65
-    pools at. The probe VALIDATES the padding contract on every call
-    (rectangular shapes, mask is 1s-then-0s per row, every masked-off cell
-    holds the single pad id, markers sit inside the unmasked span) and
-    echoes sup=e1_pos, cus=e2_pos, oth=true_length so tests can assert
-    exactly what reached the model; score_batch raises, proving the string
-    path is bypassed when a tokenizer is wired."""
-
-    num_labels = 3
-
-    def score_ids_batch(self, ids, starts, attention_mask=None) -> np.ndarray:
-        ids = np.asarray(ids)
-        assert attention_mask is not None, "padded contract requires a mask"
-        mask = np.asarray(attention_mask)
-        assert ids.shape == mask.shape and ids.ndim == 2, (ids.shape, mask.shape)
-        assert set(np.unique(mask)) <= {0, 1}
-        lengths = mask.sum(axis=1)
-        out = np.zeros((ids.shape[0], 3), dtype=np.float32)
-        for i, st in enumerate(starts):
-            n = int(lengths[i])
-            # mask must be a contiguous prefix of 1s (right padding only)
-            assert mask[i, :n].all() and not mask[i, n:].any(), mask[i]
-            pad_cells = ids[i, n:]
-            assert pad_cells.size == 0 or (pad_cells == pad_cells[0]).all()
-            assert 0 <= st[0] < n and 0 <= st[1] < n, (st, n)
-            out[i] = (st[0], st[1], n)
-        return out
-
-    def score_batch(self, texts: Sequence[str]) -> np.ndarray:
-        raise AssertionError(
-            "MarkerProbeModel.score_batch called — tokenizer path not wired"
-        )
-
-
-class SCProbeModel:
-    """Contract probe for the SC token-ID seam: a binary classifier
-    exposing score_ids_batch(ids, attention_mask) receives the encoded
-    form sec-bert consumes — a (B, max_length) FIXED-WIDTH id matrix
-    (batch_encode_plus padding='max_length',
-    src/sc_classifier/processing/tokenizers.py:14-44) plus its 0/1 mask.
-    Validates the contract on every call and echoes
-    (neg=width, pos=true_length) so tests can assert exactly what reached
-    the model; score_batch raises, proving the string path is bypassed
-    when a tokenizer is wired."""
-
-    num_labels = 2
-
-    def score_ids_batch(self, ids, attention_mask) -> np.ndarray:
-        ids = np.asarray(ids)
-        mask = np.asarray(attention_mask)
-        assert ids.shape == mask.shape and ids.ndim == 2, (ids.shape, mask.shape)
-        assert set(np.unique(mask)) <= {0, 1}
-        out = np.zeros((ids.shape[0], 2), dtype=np.float32)
-        for i in range(ids.shape[0]):
-            n = int(mask[i].sum())
-            assert mask[i, :n].all() and not mask[i, n:].any(), mask[i]
-            pad_cells = ids[i, n:]
-            assert pad_cells.size == 0 or (pad_cells == pad_cells[0]).all()
-            out[i] = (ids.shape[1], n)
-        return out
-
-    def score_batch(self, texts: Sequence[str]) -> np.ndarray:
-        raise AssertionError(
-            "SCProbeModel.score_batch called — tokenizer path not wired"
-        )
-
-
-class ConstantModel:
-    """Contract/debug scorer: one fixed score row for every input. Exists so
-    the broadcast-checkpoint seam (serialize_model/model_from_broadcast) can
-    be exercised end to end with a model that is trivially distinguishable
-    from the default lexical scorers."""
-
-    def __init__(self, scores: Sequence[float]):
-        self.num_labels = len(scores)
-        self._row = np.asarray(scores, dtype=np.float32)
-
-    def score_batch(self, texts: Sequence[str]) -> np.ndarray:
-        return np.tile(self._row, (len(texts), 1))

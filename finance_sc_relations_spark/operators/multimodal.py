@@ -387,17 +387,6 @@ def _decode_and_probe(
     return _decode_stub(payload) / 255.0, {}
 
 
-def _decode_values(payload: bytes, media_type: str, fmt: str | None) -> np.ndarray:
-    """Feature value stream only (single-parse core: _decode_and_probe)."""
-    return _decode_and_probe(payload, media_type, fmt)[0]
-
-
-def _probe_metadata(payload: bytes, media_type: str, fmt: str | None) -> dict:
-    """Payload-parsed metadata probe only (single-parse core:
-    _decode_and_probe)."""
-    return _decode_and_probe(payload, media_type, fmt)[1]
-
-
 # ---------------------------------------------------------------------------
 # Feature extraction
 # ---------------------------------------------------------------------------

@@ -8,10 +8,10 @@ via spacy Matcher rules BRAC/QUOTE/OR (:145-149, 296-339) -> filter_aliases
 This engine replaces the transformer NER with a deterministic two-tier
 detector (no torch/spacy in this container; the stage interface is the
 contract, SURVEY.md §7.7):
-  1. gazetteer tier — a broadcast alias dictionary compiled into one
-     longest-first alternation regex per executor (the broadcast-dictionary
-     analog of the reference's model_fn once-per-container load,
-     src/sagemaker/re_inference.py:24-35);
+  1. gazetteer tier — the alias dictionary rides a broadcast _Gazetteer
+     that compiles one longest-first alternation regex on first use in each
+     Python worker (the broadcast-dictionary analog of the reference's
+     model_fn once-per-container load, src/sagemaker/re_inference.py:24-35);
   2. pattern tier — capitalized token runs ending in a corporate suffix.
 
 Alias pattern matching ports the reference's exact masked-ORG regexes
@@ -27,7 +27,8 @@ output is independent of Arrow batch boundaries.
 
 Scale notes:
 - mapInPandas with Arrow batches; the gazetteer regex is built once per
-  executor from a broadcast (hot path is C-level re engine, not Python).
+  Python worker, on the broadcast value PySpark keeps there (hot path is
+  C-level re engine, not Python).
 - Worst-case pattern-tier scan is linear in sentence length.
 - The num_orgs > 1 gate (src/relation_extraction/infer.py:250-251) runs as a
   Catalyst filter right after this stage, before any pair fan-out.
@@ -38,6 +39,7 @@ from __future__ import annotations
 import re
 import string
 from collections import defaultdict
+from functools import cached_property
 from itertools import chain
 from typing import Dict, Iterator, List, Tuple
 
@@ -57,14 +59,13 @@ from pyspark.sql.types import (
 )
 
 from ..functions.similarity import HashEmbedder
-from ..schemas import ALIAS_PAIR, SPAN
+from ..schemas import ALIAS_PAIR
 
 MENTION_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
         StructField("sentence_id", StringType(), False),
         StructField("sentence", StringType(), False),
-        StructField("spans", ArrayType(SPAN), False),
         StructField("org_groups", MapType(StringType(), IntegerType()), False),
         StructField("aliases", ArrayType(ALIAS_PAIR), False),
         StructField("num_orgs", IntegerType(), False),
@@ -89,32 +90,28 @@ _PUNCT_TABLE = str.maketrans("", "", string.punctuation)
 
 
 class _Gazetteer:
-    """Per-executor compiled gazetteer (broadcast surface forms)."""
+    """Dictionary surface forms and their longest-first alternation regex.
+    Pickles only the forms: the regex is compiled on first use and kept on
+    the object, so a broadcast _Gazetteer compiles once per Python worker
+    (PySpark keeps one unpickled value per broadcast there)."""
 
     def __init__(self, surface_forms: List[str]):
-        forms = sorted(set(f for f in surface_forms if f), key=len, reverse=True)
-        if forms:
-            alt = "|".join(re.escape(f) for f in forms)
-            self.regex = re.compile(r"(?<![\w])(?:" + alt + r")(?![\w])")
-        else:
-            self.regex = None
+        self.forms = sorted(set(f for f in surface_forms if f), key=len, reverse=True)
+
+    def __getstate__(self):
+        return {"forms": self.forms}
+
+    @cached_property
+    def regex(self):
+        if not self.forms:
+            return None
+        alt = "|".join(re.escape(f) for f in self.forms)
+        return re.compile(r"(?<![\w])(?:" + alt + r")(?![\w])")
 
     def find(self, text: str) -> List[Tuple[int, int, str]]:
         if self.regex is None:
             return []
         return [(m.start(), m.end(), m.group(0)) for m in self.regex.finditer(text)]
-
-
-_GAZ_CACHE: dict = {}
-
-
-def _get_gazetteer(key: int, forms: List[str]) -> _Gazetteer:
-    gaz = _GAZ_CACHE.get(key)
-    if gaz is None:
-        gaz = _Gazetteer(forms)
-        _GAZ_CACHE.clear()
-        _GAZ_CACHE[key] = gaz
-    return gaz
 
 
 _EMBEDDER: HashEmbedder | None = None
@@ -312,7 +309,6 @@ def analyze_sentence(sentence: str, gaz: _Gazetteer, embedder: HashEmbedder):
 def detect_mentions(
     sentences: DataFrame,
     company_dict,
-    include_spans: bool = True,
     with_sc: bool = False,
     sc_model_broadcast=None,
     sc_tokenizer_broadcast=None,
@@ -324,15 +320,17 @@ def detect_mentions(
     broadcast (small dim table — the reference's DynamoDB `company` lookup,
     src/relation_extraction/reporter.py:143-187).
 
-    include_spans=False drops the span struct array — by far the widest
-    column — from the output; downstream extraction needs only org_groups.
-    with_sc=True fuses the supply-chain sentence scorer into this same pass,
-    saving a full JVM<->Arrow round trip of every sentence batch (profiling
-    showed Arrow serialization, not Python compute, dominating CPU).
+    The per-mention spans stay inside the UDF: downstream extraction needs
+    only org_groups, and the span struct array would be by far the widest
+    column to cross Arrow. with_sc=True fuses the supply-chain sentence
+    scorer into this same pass, saving a full JVM<->Arrow round trip of
+    every sentence batch (profiling showed Arrow serialization, not Python
+    compute, dominating CPU).
     sc_model_broadcast / sc_tokenizer_broadcast / sc_max_length: the C1-C3
-    drop-in seam, identical to sc_classify's (shared sc_scores kernel —
-    a real sec-bert checkpoint reaches the PRODUCTION fused path with no
-    dataflow change).
+    drop-in seam. sc_model_broadcast is sc.broadcast(model) of a BatchModel
+    (models.py), None scores with SCLexicalModel; sc_classifier.sc_scores
+    tokenizes and scores, so a real sec-bert checkpoint reaches this pass
+    with no dataflow change.
     """
     if sc_tokenizer_broadcast is not None and sc_max_length is None:
         raise ValueError(
@@ -350,9 +348,9 @@ def detect_mentions(
         forms.append(row["canonical_name"])
         # toPandas yields a numpy array (or None): never test its truth
         forms.extend([] if row["aliases"] is None else list(row["aliases"]))
-    bc = spark.sparkContext.broadcast(forms)
+    bc = spark.sparkContext.broadcast(_Gazetteer(forms))
 
-    fields = [f for f in MENTION_SCHEMA.fields if include_spans or f.name != "spans"]
+    fields = list(MENTION_SCHEMA.fields)
     if with_sc:
         fields += [
             StructField("sc_label", IntegerType(), False),
@@ -361,22 +359,24 @@ def detect_mentions(
     schema = StructType(fields)
 
     def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gaz = _get_gazetteer(id(bc.value), bc.value)
+        gaz = bc.value
         embedder = _get_embedder()
         if with_sc:
-            from .sc_classifier import resolve_sc_model, sc_scores
+            from .models import SCLexicalModel
+            from .sc_classifier import sc_scores
 
-            sc_model = resolve_sc_model(sc_model_broadcast)
+            sc_model = (sc_model_broadcast.value
+                        if sc_model_broadcast is not None
+                        else SCLexicalModel())
             sc_tok = (
                 sc_tokenizer_broadcast.value
                 if sc_tokenizer_broadcast is not None
                 else None
             )
         for batch in batches:
-            spans_col, groups_col, aliases_col, num_col = [], [], [], []
+            groups_col, aliases_col, num_col = [], [], []
             for sent in batch["sentence"]:
-                spans, groups, aliases = analyze_sentence(sent, gaz, embedder)
-                spans_col.append(spans)
+                _, groups, aliases = analyze_sentence(sent, gaz, embedder)
                 groups_col.append(groups)
                 aliases_col.append(
                     [dict(target=t, alias=a) for t, a in aliases]
@@ -390,8 +390,6 @@ def detect_mentions(
                 "aliases": aliases_col,
                 "num_orgs": num_col,
             }
-            if include_spans:
-                out["spans"] = spans_col
             if with_sc:
                 scores = sc_scores(
                     sc_model, sc_tok, batch["sentence"].tolist(), sc_max_length
@@ -401,17 +399,6 @@ def detect_mentions(
             yield pd.DataFrame(out)[[f.name for f in schema.fields]]
 
     return sentences.mapInPandas(_map, schema=schema)
-
-
-def create_org_groups(spans: List[dict]) -> Dict[str, int]:
-    """Fallback org_groups from spans when no matcher ran (N9): distinct ORG
-    texts enumerated in first-seen order (src/relation_extraction/
-    misc.py:162-166)."""
-    groups: Dict[str, int] = {}
-    for s in spans:
-        if s.get("label") == "ORG" and s["text"] not in groups:
-            groups[s["text"]] = len(groups)
-    return groups
 
 
 def gate_multi_org(mentions: DataFrame) -> DataFrame:

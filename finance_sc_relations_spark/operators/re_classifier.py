@@ -40,7 +40,7 @@ from pyspark.sql.types import (
 
 from ..functions.relations import LABELS
 from ..functions.tagging import inverse_relations, mutate_sent
-from .models import resolve_model
+from .models import BatchModel, REPatternModel
 
 _SCORED_POSITIONS = StructType(
     [
@@ -56,7 +56,7 @@ _SCORED_POSITIONS = StructType(
 SUP, CUS, OTH = 0, 1, 2  # LABELS order
 
 
-def gate_and_score(model, tok, sents, max_length, reverse, dropped_acc):
+def gate_and_score(model: BatchModel, tok, sents, max_length, reverse, dropped_acc):
     """Shared tokenizer-gate + scoring kernel for BOTH extraction paths
     (fused tag_and_score and unfused score_pairs) — one copy so the
     drop/score contract cannot silently diverge between them.
@@ -133,7 +133,6 @@ def score_pairs(
     reverse: bool = True,
     model_partitions: int | None = None,
     model_broadcast=None,
-    model_path: str | None = None,
     tokenizer_broadcast=None,
     max_length: int | None = None,
     dropped_acc=None,
@@ -148,12 +147,9 @@ def score_pairs(
     model_partitions: repartition before the model stage to balance batch
     sizes across executors (reference analog: instance-fleet sizing,
     src/glue/glue_etl.py:548-593).
-    model_broadcast: optional sc.broadcast(serialize_model(...)) — swaps the
-    default lexical scorer for a checkpoint-loaded BatchModel (the GPU
-    transformer drop-in seam), deserialized once per executor.
-    model_path: optional LOCAL checkpoint file (the model.pth.tar flow,
-    src/relation_extraction/infer.py:67-133) loaded once per executor —
-    ship it with spark-submit --files or a shared filesystem.
+    model_broadcast: optional sc.broadcast(model) — swaps the default
+    lexical scorer for any BatchModel (the GPU transformer drop-in seam,
+    models.py), unpickled once per Python worker.
     tokenizer_broadcast: optional sc.broadcast(WordPieceTokenizer) — enables
     the reference's token-ID preprocessing (re_dataset,
     preprocessing_funcs.py:320-339): each tagged sentence is ENCODED, the
@@ -175,7 +171,8 @@ def score_pairs(
         df = df.repartition(model_partitions)
 
     def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = resolve_model(model_broadcast, model_path)
+        model = (model_broadcast.value if model_broadcast is not None
+                 else REPatternModel())
         tok = tokenizer_broadcast.value if tokenizer_broadcast is not None else None
         for batch in batches:
             if len(batch) == 0:
@@ -261,7 +258,6 @@ def classify_pairs(
     reverse: bool = True,
     model_partitions: int | None = None,
     model_broadcast=None,
-    model_path: str | None = None,
     tokenizer_broadcast=None,
     max_length: int | None = None,
     dropped_acc=None,
@@ -271,7 +267,6 @@ def classify_pairs(
         score_pairs(pairs, mutate=mutate, reverse=reverse,
                     model_partitions=model_partitions,
                     model_broadcast=model_broadcast,
-                    model_path=model_path,
                     tokenizer_broadcast=tokenizer_broadcast,
                     max_length=max_length,
                     dropped_acc=dropped_acc)

@@ -1,4 +1,6 @@
-"""Stage 4: supply-chain sentence gate (C1-C4).
+"""Stage 4: supply-chain sentence gate (C1-C4): the scoring kernel the fused
+NER pass calls (ner.detect_mentions with_sc=True) and the gate over its
+sc_label/sc_score columns.
 
 Reference: binary sec-bert classifier scored in batch
 (src/sc_classifier/trainer.py:512-569), gated in production by
@@ -12,35 +14,19 @@ reference implements manually (SURVEY.md §4 "early selectivity gates").
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import FloatType, IntegerType, StructField, StructType
 
-from .models import get_sc_model, model_from_broadcast
-
-
-def resolve_sc_model(model_broadcast=None):
-    """SC-stage model resolution: broadcast checkpoint > built-in lexical
-    scorer. Runs inside the executor UDF (one load per executor)."""
-    if model_broadcast is not None:
-        return model_from_broadcast(model_broadcast)
-    return get_sc_model()
+from .models import BatchModel
 
 
-def sc_scores(model, tok, sents, max_length):
-    """Shared C1-C3 scoring kernel for BOTH the fused pass
-    (ner.detect_mentions with_sc=True) and the standalone sc_classify —
-    one copy so the tokenize/score contract cannot diverge between them
-    (same discipline as re_classifier.gate_and_score). With a tokenizer
-    and a model exposing score_ids_batch(ids, attention_mask): WordPiece
-    encode truncated to max_length, FIXED-width pad to max_length
-    (batch_encode_plus padding='max_length',
-    src/sc_classifier/processing/tokenizers.py:14-44). Otherwise the
-    string path."""
+def sc_scores(model: BatchModel, tok, sents, max_length):
+    """C1-C3 scoring kernel of the fused NER+SC pass (ner.detect_mentions
+    with_sc=True). With a tokenizer and a model exposing
+    score_ids_batch(ids, attention_mask): WordPiece encode truncated to
+    max_length, FIXED-width pad to max_length (batch_encode_plus
+    padding='max_length', src/sc_classifier/processing/tokenizers.py:14-44).
+    Otherwise the string path."""
     if tok is not None and hasattr(model, "score_ids_batch"):
         if max_length is None:
             # the contract is a FIXED (B, max_length) matrix; None would
@@ -57,61 +43,6 @@ def sc_scores(model, tok, sents, max_length):
         ids, mask = pad_batch(encoded, tok.pad_token_id, width=max_length)
         return model.score_ids_batch(ids, mask)
     return model.score_batch(sents)
-
-
-def sc_classify(
-    mentions: DataFrame,
-    model_broadcast=None,
-    tokenizer_broadcast=None,
-    max_length: int | None = 512,
-) -> DataFrame:
-    """Append (sc_label, sc_score) columns via an Arrow-batched scorer.
-
-    model_broadcast: optional sc.broadcast(serialize_model(...)) — the
-    sec-bert drop-in seam (loaded once per executor, exactly like the RE
-    head's). tokenizer_broadcast: optional broadcast WordPieceTokenizer —
-    enables the reference's C2 preprocessing
-    (src/sc_classifier/processing/tokenizers.py:14-44 batch_encode_plus:
-    truncate to max_length, pad to the FIXED max_length width): sentences
-    are encoded and models exposing score_ids_batch(ids, attention_mask)
-    receive the (B, max_length) id matrix + 0/1 mask; other models keep
-    the string path. No marker indexing or row dropping here — the SC
-    head pools [CLS], so truncation never invalidates a row."""
-    if tokenizer_broadcast is not None and max_length is None:
-        # fail DRIVER-SIDE at plan-build time: raising inside the UDF would
-        # surface as retried task failures at action time (and an empty
-        # input would silently mask the misconfiguration)
-        raise ValueError(
-            "sc_classify: a tokenizer requires max_length (the fixed "
-            "batch_encode_plus width); got None"
-        )
-    schema = StructType(
-        mentions.schema.fields
-        + [
-            StructField("sc_label", IntegerType(), False),
-            StructField("sc_score", FloatType(), False),
-        ]
-    )
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = resolve_sc_model(model_broadcast)
-        tok = (
-            tokenizer_broadcast.value
-            if tokenizer_broadcast is not None
-            else None
-        )
-        for batch in batches:
-            if len(batch) == 0:
-                continue
-            scores = sc_scores(
-                model, tok, batch["sentence"].tolist(), max_length
-            )
-            out = batch.copy()
-            out["sc_label"] = scores.argmax(axis=1).astype("int32")
-            out["sc_score"] = scores.max(axis=1).astype("float32")
-            yield out
-
-    return mentions.mapInPandas(_map, schema=schema)
 
 
 def sc_gate(classified: DataFrame, threshold: float = 0.95) -> DataFrame:

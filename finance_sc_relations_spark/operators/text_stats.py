@@ -149,29 +149,6 @@ def lang_id(
     return docs.select(id_col, text_col).mapInPandas(_map, schema=schema)
 
 
-def corpus_report(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-(source, lang) corpus curation report: doc count, token mass,
-    mean quality, dup ratio (1 - distinct fingerprints / docs) — the rollup
-    a training-data pipeline publishes per ingest slice. One groupBy, all
-    map-side combinable aggregates; at 100 TB this is the cheapest query in
-    the suite (no joins, no UDFs)."""
-    enriched = docs.select(
-        "source",
-        "lang",
-        token_count_col(text_col).alias("n_tokens"),
-        quality_score_col(text_col).alias("quality"),
-        fingerprint_col(text_col).alias("fp"),
-    )
-    return enriched.groupBy("source", "lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.col("n_tokens").cast("long")).alias("total_tokens"),
-        F.round(F.avg("quality"), 4).alias("mean_quality"),
-        F.round(
-            F.lit(1.0) - F.countDistinct("fp") / F.count("*"), 4
-        ).alias("dup_ratio"),
-    )
-
-
 def sample_token_budget(
     docs: DataFrame,
     tokens_per_stratum: int,

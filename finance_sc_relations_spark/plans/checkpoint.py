@@ -198,27 +198,28 @@ def _cfg_signature(cfg) -> str:
     fingerprint. The raw dataclass repr would embed object addresses for
     the broadcast fields (different every process -> a tokenizer- or
     model-carrying run could never resume), so those are replaced by
-    CONTENT keys: the model checkpoint id PLUS payload hash for
-    re_model_broadcast (a retrained model under the same id invalidates), a hash
-    of the tokenizer vocab for re_tokenizer_broadcast, and a constant for
+    CONTENT keys: a hash of the pickled model for the model broadcasts (a
+    retrained model invalidates), a hash of the tokenizer vocab for the
+    tokenizer broadcasts, and a constant for
     the dropped-rows accumulator (its identity does not affect results —
     note that on a resumed run the accumulator only receives counts from
     stages that actually re-execute; historical drop counts live in the
     _lineage table)."""
     import hashlib
+    import pickle
     from dataclasses import fields
 
     parts = []
     for f in fields(cfg):
         v = getattr(cfg, f.name)
         if f.name in ("re_model_broadcast", "sc_model_broadcast"):
-            # key on id AND payload bytes: a retrained model broadcast
-            # under the same id must invalidate, not silently resume
+            # key on the model's pickled bytes: a retrained model must
+            # invalidate, not silently resume
             try:
                 if v is not None:
-                    mid, payload = v.value
-                    ph = hashlib.blake2b(payload, digest_size=8).hexdigest()
-                    v = f"model:{mid}:{ph}"
+                    v = "model:" + hashlib.blake2b(
+                        pickle.dumps(v.value), digest_size=8
+                    ).hexdigest()
             except Exception:
                 # unidentifiable broadcast: never resume against it
                 v = f"opaque:{uuid.uuid4().hex}"
@@ -247,14 +248,6 @@ def _cfg_signature(cfg) -> str:
                 # would let one opaque tokenizer silently resume another's
                 # stages)
                 v = f"opaque:{uuid.uuid4().hex}"
-        elif f.name == "re_model_path":
-            # a retrained checkpoint REWRITTEN TO THE SAME PATH must
-            # invalidate downstream stages, exactly like the broadcast
-            # branch above — fold the file content signature
-            # (relpath|size|mtime_ns, via _input_signature) in with the
-            # path string, never the path alone
-            if v is not None:
-                v = f"path:{v}:{_input_signature(v)}"
         elif f.name == "re_dropped_acc":
             v = None if v is None else "acc"
         parts.append(f"{f.name}={v!r}")

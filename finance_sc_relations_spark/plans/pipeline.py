@@ -50,14 +50,10 @@ class PipelineConfig:
     score_threshold: float = 0.5
     model_partitions: int | None = None
     salt_buckets: int = 32
-    # Optional sc.broadcast(models.serialize_model(...)) — swaps the RE
-    # scorer for a checkpoint-loaded BatchModel (the GPU transformer
-    # drop-in seam), deserialized once per executor.
+    # Optional sc.broadcast(model) — swaps the RE scorer for any BatchModel
+    # (the GPU transformer drop-in seam, operators/models.py); each Python
+    # worker unpickles it once.
     re_model_broadcast: object = None
-    # Optional LOCAL checkpoint file path (the model.pth.tar flow) loaded
-    # once per executor — the broadcast's sibling for node-local / --files
-    # shipped checkpoints.
-    re_model_path: str | None = None
     # Optional sc.broadcast(WordPieceTokenizer): enables the reference's
     # token-ID preprocessing (encode tagged sentences, index [E1]/[E2] in
     # subword ids, drop rows whose markers were truncated away at
@@ -67,9 +63,9 @@ class PipelineConfig:
     re_max_length: int | None = None
     re_dropped_acc: object = None
     # SC classifier drop-in seam (C1-C3), mirroring the RE seam: broadcast
-    # checkpoint + optional tokenizer for the batch_encode_plus token-ID
-    # path (fixed-width pad to sc_max_length; shared sc_scores kernel in
-    # BOTH the fused NER pass and standalone sc_classify).
+    # model + optional tokenizer for the batch_encode_plus token-ID path
+    # (fixed-width pad to sc_max_length; sc_classifier.sc_scores in the
+    # fused NER pass).
     sc_model_broadcast: object = None
     sc_tokenizer_broadcast: object = None
     sc_max_length: int | None = 512
@@ -142,12 +138,10 @@ def _sentences(s, cfg):
 
 
 def _mentions(s, cfg):
-    # Fused NER+SC pass, spans dropped: Arrow serialization of the wide span
-    # structs through back-to-back UDF stages dominated CPU (see operator
-    # docstring). spans remain available via detect_mentions(include_spans=True).
+    # Fused NER+SC pass: one Arrow round trip of every sentence batch
+    # instead of two back-to-back UDF stages (see operator docstring).
     return detect_mentions(
-        s["sentences"], s["company_pdf"], include_spans=False,
-        with_sc=cfg.use_sc_gate,
+        s["sentences"], s["company_pdf"], with_sc=cfg.use_sc_gate,
         sc_model_broadcast=cfg.sc_model_broadcast,
         sc_tokenizer_broadcast=cfg.sc_tokenizer_broadcast,
         sc_max_length=cfg.sc_max_length,
@@ -164,7 +158,6 @@ def _classified(s, cfg):
         mutate=cfg.mutate,
         reverse=cfg.reverse,
         model_broadcast=cfg.re_model_broadcast,
-        model_path=cfg.re_model_path,
         tokenizer_broadcast=cfg.re_tokenizer_broadcast,
         max_length=cfg.re_max_length,
         dropped_acc=cfg.re_dropped_acc,

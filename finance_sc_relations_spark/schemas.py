@@ -1,4 +1,4 @@
-"""StructType schemas that code reads: the NER span and alias structs,
+"""StructType schemas that code reads: the NER alias struct,
 the tagged-pair output and the lineage table.
 
 Nested values are real Spark types (ARRAY/STRUCT/MAP) — never JSON-string
@@ -15,18 +15,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-)
-
-# NER span struct per src/language_model/spacy_loader.py:85-97
-SPAN = StructType(
-    [
-        StructField("text", StringType(), False),
-        StructField("label", StringType(), False),
-        StructField("start", IntegerType(), False),
-        StructField("end", IntegerType(), False),
-        StructField("token_start", IntegerType(), False),
-        StructField("token_end", IntegerType(), False),
-    ]
 )
 
 ALIAS_PAIR = StructType(

@@ -538,7 +538,7 @@ def _quality(text: str) -> float:
 
 
 def _word_ngrams(text: str, n: int) -> set:
-    """Replica of dedup._ngram_col: distinct word n-grams, slice semantics
+    """Replica of dedup._ngram_hash_from's grams: distinct word n-grams, slice semantics
     (a shorter-than-n doc yields its whole word list as one 'gram')."""
     words = re.split(r"\s+", text.lower().strip())
     upper = max(len(words) - n, 0)

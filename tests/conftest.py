@@ -22,6 +22,8 @@ def pytest_configure(config):
 def spark():
     spark = build_session(app_name="fsr-tests", master="local[4]")
     spark.sparkContext.setLogLevel("ERROR")
+    # the workers unpickle broadcast test doubles by module name
+    spark.sparkContext.addPyFile(str(Path(__file__).parent / "model_doubles.py"))
     yield spark
     spark.stop()
 
@@ -90,7 +92,6 @@ def fused_and_unfused():
             mutate=cfg.mutate,
             reverse=cfg.reverse,
             model_broadcast=cfg.re_model_broadcast,
-            model_path=cfg.re_model_path,
             tokenizer_broadcast=cfg.re_tokenizer_broadcast,
             max_length=cfg.re_max_length,
         )

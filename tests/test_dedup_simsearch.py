@@ -287,21 +287,6 @@ def test_near_dup_clusters_transitive_chain(spark):
     assert out.loc[13, "cluster_id"] == 13 and out.loc[13, "is_canonical"]
 
 
-def test_corpus_report_rollup(spark):
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox", "en", "srcA"),
-         (2, "the quick brown fox", "en", "srcA"),   # exact dup
-         (3, "completely different words here", "en", "srcA"),
-         (4, "ein deutscher satz", "de", "srcB")],
-        "doc_id long, text string, lang string, source string",
-    )
-    out = T.corpus_report(df).toPandas().set_index(["source", "lang"])
-    a = out.loc[("srcA", "en")]
-    assert a["n_docs"] == 3 and a["dup_ratio"] == round(1 - 2 / 3, 4)
-    assert a["total_tokens"] == 4 + 4 + 4
-    assert out.loc[("srcB", "de")]["n_docs"] == 1
-
-
 def test_sample_token_budget(spark):
     """Budgeted sampling keeps <= budget tokens per stratum, is deterministic,
     and takes docs in the seeded md5 order (prefix property: a bigger budget

@@ -385,14 +385,16 @@ def test_pipeline_surface_map_join_left_to_aqe(spark):
 
 
 def test_linking_index_built_once_per_worker():
-    """The mapInPandas function is shipped to every task by cloudpickle;
-    two deserialized copies running in one Python worker must share one
-    dictionary index build (the index cache lives in the module, not in a
-    pickled copy of it). Also covers a multi-alias numpy row."""
+    """The broadcast _DictIndex pickles only its rows and builds its index
+    on first use, once per unpickled copy: PySpark keeps one copy per
+    Python worker (tests/test_model_seam.py::
+    test_broadcast_state_built_once_per_worker), so the index, which
+    encodes every form, is built once per worker rather than once per task.
+    Also covers a multi-alias numpy row."""
+    import pickle
+
     import numpy as np
     from types import SimpleNamespace
-
-    from pyspark import cloudpickle
 
     from finance_sc_relations_spark.operators import linking
 
@@ -404,19 +406,18 @@ def test_linking_index_built_once_per_worker():
     })
     rows = linking._dict_rows(dict_pdf)
     assert len(rows) == 4
-    token = "test-linking-index-once"
-    linker = linking._surface_linker(
-        SimpleNamespace(value=rows), token, 0.8, 0.95, 5
-    )
-    payload = cloudpickle.dumps(linker)
-    batch = pd.DataFrame({"surface": ["Sonexa", "Veltrix Systems", "Nobody"]})
+    built = linking._DictIndex(rows)
+    built.index
+    payload = pickle.dumps(built)
+    assert payload == pickle.dumps(linking._DictIndex(rows))  # rows only
 
-    linking._DICT_INDEX_CACHE.clear()
-    first = pd.concat(cloudpickle.loads(payload)(iter([batch])))
-    index = linking._DICT_INDEX_CACHE.get(token)
-    assert index is not None  # built into the module's cache
-    second = pd.concat(cloudpickle.loads(payload)(iter([batch])))
-    assert linking._DICT_INDEX_CACHE.get(token) is index  # no rebuild
+    value = pickle.loads(payload)
+    linker = linking._surface_linker(SimpleNamespace(value=value), 0.8, 0.95, 5)
+    batch = pd.DataFrame({"surface": ["Sonexa", "Veltrix Systems", "Nobody"]})
+    first = pd.concat(linker(iter([batch])))
+    index = value.index
+    second = pd.concat(linker(iter([batch])))
+    assert value.index is index  # no rebuild
     assert list(first["entity_id"]) == ["LEI1", "LEI2", None]
     assert first.drop(columns="candidates").equals(
         second.drop(columns="candidates")

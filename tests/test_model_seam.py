@@ -1,25 +1,19 @@
 """Transformer drop-in contract: a non-default BatchModel shipped as a
-broadcast checkpoint must drive the whole pipeline (and the unfused oracle),
-deserialized once per executor — the Spark analog of SageMaker's
-once-per-container model_fn (src/sagemaker/re_inference.py:24-35). On a GPU
-cluster the payload is the re_trf.py:51-65 checkpoint; the seam is the same."""
+broadcast must drive the whole pipeline (and the unfused oracle), unpickled
+once per Python worker — the Spark analog of SageMaker's once-per-container
+model_fn (src/sagemaker/re_inference.py:24-35). On a GPU cluster the
+broadcast value is the re_trf.py:51-65 model; the seam is the same."""
 
-import pandas as pd
-import pytest
+import os
 
-from finance_sc_relations_spark.fixtures import company_universe, generate_corpus
-from finance_sc_relations_spark.operators.models import (
-    ConstantModel,
-    model_from_broadcast,
-    serialize_model,
-)
+from model_doubles import ConstantModel
+
+from finance_sc_relations_spark.fixtures import generate_corpus
 from finance_sc_relations_spark.plans.pipeline import PipelineConfig, run_pipeline
 
 
-def _bc(spark, scores, model_id="const-test"):
-    return spark.sparkContext.broadcast(
-        serialize_model(model_id, ConstantModel(scores))
-    )
+def _bc(spark, scores):
+    return spark.sparkContext.broadcast(ConstantModel(scores))
 
 
 def test_broadcast_model_drives_fused_pipeline(spark):
@@ -49,8 +43,7 @@ def test_broadcast_model_drives_unfused_path_and_is_deterministic(
 ):
     pages_pdf, _, companies_pdf = generate_corpus(20)
     cfg = PipelineConfig(
-        reverse=False,
-        re_model_broadcast=_bc(spark, [0.05, 0.9, 0.05], model_id="const-cus"),
+        reverse=False, re_model_broadcast=_bc(spark, [0.05, 0.9, 0.05]),
     )
     out = run_pipeline(
         spark,
@@ -65,69 +58,46 @@ def test_broadcast_model_drives_unfused_path_and_is_deterministic(
     assert fused_and_unfused(out, cfg) == (fused, unfused)
 
 
-def test_model_from_broadcast_caches_per_model_id(spark):
-    """Singleton semantics: one deserialization per (executor, model_id)."""
-    bc = _bc(spark, [0.3, 0.3, 0.4], model_id="cache-test")
-    m1 = model_from_broadcast(bc)
-    m2 = model_from_broadcast(bc)
-    assert m1 is m2
-    out = m1.score_batch(["a", "b"])
-    assert out.shape == (2, 3)
+def test_broadcast_state_built_once_per_worker(spark):
+    """The broadcast value is the only per-worker cache: PySpark unpickles
+    it once per Python worker, and the state built from it (the model
+    itself, the gazetteer's compiled regex, the linking index) is kept on
+    it. Two jobs of 8 tasks each report (pid, id(state)) per task; every
+    worker pid must see exactly one object of each kind. pin() keeps each
+    object alive, so a rebuilt object cannot reuse a freed one's id."""
+    import pandas as pd
 
-
-def test_checkpoint_file_model_drives_both_paths(spark, tmp_path, fused_and_unfused):
-    """The model.pth.tar flow (infer.py:67-133): a checkpoint FILE loaded
-    once per executor (keyed by path+mtime) drives the pipeline on the fused
-    AND unfused paths — the broadcast seam's sibling for --files / shared-fs
-    shipped checkpoints."""
-    from finance_sc_relations_spark.operators.models import (
-        model_from_path,
-        save_model_checkpoint,
+    from finance_sc_relations_spark.operators.linking import (
+        _DictIndex,
+        _dict_rows,
     )
-
-    ckpt = str(tmp_path / "model.pth.tar")
-    save_model_checkpoint(ckpt, ConstantModel([0.05, 0.05, 0.9]))
-    # per-executor singleton: same object back for the same (path, mtime)
-    assert model_from_path(ckpt) is model_from_path(ckpt)
-    # a REPLACED checkpoint (new mtime) must reload, not serve the stale one
-    import os
-
-    old = model_from_path(ckpt)
-    save_model_checkpoint(ckpt, ConstantModel([0.9, 0.05, 0.05]))
-    os.utime(ckpt, ns=(os.stat(ckpt).st_atime_ns, os.stat(ckpt).st_mtime_ns + 1))
-    assert model_from_path(ckpt) is not old
-
-    save_model_checkpoint(ckpt, ConstantModel([0.05, 0.9, 0.05]))
-    pages_pdf, _, companies_pdf = generate_corpus(20)
-    cfg = PipelineConfig(reverse=False, re_model_path=ckpt)
-    out = run_pipeline(
-        spark,
-        spark.createDataFrame(pages_pdf),
-        spark.createDataFrame(companies_pdf),
-        cfg,
-    )
-    for rows in fused_and_unfused(out, cfg):
-        assert len(rows) > 0
-        assert {rel for _, _, _, rel, _ in rows} == {"customer"}
-        assert all(abs(score - 0.9) < 1e-6 for *_, score in rows)
-
-
-def test_broadcast_cache_keys_on_broadcast_not_id(spark):
-    """Two broadcasts sharing a model_id (an SC and an RE head both named
-    'model', or a retrained re-broadcast) must each load their OWN payload:
-    the per-executor cache keys on the broadcast instance, so the first
-    loader cannot poison the second."""
-    from finance_sc_relations_spark.operators.models import (
-        ConstantModel,
-        model_from_broadcast,
-        serialize_model,
-    )
+    from finance_sc_relations_spark.operators.ner import _Gazetteer
 
     sc = spark.sparkContext
-    bc_a = sc.broadcast(serialize_model("model", ConstantModel([0.9, 0.1])))
-    bc_b = sc.broadcast(serialize_model("model", ConstantModel([0.1, 0.9])))
-    a = model_from_broadcast(bc_a)
-    b = model_from_broadcast(bc_b)
-    assert a.score_batch(["x"])[0].tolist() != b.score_batch(["x"])[0].tolist()
-    # same broadcast -> cached instance
-    assert model_from_broadcast(bc_b) is b
+    model_bc = _bc(spark, [0.2, 0.3, 0.5])
+    gaz_bc = sc.broadcast(_Gazetteer(["Sonexa Corporation", "Veltrix"]))
+    index_bc = sc.broadcast(_DictIndex(_dict_rows(pd.DataFrame({
+        "entity_id": ["LEI1"], "canonical_name": ["Sonexa Corporation"],
+        "prefix2": ["so"], "aliases": [None],
+    }))))
+
+    def probe(_):
+        import re
+
+        from model_doubles import pin
+
+        re.purge()  # a recompiled regex must not come from re's own cache
+        yield (os.getpid(), *pin(model_bc.value, gaz_bc.value.regex,
+                                 index_bc.value.index))
+
+    rows = []
+    for _ in range(2):
+        rows += sc.parallelize(range(8), 8).mapPartitions(probe).collect()
+    assert len(rows) == 16
+    pids = {r[0] for r in rows}
+    assert len(pids) < len(rows)  # workers were reused across tasks
+    for kind in (1, 2, 3):
+        per_pid = {}
+        for r in rows:
+            per_pid.setdefault(r[0], set()).add(r[kind])
+        assert all(len(ids) == 1 for ids in per_pid.values()), (kind, per_pid)

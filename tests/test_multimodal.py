@@ -164,8 +164,8 @@ def test_mp4_box_walk_roundtrip():
     import pytest
 
     from finance_sc_relations_spark.operators.multimodal import (
+        _decode_and_probe,
         _parse_mp4,
-        _probe_metadata,
     )
 
     p = make_mp4("t4", duration_ms=4000, timescale=90000, n_tracks=2)
@@ -178,14 +178,14 @@ def test_mp4_box_walk_roundtrip():
     assert p[info["mdat_off"] : info["mdat_off"] + info["mdat_len"]] == det_bytes(
         "t4", 4096
     )
-    assert _probe_metadata(p, "video", "mp4") == {
+    assert _decode_and_probe(p, "video", "mp4")[1] == {
         "timescale": 90000, "duration_ms": 4000, "n_tracks": 2,
         "mdat_bytes": 4096,
     }
     for junk in (b"", b"short", det_bytes("junk", 64)):
         with pytest.raises(ValueError):
             _parse_mp4(junk)
-        assert _probe_metadata(junk, "video", "mp4") == {}
+        assert _decode_and_probe(junk, "video", "mp4")[1] == {}
 
 
 def test_media_probe_parses_payload_not_metadata(spark):
@@ -213,8 +213,8 @@ def test_jpeg_marker_walk_roundtrip():
     import pytest
 
     from finance_sc_relations_spark.operators.multimodal import (
+        _decode_and_probe,
         _parse_jpeg,
-        _probe_metadata,
         make_jpeg_shell,
     )
 
@@ -225,13 +225,13 @@ def test_jpeg_marker_walk_roundtrip():
     ent = p[info["entropy_off"] : info["entropy_off"] + info["entropy_len"]]
     assert len(ent) == 64 and b"\xff" not in ent  # FF remapped: no markers
     assert p.endswith(b"\xff\xd9")
-    assert _probe_metadata(p, "image", "jpeg") == {
+    assert _decode_and_probe(p, "image", "jpeg")[1] == {
         "width": 11, "height": 7, "n_components": 3
     }
     for junk in (b"", b"\xff\xd8", det_bytes("nope", 32)):
         with pytest.raises(ValueError):
             _parse_jpeg(junk)
-        assert _probe_metadata(junk, "image", "jpeg") == {}
+        assert _decode_and_probe(junk, "image", "jpeg")[1] == {}
 
 
 def test_malformed_payloads_fall_back_to_stub_not_crash():

@@ -109,15 +109,3 @@ def test_filter_aliases_initials(embedder):
 def test_filter_aliases_rejects_unrelated(embedder):
     kept = filter_aliases([("Quantrix Semiconductors", "ZZQ")], embedder)
     assert kept == []
-
-
-def test_create_org_groups_fallback():
-    from finance_sc_relations_spark.operators.ner import create_org_groups
-
-    spans = [
-        {"text": "Acme Corp", "label": "ORG"},
-        {"text": "Beta Inc", "label": "ORG"},
-        {"text": "Acme Corp", "label": "ORG"},  # repeat keeps first id
-        {"text": "Somewhere", "label": "GPE"},  # non-ORG ignored
-    ]
-    assert create_org_groups(spans) == {"Acme Corp": 0, "Beta Inc": 1}

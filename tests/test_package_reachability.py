@@ -1,9 +1,12 @@
-"""Every package module is reached from a runner, not only from tests.
+"""Every package module is reached from a runner, not only from tests, and
+every top-level name of a package module is used outside tests.
 
 Walks imports with `ast`, starting from the non-test entry points (the
 driver contract, the bench scripts, `scripts/` and `perfbench/`), and
 follows package imports transitively. A module that only tests import is
-dead code; delete it with its tests, or record here why it stays.
+dead code; delete it with its tests, or record here why it stays. The same
+holds for a top-level function, class or constant that no non-test file
+names (as a name, an attribute or an import) outside its own definition.
 """
 
 import ast
@@ -16,6 +19,21 @@ PKG = "finance_sc_relations_spark"
 ALLOWED_UNREACHED = {
     "operators.llm_verify": "the paper's relabel verification, not yet a KG_STAGES stage",
     "sources.catalog": "the only Iceberg-aware code, not yet wired into run_job's writes",
+}
+
+
+# Each is used only by tests, for the reason given.
+ALLOWED_TEST_ONLY_NAMES = {
+    "operators.dedup.embedding_near_dup_pairs":
+        "exact all-pairs oracle the LSH variant is checked against",
+    "functions.tagging.extract_tagged_names":
+        "oracle of the tagging property tests",
+    "functions.tagging.get_e1e2_start":
+        "reference port (T9, whitespace tokens) pinned by its reference "
+        "test; the runtime T9 is wordpiece.get_e1e2_start_ids",
+    "functions.relations.resort_relation":
+        "reference port (G5) pinned by the reference's own test values; "
+        "emit_triples applies the rule in Spark",
 }
 
 
@@ -73,3 +91,46 @@ def test_every_package_module_is_reached_from_a_runner():
     assert unreached == set(ALLOWED_UNREACHED), (
         f"test-only modules: {sorted(unreached - set(ALLOWED_UNREACHED))}; "
         f"allowlisted but reached: {sorted(set(ALLOWED_UNREACHED) - unreached)}")
+
+
+def _top_level_names(stmt) -> set[str]:
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return {stmt.name}
+    targets = (stmt.targets if isinstance(stmt, ast.Assign)
+               else [stmt.target] if isinstance(stmt, ast.AnnAssign) else [])
+    return {t.id for t in targets if isinstance(t, ast.Name)}
+
+
+def _used_names(node) -> set[str]:
+    names = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+            names.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            names.add(n.attr)
+        elif isinstance(n, ast.alias):
+            names.add(n.name.rsplit(".", 1)[-1])
+    return names
+
+
+def test_every_package_name_is_used_outside_tests():
+    package = sorted((REPO / PKG).rglob("*.py"))
+    used: set[str] = set()
+    defined = []  # (qualified name, bare name)
+    for path in package + _entry_points():
+        tree = ast.parse(path.read_text(), str(path))
+        in_pkg = path in package
+        for stmt in tree.body:
+            own = _top_level_names(stmt)
+            # a definition's references to itself do not count
+            used |= _used_names(stmt) - own
+            if in_pkg:
+                mod = _module_name(path).removeprefix(PKG + ".")
+                defined += [(f"{mod}.{n}", n) for n in own
+                            if not n.startswith("__")]
+    allowed_modules = set(ALLOWED_UNREACHED)
+    unused = {q for q, n in defined
+              if n not in used and q.rsplit(".", 1)[0] not in allowed_modules}
+    assert unused == set(ALLOWED_TEST_ONLY_NAMES), (
+        f"test-only names: {sorted(unused - set(ALLOWED_TEST_ONLY_NAMES))}; "
+        f"allowlisted but used: {sorted(set(ALLOWED_TEST_ONLY_NAMES) - unused)}")

@@ -185,29 +185,6 @@ def test_fused_equals_unfused_extraction(spark, fixture_corpus, fused_and_unfuse
     assert fused == unfused and len(fused) > 0
 
 
-def test_standalone_sc_classifier_matches_fused(spark, fixture_corpus):
-    """The composable sc_classify operator and the fused with_sc NER pass
-    agree on every sentence."""
-    from finance_sc_relations_spark.operators.ner import detect_mentions
-    from finance_sc_relations_spark.operators.sc_classifier import sc_classify
-    from finance_sc_relations_spark.operators.segment import segment_sentences
-    from finance_sc_relations_spark.fixtures import company_universe
-
-    pages_pdf, _, _ = fixture_corpus
-    pages = spark.createDataFrame(pages_pdf.head(40))
-    cd = company_universe()
-    sent = segment_sentences(pages)
-    fused = detect_mentions(sent, cd, include_spans=False, with_sc=True)
-    standalone = sc_classify(
-        detect_mentions(sent, cd, include_spans=False, with_sc=False)
-    )
-    a = {r["sentence_id"]: (r["sc_label"], round(r["sc_score"], 5))
-         for r in fused.select("sentence_id", "sc_label", "sc_score").collect()}
-    b = {r["sentence_id"]: (r["sc_label"], round(r["sc_score"], 5))
-         for r in standalone.select("sentence_id", "sc_label", "sc_score").collect()}
-    assert a == b
-
-
 def test_extreme_skew_salted_aggregation(spark):
     """90% of pages mention the same hot pair: the salted two-phase global
     rollup must still produce exact counts and scores (north-rule skew
@@ -242,16 +219,16 @@ def test_sc_token_id_seam(spark):
     """The SC classifier's C2 contract (tokenizers.py:14-44
     batch_encode_plus: truncate to max_length, pad to the FIXED width): a
     model exposing score_ids_batch(ids, attention_mask) receives a
-    (B, max_length) matrix + mask through the broadcast-model seam;
-    SCProbeModel validates the contract and echoes (width, true_length)."""
+    (B, max_length) matrix + mask through the broadcast-model seam of the
+    fused NER pass; SCProbeModel validates the contract and echoes
+    (width, true_length)."""
+    from model_doubles import SCProbeModel
+
+    from finance_sc_relations_spark.fixtures import company_universe
     from finance_sc_relations_spark.functions.wordpiece import (
         build_re_tokenizer,
     )
-    from finance_sc_relations_spark.operators.models import (
-        SCProbeModel,
-        serialize_model,
-    )
-    from finance_sc_relations_spark.operators.sc_classifier import sc_classify
+    from finance_sc_relations_spark.operators.ner import detect_mentions
 
     sents = [
         "acme supplies widgets to zenith",
@@ -259,20 +236,20 @@ def test_sc_token_id_seam(spark):
     ]
     tok = build_re_tokenizer(sents, vocab_size=300, min_freq=1)
     tok_bc = spark.sparkContext.broadcast(tok)
-    model_bc = spark.sparkContext.broadcast(
-        serialize_model("sc_probe", SCProbeModel())
-    )
-    mentions = spark.createDataFrame(
-        [(f"s{i}", s) for i, s in enumerate(sents)],
-        "sentence_id string, sentence string",
+    model_bc = spark.sparkContext.broadcast(SCProbeModel())
+    sentences = spark.createDataFrame(
+        [("u", f"s{i}", s) for i, s in enumerate(sents)],
+        "url string, sentence_id string, sentence string",
     ).coalesce(1)
     rows = {
         r["sentence_id"]: (int(r["sc_label"]), float(r["sc_score"]))
-        for r in sc_classify(
-            mentions,
-            model_broadcast=model_bc,
-            tokenizer_broadcast=tok_bc,
-            max_length=32,
+        for r in detect_mentions(
+            sentences,
+            company_universe(),
+            with_sc=True,
+            sc_model_broadcast=model_bc,
+            sc_tokenizer_broadcast=tok_bc,
+            sc_max_length=32,
         ).collect()
     }
     short_len = len(tok.encode(sents[0], max_length=32))
@@ -293,25 +270,21 @@ def test_sc_token_id_seam(spark):
     assert scores[1].tolist() == [32.0, 32.0]
 
     # without a tokenizer the string path still runs (lexical default)
-    plain = sc_classify(mentions).collect()
+    plain = detect_mentions(sentences, company_universe(), with_sc=True).collect()
     assert {r["sc_label"] for r in plain} == {1}  # supply cue present
 
 
 def test_sc_seam_reaches_fused_ner_pass(spark):
     """The C1-C3 drop-in must reach the PRODUCTION fused pass: a broadcast
     SC model + tokenizer wired through PipelineConfig changes the fused
-    detect_mentions sc scores exactly as it changes standalone sc_classify
-    (shared sc_scores kernel)."""
+    detect_mentions sc scores."""
+    from model_doubles import SCProbeModel
+
     from finance_sc_relations_spark.fixtures import company_universe
     from finance_sc_relations_spark.functions.wordpiece import (
         build_re_tokenizer,
     )
-    from finance_sc_relations_spark.operators.models import (
-        SCProbeModel,
-        serialize_model,
-    )
     from finance_sc_relations_spark.operators.ner import detect_mentions
-    from finance_sc_relations_spark.operators.sc_classifier import sc_classify
 
     sents_txt = [
         "Acme Corp supplies widgets to Zenith Holdings",
@@ -320,29 +293,24 @@ def test_sc_seam_reaches_fused_ner_pass(spark):
     tok_bc = spark.sparkContext.broadcast(
         build_re_tokenizer(sents_txt, vocab_size=300, min_freq=1)
     )
-    model_bc = spark.sparkContext.broadcast(
-        serialize_model("sc_probe", SCProbeModel())
-    )
+    model_bc = spark.sparkContext.broadcast(SCProbeModel())
     sentences = spark.createDataFrame(
         [("u", f"s{i}", s) for i, s in enumerate(sents_txt)],
         "url string, sentence_id string, sentence string",
     )
     fused = detect_mentions(
-        sentences, company_universe(), include_spans=False, with_sc=True,
+        sentences, company_universe(), with_sc=True,
         sc_model_broadcast=model_bc, sc_tokenizer_broadcast=tok_bc,
         sc_max_length=24,
     )
-    standalone = sc_classify(
-        sentences, model_broadcast=model_bc, tokenizer_broadcast=tok_bc,
-        max_length=24,
-    )
     a = {r["sentence_id"]: (r["sc_label"], r["sc_score"])
          for r in fused.select("sentence_id", "sc_label", "sc_score").collect()}
-    b = {r["sentence_id"]: (r["sc_label"], r["sc_score"])
-         for r in standalone.select("sentence_id", "sc_label", "sc_score").collect()}
-    assert a == b and len(a) == 2
-    # probe echo proves the token-ID contract ran (score = width or length)
+    assert len(a) == 2
+    # probe echo proves the token-ID contract ran: (neg=width 24,
+    # pos=true length <= 24), so argmax 0 at score 24 — never the lexical
+    # scorer's 0.98
     assert all(v[1] <= 24.0 for v in a.values())
+    assert set(a.values()) == {(0, 24.0)}
 
 
 def test_sc_token_path_requires_max_length(spark):
@@ -354,7 +322,8 @@ def test_sc_token_path_requires_max_length(spark):
     from finance_sc_relations_spark.functions.wordpiece import (
         build_re_tokenizer,
     )
-    from finance_sc_relations_spark.operators.models import SCProbeModel
+    from model_doubles import SCProbeModel
+
     from finance_sc_relations_spark.operators.sc_classifier import sc_scores
 
     tok = build_re_tokenizer(["alpha beta"], min_freq=1)
@@ -371,15 +340,12 @@ def test_sc_classify_driver_side_max_length_guard(spark):
         build_re_tokenizer,
     )
     from finance_sc_relations_spark.operators.ner import detect_mentions
-    from finance_sc_relations_spark.operators.sc_classifier import sc_classify
     from finance_sc_relations_spark.fixtures import company_universe
 
     tok_bc = spark.sparkContext.broadcast(
         build_re_tokenizer(["alpha"], min_freq=1)
     )
     empty = spark.createDataFrame([], "sentence_id string, sentence string")
-    with pytest.raises(ValueError, match="max_length"):
-        sc_classify(empty, tokenizer_broadcast=tok_bc, max_length=None)
     with pytest.raises(ValueError, match="sc_max_length"):
         detect_mentions(
             empty.withColumn("url", empty.sentence_id),

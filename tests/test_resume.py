@@ -406,63 +406,36 @@ def test_checkpointed_pipeline_tokenizer_seam_and_stable_fp(spark, tmp_path, fix
 
 
 def test_cfg_signature_model_content_keys(spark):
-    """The resume fingerprint keys broadcast models on id AND payload: a
-    retrained model under the same id invalidates; a re-broadcast of the
-    identical payload resumes; an accumulator's identity never matters."""
-    from finance_sc_relations_spark.operators.models import (
-        ConstantModel,
-        serialize_model,
-    )
+    """The resume fingerprint keys a broadcast model on its pickled bytes:
+    a retrained model invalidates; a re-broadcast of an identical model
+    resumes; an accumulator's identity never matters."""
+    from model_doubles import ConstantModel
+
     from finance_sc_relations_spark.plans.checkpoint import _cfg_signature
     from finance_sc_relations_spark.plans.pipeline import PipelineConfig
 
     sc = spark.sparkContext
-    m1 = serialize_model("re_head", ConstantModel([0.8, 0.1, 0.1]))
-    m1_again = serialize_model("re_head", ConstantModel([0.8, 0.1, 0.1]))
-    m2 = serialize_model("re_head", ConstantModel([0.1, 0.8, 0.1]))  # retrained
+    m1 = ConstantModel([0.8, 0.1, 0.1])
+    m1_again = ConstantModel([0.8, 0.1, 0.1])
+    m2 = ConstantModel([0.1, 0.8, 0.1])  # retrained
 
     sig = lambda m: _cfg_signature(
         PipelineConfig(re_model_broadcast=sc.broadcast(m))
     )
     assert sig(m1) == sig(m1_again)   # same content -> resume
-    assert sig(m1) != sig(m2)         # same id, new weights -> invalidate
+    assert sig(m1) != sig(m2)         # new weights -> invalidate
 
     a1 = _cfg_signature(PipelineConfig(re_dropped_acc=sc.accumulator(0)))
     a2 = _cfg_signature(PipelineConfig(re_dropped_acc=sc.accumulator(0)))
     assert a1 == a2
 
 
-def test_cfg_signature_model_path_content_keys(tmp_path):
-    """A retrained model.pth.tar REWRITTEN TO THE SAME PATH must change the
-    resume fingerprint (ADVICE r4): the path string alone would silently
-    resume stale scored/triple stages against the new weights."""
-    from finance_sc_relations_spark.operators.models import (
-        ConstantModel,
-        save_model_checkpoint,
-    )
-    from finance_sc_relations_spark.plans.checkpoint import _cfg_signature
-    from finance_sc_relations_spark.plans.pipeline import PipelineConfig
-
-    path = tmp_path / "model.pth.tar"
-    save_model_checkpoint(path, ConstantModel([0.8, 0.1, 0.1]))
-    sig1 = _cfg_signature(PipelineConfig(re_model_path=str(path)))
-    sig1_again = _cfg_signature(PipelineConfig(re_model_path=str(path)))
-    assert sig1 == sig1_again  # untouched file -> resume
-
-    save_model_checkpoint(path, ConstantModel([0.1, 0.8, 0.1]))  # retrained
-    # the (size, mtime_ns) signature sees the rewrite even when the pickle
-    # payload is byte-length-identical (mtime_ns moved)
-    assert _cfg_signature(PipelineConfig(re_model_path=str(path))) != sig1
-
-
 def test_cfg_signature_sc_broadcasts_content_keyed(spark):
     """The SC seam's broadcast fields must be content-keyed like the RE
-    ones: identical payloads resume, retrained payloads invalidate, and no
+    ones: identical models resume, retrained models invalidate, and no
     broadcast object address ever reaches the fingerprint."""
-    from finance_sc_relations_spark.operators.models import (
-        ConstantModel,
-        serialize_model,
-    )
+    from model_doubles import ConstantModel
+
     from finance_sc_relations_spark.functions.wordpiece import (
         build_re_tokenizer,
     )
@@ -470,9 +443,9 @@ def test_cfg_signature_sc_broadcasts_content_keyed(spark):
     from finance_sc_relations_spark.plans.pipeline import PipelineConfig
 
     sc = spark.sparkContext
-    m1 = serialize_model("sc_head", ConstantModel([0.9, 0.1]))
-    m1_again = serialize_model("sc_head", ConstantModel([0.9, 0.1]))
-    m2 = serialize_model("sc_head", ConstantModel([0.1, 0.9]))
+    m1 = ConstantModel([0.9, 0.1])
+    m1_again = ConstantModel([0.9, 0.1])
+    m2 = ConstantModel([0.1, 0.9])
     sig = lambda m: _cfg_signature(
         PipelineConfig(sc_model_broadcast=sc.broadcast(m))
     )

@@ -166,13 +166,11 @@ def test_fused_unfused_tokenizer_paths_agree(
 def test_score_ids_batch_seam(spark, re_tok_bc):
     """A model exposing score_ids_batch receives (ids, e1_e2_starts) — the
     transformer input contract — through the broadcast-model seam."""
-    from finance_sc_relations_spark.operators.models import (
-        MarkerProbeModel,
-        serialize_model,
-    )
+    from model_doubles import MarkerProbeModel
+
     from finance_sc_relations_spark.operators.re_classifier import score_pairs
 
-    bc = spark.sparkContext.broadcast(serialize_model("probe", MarkerProbeModel()))
+    bc = spark.sparkContext.broadcast(MarkerProbeModel())
     pairs = spark.createDataFrame(
         [("u1", "s1", "s1_0", SHORT_TAGGED, "acme", "zenith", {})],
         "url string, sentence_id string, r_id string, sents string,"
@@ -247,13 +245,11 @@ def test_score_ids_batch_padded_mask_seam(spark, re_tok_bc):
     """Two different-length sentences through ONE scoring batch: the model
     must see a rectangular padded matrix + mask (MarkerProbeModel asserts
     the contract internally) and per-row TRUE lengths, not the batch max."""
-    from finance_sc_relations_spark.operators.models import (
-        MarkerProbeModel,
-        serialize_model,
-    )
+    from model_doubles import MarkerProbeModel
+
     from finance_sc_relations_spark.operators.re_classifier import score_pairs
 
-    bc = spark.sparkContext.broadcast(serialize_model("probe", MarkerProbeModel()))
+    bc = spark.sparkContext.broadcast(MarkerProbeModel())
     long_tagged = SHORT_TAGGED + " again and again and again and again"
     pairs = spark.createDataFrame(
         [
