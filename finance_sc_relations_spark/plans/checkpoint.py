@@ -200,11 +200,10 @@ def _cfg_signature(cfg) -> str:
     model-carrying run could never resume), so those are replaced by
     CONTENT keys: a hash of the pickled model for the model broadcasts (a
     retrained model invalidates), a hash of the tokenizer vocab for the
-    tokenizer broadcasts, and a constant for
-    the dropped-rows accumulator (its identity does not affect results —
-    note that on a resumed run the accumulator only receives counts from
-    stages that actually re-execute; historical drop counts live in the
-    _lineage table)."""
+    tokenizer broadcasts, and a constant for the dropped-rows accumulator
+    (its identity does not affect results — note that on a resumed run the
+    accumulator only receives counts from stages that actually re-execute;
+    historical drop counts live in the _lineage table)."""
     import hashlib
     import pickle
     from dataclasses import fields
