@@ -128,9 +128,8 @@ def test_every_package_name_is_used_outside_tests():
                 mod = _module_name(path).removeprefix(PKG + ".")
                 defined += [(f"{mod}.{n}", n) for n in own
                             if not n.startswith("__")]
-    allowed_modules = set(ALLOWED_UNREACHED)
     unused = {q for q, n in defined
-              if n not in used and q.rsplit(".", 1)[0] not in allowed_modules}
+              if n not in used and q.rsplit(".", 1)[0] not in ALLOWED_UNREACHED}
     assert unused == set(ALLOWED_TEST_ONLY_NAMES), (
         f"test-only names: {sorted(unused - set(ALLOWED_TEST_ONLY_NAMES))}; "
         f"allowlisted but used: {sorted(set(ALLOWED_TEST_ONLY_NAMES) - unused)}")
