@@ -16,8 +16,8 @@ Planted content (FIXTURES.md F2):
 - 5% non-English pages that the lang gate must drop.
 
 Gold triples (F3) are derived at generation time: (subj supplies_to obj)
-with canonical entity ids, direction normalized per resort_relation
-(src/labels_generator/agg_utils.py:105-110).
+with canonical entity ids, direction normalized as the reference's
+resort_relation does (src/labels_generator/agg_utils.py:105-110).
 """
 
 from __future__ import annotations

@@ -158,25 +158,6 @@ def entity_annotation(
     return sentences
 
 
-def get_e1e2_start(tokens: List[str], e1_tok: str = "[E1]", e2_tok: str = "[E2]"):
-    """Token indices of the first [E1] and [E2] markers (T9).
-
-    Port of infer_from_trained.get_e1e2_start (src/relation_extraction/
-    infer.py:439-442) over WHITESPACE tokens — the quick-look variant. The
-    faithful token-ID form (markers indexed in encoded subword ids, with
-    the truncation-drop path) is functions.wordpiece.get_e1e2_start_ids +
-    encode_with_markers, wired through both scoring paths. Returns None
-    when either marker is missing — callers drop such rows and count them
-    to lineage, matching the invalid-drop at
-    preprocessing_funcs.py:333-339."""
-    try:
-        e1 = next(i for i, t in enumerate(tokens) if t == e1_tok)
-        e2 = next(i for i, t in enumerate(tokens) if t == e2_tok)
-    except StopIteration:
-        return None
-    return (e1, e2)
-
-
 def _stable_randint(seed_key: str, org_id: int, lo: int = 0, hi: int = 100) -> int:
     """Deterministic replacement for random.randint(0, 100)
     (src/utils/preprocess.py:490): blake2b of (seed_key, org_id) mod range."""

@@ -221,7 +221,7 @@ def get_e1e2_start_ids(
     ids: Sequence[int], e1_id: int, e2_id: int
 ) -> Optional[Tuple[int, int]]:
     """Positions of the first [E1] and first [E2] marker ID in an encoded
-    sequence — the id-level T9 (port of get_e1e2_start,
+    sequence — the id-level T9 (the reference's get_e1e2_start,
     src/relation_extraction/preprocessing_funcs.py:287-295). None when
     either marker is absent (e.g. truncated away at max_length); callers
     drop such rows and count them to lineage

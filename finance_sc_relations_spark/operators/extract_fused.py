@@ -20,29 +20,11 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    ArrayType,
-    FloatType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..functions.tagging import entity_annotation, mutate_sent
 from .models import REPatternModel
 from .pairs import enumerate_pairs
-from .re_classifier import gate_and_score
-
-SCORED_POSITIONS_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("sentence_id", StringType(), False),
-        StructField("r_id", StringType(), False),
-        StructField("entity1", StringType(), False),
-        StructField("entity2", StringType(), False),
-        StructField("scores", ArrayType(FloatType()), False),
-    ]
-)
+from .re_classifier import SCORED_POSITIONS_SCHEMA, gate_and_score
 
 
 def tag_and_score(

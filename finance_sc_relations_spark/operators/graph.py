@@ -5,7 +5,8 @@ relation type with argmax (agg_relations, src/relation_extraction/
 reporter.py:12-73) and DynamoDB relationship/alias items
 (reporter.py:339-384). Our output is the Iceberg-style edge/vertex pair of
 tables (SURVEY.md §1.1 'Graph output'), direction-normalized to
-``supplies_to`` per resort_relation (src/labels_generator/agg_utils.py:105-110).
+``supplies_to`` as the reference's resort_relation does
+(src/labels_generator/agg_utils.py:105-110).
 
 Skew: the 3 mega companies appear in ~30% of pages, so corpus-level
 aggregation on (subj_id, obj_id) is pre-aggregated with a salt derived from
@@ -26,7 +27,8 @@ def emit_triples(classified_pairs: DataFrame, score_threshold: float = 0.5) -> D
     """Scored pairs -> direction-normalized surface triples.
 
     The predicted relation is the role of entity2 (assign_relation,
-    infer.py:446-459); normalization per resort_relation:
+    infer.py:446-459); direction normalized as the reference's
+    resort_relation does (agg_utils.py:105-110):
       supplier -> (entity2, supplies_to, entity1)
       customer -> (entity1, supplies_to, entity2)
       other    -> dropped.

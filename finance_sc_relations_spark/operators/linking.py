@@ -15,12 +15,19 @@ Spark realization:
 - Distinct surface forms FIRST (dedup-before-expensive-op; the reference does
   the same for encoding, spacy_loader.py:262-274). At 10^12 docs the distinct
   mention set is ~10^7 — tiny next to the corpus.
-- The dictionary rides a SparkContext broadcast; exact and fuzzy tiers run
-  inside one mapInPandas over the distinct surfaces. The dictionary index
-  (exact map, prefix2 blocks — the blocking trick, kept verbatim from the
-  reference — and their embeddings) is built on first use of the broadcast
-  value, which PySpark keeps once per Python worker, so every task that
-  worker runs reuses it.
+- One scoring loop (_score_surfaces) makes the linking decision for both
+  tiers: exact hit, sort-prefix mask, block cosine, candidates, near-tie
+  rule. It reads one index type, _DictIndex (exact map, prefix2 blocks —
+  the blocking trick, kept verbatim from the reference — their embeddings
+  and sort-normalized forms). The tiers differ only in where the index
+  comes from:
+  - broadcast tier (link_surfaces): the whole dictionary rides a
+    SparkContext broadcast, its index built on first use of the value,
+    which PySpark keeps once per Python worker; one mapInPandas over the
+    distinct surfaces scores each Arrow batch;
+  - distributed tier (link_surfaces_distributed): the dictionary stays in
+    Spark, cogrouped with the surfaces on (prefix2, salt); each cogroup
+    wraps its block's rows in a _DictIndex and scores its surfaces.
 - Canonicalization of unmatched surfaces: connected components over the
   alias edges (operators/cc.py: union-find per task, min-label propagation
   only over the links between tasks). The kernel works on DISTINCT
@@ -131,7 +138,7 @@ def _cands_from_sims(sims, items, cand_thresh, match_thresh, top_k):
     """top_k (name, entity_id, score) with cand_thresh <= score <
     match_thresh — the reference's matches/candidates split
     (reporter.py:224-227). Match-level items are matches, never
-    candidates. Shared by both linking tiers so they emit identical lists."""
+    candidates."""
     cands = []
     # stable sort: exact score ties (identical alias forms from different
     # entities encode to identical vectors) must break by ascending block
@@ -158,7 +165,7 @@ _TIE_EPS = 1e-6
 def _best_form(sims: np.ndarray, match_thresh: float) -> int | None:
     """Index of the linked form, or None when no form reaches match_thresh:
     the lowest index among the forms that reach match_thresh and lie within
-    _TIE_EPS of the maximum. Both tiers order a block's forms by
+    _TIE_EPS of the maximum. _DictIndex orders a block's forms by
     (form, entity_id), so a tie links the min (form, entity_id). Forms equal
     up to a stop suffix ("... Inc" / "... Ltd") tie in real arithmetic, and
     their float32 cosines differ by an ulp that depends on the BLAS kernel
@@ -174,7 +181,7 @@ def _best_form(sims: np.ndarray, match_thresh: float) -> int | None:
 
 def link_surfaces(
     surfaces: DataFrame,
-    company_dict,
+    company_pdf: pd.DataFrame,
     cand_thresh: float = 0.8,
     match_thresh: float = 0.95,
     top_k: int = 5,
@@ -182,56 +189,49 @@ def link_surfaces(
     """surfaces(surface) -> LINKED_SCHEMA via exact-alias + prefix-blocked
     fuzzy matching against the broadcast dictionary (L5+L6).
 
-    company_dict may be a Spark DF or a pre-collected pandas DF (the pipeline
-    collects it once and reuses it across stages).
-    Exact matches (canonical name or known alias) score 1.0; otherwise the
-    best prefix-block cosine >= match_thresh wins (match_companies thresholds,
-    src/sagemaker/re_inference.py:135-137 defaults), with fuzzy candidacy
-    further gated by the L5 SECOND-level block: the form's sort-normalized
-    string must begin with the surface's 5-char sort prefix (incl. the
-    leading-'the' variant — reporter.py:158-165, sort_len=5 per
-    re_inference.py:131). Every surface also carries its top_k
-    sub-match-threshold candidates at cand_thresh — the matches/candidates
-    split of match_companies (reporter.py:203-237)."""
-    spark = surfaces.sparkSession
-    dict_pdf = (
-        company_dict
-        if isinstance(company_dict, pd.DataFrame)
-        else company_dict.select(
-            "entity_id", "canonical_name", "prefix2", "aliases"
-        ).toPandas()
+    company_pdf is the collected dictionary (entity_id, canonical_name,
+    prefix2, aliases); the pipeline collects it once and reuses it across
+    stages. Exact matches (canonical name or known alias) score 1.0;
+    otherwise the best prefix-block cosine >= match_thresh wins
+    (match_companies thresholds, src/sagemaker/re_inference.py:135-137
+    defaults), with fuzzy candidacy further gated by the L5 SECOND-level
+    block: the form's sort-normalized string must begin with the surface's
+    5-char sort prefix (incl. the leading-'the' variant —
+    reporter.py:158-165, sort_len=5 per re_inference.py:131). Every surface
+    also carries its top_k sub-match-threshold candidates at cand_thresh —
+    the matches/candidates split of match_companies (reporter.py:203-237)."""
+    bc = surfaces.sparkSession.sparkContext.broadcast(
+        _DictIndex(_dict_rows(company_pdf))
     )
-    bc = spark.sparkContext.broadcast(_DictIndex(_dict_rows(dict_pdf)))
     return surfaces.select("surface").distinct().mapInPandas(
         _surface_linker(bc, cand_thresh, match_thresh, top_k),
         schema=LINKED_SCHEMA,
     )
 
 
-def _dict_rows(dict_pdf: pd.DataFrame) -> list:
-    """(entity_id, canonical_name, prefix2, form) per name and alias, sorted
-    by (form, entity_id) once before the broadcast: exact ties resolve to
-    the min entity_id, as in the distributed tier."""
+def _dict_rows(company_pdf: pd.DataFrame) -> list:
+    """(entity_id, canonical_name, prefix2, form) per name and alias."""
     rows = []
-    for rec in dict_pdf.itertuples(index=False):
+    for rec in company_pdf.itertuples(index=False):
         rows.append((rec.entity_id, rec.canonical_name, rec.prefix2, rec.canonical_name))
         # toPandas yields a numpy array (or None): never test its truth
         for alias in [] if rec.aliases is None else list(rec.aliases):
             rows.append((rec.entity_id, rec.canonical_name, _prefix2(alias), alias))
-    rows.sort(key=lambda r: (r[3], r[0]))
     return rows
 
 
 class _DictIndex:
-    """The broadcast dictionary rows (_dict_rows) and their index
-    (exact, by_prefix, prefix_emb, prefix_sorts). Pickles only the rows:
-    the index, which encodes every form, is built on first use and kept on
-    the object, so a broadcast _DictIndex builds once per Python worker
-    (PySpark keeps one unpickled value per broadcast there) rather than once
-    per task."""
+    """Dictionary rows (entity_id, canonical_name, prefix2, form), sorted
+    by (form, entity_id), and their index (exact, by_prefix, prefix_emb,
+    prefix_sorts). The order makes an exact tie across entities link the
+    min entity_id, and _best_form's near-tie the min (form, entity_id).
+    Pickles only the rows: the index, which encodes every form, is built on
+    first use and kept on the object, so a broadcast _DictIndex builds once
+    per Python worker (PySpark keeps one unpickled value per broadcast
+    there) rather than once per task."""
 
     def __init__(self, rows: list):
-        self.rows = rows
+        self.rows = sorted(rows, key=lambda r: (r[3], r[0]))
 
     def __getstate__(self):
         return {"rows": self.rows}
@@ -258,49 +258,49 @@ class _DictIndex:
         return exact, by_prefix, prefix_emb, prefix_sorts
 
 
+def _score_surfaces(index, surfaces, blocks, cand_thresh, match_thresh, top_k):
+    """LINKED_SCHEMA rows for `surfaces`, each scored against its prefix
+    block (`blocks`, one key per surface) of a _DictIndex.index: the one
+    scoring loop of both tiers. An exact form hit links at 1.0; otherwise
+    the block's sort-prefix-eligible forms are scored by cosine and
+    _best_form picks the link. Candidates come from the same
+    similarities either way."""
+    exact, by_prefix, prefix_emb, prefix_sorts = index
+    # ONE batched encode per call (not per surface) feeds every block
+    # matvec below
+    vecs = HashEmbedder().encode(surfaces) if surfaces else []
+    out = []
+    for surface, p, vec in zip(surfaces, blocks, vecs):
+        items = by_prefix.get(p)
+        cands: list = []
+        link = (None, None, None)
+        idxs = np.flatnonzero(_sort_mask(prefix_sorts[p], surface)) if items else []
+        if len(idxs):
+            sims = prefix_emb[p][idxs] @ vec
+            cands = _cands_from_sims(
+                sims, [items[j] for j in idxs], cand_thresh, match_thresh, top_k
+            )
+            b = _best_form(sims, match_thresh)
+            if b is not None:
+                link = (*items[idxs[b]][:2], float(sims[b]))
+        hit = exact.get(surface)
+        if hit is not None:
+            link = (*hit, 1.0)
+        out.append((surface, *link, cands))
+    return pd.DataFrame(out, columns=LINKED_SCHEMA.fieldNames())
+
+
 def _surface_linker(bc, cand_thresh, match_thresh, top_k):
-    """link_surfaces' mapInPandas function over the broadcast _DictIndex bc."""
+    """link_surfaces' mapInPandas function over the broadcast _DictIndex bc:
+    the global exact map, and each surface's own prefix block."""
 
     def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        embedder = HashEmbedder()
-        exact, by_prefix, prefix_emb, prefix_sorts = bc.value.index
+        index = bc.value.index
         for batch in batches:
-            out = []
             surfaces = list(batch["surface"])
-            # ONE batched encode per Arrow batch (not per surface) feeds
-            # every block matvec below
-            surf_vecs = embedder.encode(surfaces) if surfaces else None
-            for i, surface in enumerate(surfaces):
-                p = _prefix2(surface)
-                items = by_prefix.get(p)
-                cands: list = []
-                best_item = None
-                best_score = None
-                if items:
-                    mask = _sort_mask(prefix_sorts[p], surface)
-                    if mask.any():
-                        idxs = np.flatnonzero(mask)
-                        sims = prefix_emb[p][idxs] @ surf_vecs[i]
-                        cands = _cands_from_sims(
-                            sims, [items[j] for j in idxs],
-                            cand_thresh, match_thresh, top_k,
-                        )
-                        b = _best_form(sims, match_thresh)
-                        if b is not None:
-                            best_item, best_score = items[idxs[b]], float(sims[b])
-                hit = exact.get(surface)
-                if hit is not None:
-                    out.append((surface, hit[0], hit[1], 1.0, cands))
-                elif best_item is not None:
-                    out.append(
-                        (surface, best_item[0], best_item[1], best_score, cands)
-                    )
-                else:
-                    out.append((surface, None, None, None, cands))
-            yield pd.DataFrame(
-                out,
-                columns=["surface", "entity_id", "matched_name", "link_score",
-                         "candidates"],
+            yield _score_surfaces(
+                index, surfaces, [_prefix2(s) for s in surfaces],
+                cand_thresh, match_thresh, top_k,
             )
 
     return _map
@@ -325,16 +325,17 @@ def link_surfaces_distributed(
 
     Mechanism: explode the dictionary to (prefix2, form, entity_id,
     canonical) rows IN SPARK, cogroup with the distinct surfaces on the
-    prefix2 blocking key, and score each block in pandas — the identical
-    math as the broadcast tier, but the dictionary stays distributed and the
-    shuffle key is (prefix2, salt): a cogroup is ONE task per key, so a hot
-    prefix block (surname-like prefixes hold a disproportionate share of a
-    web corpus's surfaces) would otherwise become a straggler. Surfaces are
-    hash-salted into salt_buckets sub-blocks and the dictionary rows of the
-    block are replicated across them — identical output, bounded task size
-    (dict replication is salt_buckets x the BLOCK, not the dictionary).
-    Exact ties across entities resolve by min entity_id (deterministic
-    under any partitioning)."""
+    prefix2 blocking key, and score each cogroup with the broadcast tier's
+    own loop (_score_surfaces) over a _DictIndex of just that block: every
+    surface of the cogroup is scored against the block Spark assigned it,
+    so no Python re-derivation of the key can move it elsewhere. The
+    dictionary stays distributed and the shuffle key is (prefix2, salt): a
+    cogroup is ONE task per key, so a hot prefix block (surname-like
+    prefixes hold a disproportionate share of a web corpus's surfaces)
+    would otherwise become a straggler. Surfaces are hash-salted into
+    salt_buckets sub-blocks and the dictionary rows of the block are
+    replicated across them — identical output, bounded task size (dict
+    replication is salt_buckets x the BLOCK, not the dictionary)."""
     salts = F.array(*[F.lit(i) for i in range(salt_buckets)])
     forms = company_dict.select(
         "entity_id",
@@ -352,8 +353,8 @@ def link_surfaces_distributed(
     ).select(
         "entity_id",
         "canonical_name",
-        "form",
         F.substring(normalized_name_col("form"), 1, 2).alias("prefix2"),
+        "form",
         F.explode(salts).alias("salt"),
     )
     surf = (
@@ -363,71 +364,21 @@ def link_surfaces_distributed(
         .withColumn("salt", F.pmod(F.xxhash64("surface"), F.lit(salt_buckets)).cast("int"))
     )
 
-    def _score_block(surf_pdf: pd.DataFrame, dict_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(surf_pdf) == 0:
-            return pd.DataFrame(
-                columns=["surface", "entity_id", "matched_name", "link_score",
-                         "candidates"]
-            )
-        embedder = HashEmbedder()
-        dict_pdf = dict_pdf.sort_values(["form", "entity_id"])
-        items = list(
-            dict_pdf[["entity_id", "canonical_name", "form"]].itertuples(
-                index=False, name=None
-            )
-        )
-        exact = {}
-        for entity_id, canonical, form in items:
-            exact.setdefault(form, (entity_id, canonical))
+    def _score_block(key, surf_pdf, dict_pdf):
         surfaces = list(surf_pdf["surface"])
-        out = []
-        if not items:
-            return pd.DataFrame(
-                [(s, None, None, None, []) for s in surfaces],
-                columns=["surface", "entity_id", "matched_name", "link_score",
-                         "candidates"],
-            )
-        block_emb = embedder.encode([f for _, _, f in items])
-        form_sorts = np.array([sort_normalize(f) for _, _, f in items], dtype=np.str_)
-        # ONE batched encode + ONE block matmul for the whole cogroup block
-        # (the r2 shape encoded and matvec'd per surface in a Python loop)
-        sims_all = embedder.encode(surfaces) @ block_emb.T
-        for i, surface in enumerate(surfaces):
-            mask = _sort_mask(form_sorts, surface)
-            cands: list = []
-            best_item = None
-            best_score = None
-            if mask.any():
-                idxs = np.flatnonzero(mask)
-                sims = sims_all[i][idxs]
-                cands = _cands_from_sims(
-                    sims, [items[j] for j in idxs],
-                    cand_thresh, match_thresh, top_k,
-                )
-                b = _best_form(sims, match_thresh)
-                if b is not None:
-                    best_item, best_score = items[idxs[b]], float(sims[b])
-            hit = exact.get(surface)
-            if hit is not None:
-                out.append((surface, hit[0], hit[1], 1.0, cands))
-            elif best_item is not None:
-                out.append(
-                    (surface, best_item[0], best_item[1], best_score, cands)
-                )
-            else:
-                out.append((surface, None, None, None, cands))
-        return pd.DataFrame(
-            out,
-            columns=["surface", "entity_id", "matched_name", "link_score",
-                     "candidates"],
+        if not surfaces:  # a dictionary-only cogroup: encode nothing
+            return pd.DataFrame(columns=LINKED_SCHEMA.fieldNames())
+        rows = dict_pdf[["entity_id", "canonical_name", "prefix2", "form"]]
+        index = _DictIndex(list(rows.itertuples(index=False, name=None))).index
+        return _score_surfaces(
+            index, surfaces, [key[0]] * len(surfaces),
+            cand_thresh, match_thresh, top_k,
         )
 
     return (
         surf.groupBy("prefix2", "salt")
         .cogroup(forms.groupBy("prefix2", "salt"))
-        .applyInPandas(
-            lambda left, right: _score_block(left, right), schema=LINKED_SCHEMA
-        )
+        .applyInPandas(_score_block, schema=LINKED_SCHEMA)
     )
 
 

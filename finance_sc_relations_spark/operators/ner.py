@@ -308,7 +308,7 @@ def analyze_sentence(sentence: str, gaz: _Gazetteer, embedder: HashEmbedder):
 
 def detect_mentions(
     sentences: DataFrame,
-    company_dict,
+    company_pdf: pd.DataFrame,
     with_sc: bool = False,
     sc_model_broadcast=None,
     sc_tokenizer_broadcast=None,
@@ -316,9 +316,9 @@ def detect_mentions(
 ) -> DataFrame:
     """sentences(url, sentence_id, sentence, ...) -> mentions.
 
-    company_dict (Spark DF or pre-collected pandas DF) is collected once +
-    broadcast (small dim table — the reference's DynamoDB `company` lookup,
-    src/relation_extraction/reporter.py:143-187).
+    company_pdf, the collected dictionary (canonical_name, aliases), is
+    broadcast as a gazetteer (small dim table — the reference's DynamoDB
+    `company` lookup, src/relation_extraction/reporter.py:143-187).
 
     The per-mention spans stay inside the UDF: downstream extraction needs
     only org_groups, and the span struct array would be by far the widest
@@ -337,18 +337,14 @@ def detect_mentions(
             "detect_mentions: sc_tokenizer_broadcast requires sc_max_length "
             "(the fixed batch_encode_plus width); got None"
         )
-    spark = sentences.sparkSession
-    pdf = (
-        company_dict
-        if isinstance(company_dict, pd.DataFrame)
-        else company_dict.select("canonical_name", "aliases").toPandas()
-    )
     forms: List[str] = []
-    for _, row in pdf.iterrows():
-        forms.append(row["canonical_name"])
+    for canonical, aliases in zip(
+        company_pdf["canonical_name"], company_pdf["aliases"]
+    ):
+        forms.append(canonical)
         # toPandas yields a numpy array (or None): never test its truth
-        forms.extend([] if row["aliases"] is None else list(row["aliases"]))
-    bc = spark.sparkContext.broadcast(_Gazetteer(forms))
+        forms.extend([] if aliases is None else list(aliases))
+    bc = sentences.sparkSession.sparkContext.broadcast(_Gazetteer(forms))
 
     fields = list(MENTION_SCHEMA.fields)
     if with_sc:

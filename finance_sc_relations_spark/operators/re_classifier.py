@@ -42,7 +42,9 @@ from ..functions.relations import LABELS
 from ..functions.tagging import inverse_relations, mutate_sent
 from .models import BatchModel, REPatternModel
 
-_SCORED_POSITIONS = StructType(
+# One row per scored tag position: both scoring paths emit it and
+# aggregate_positions consumes it.
+SCORED_POSITIONS_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
         StructField("sentence_id", StringType(), False),
@@ -201,7 +203,7 @@ def score_pairs(
                 }
             )
 
-    return df.mapInPandas(_map, schema=_SCORED_POSITIONS)
+    return df.mapInPandas(_map, schema=SCORED_POSITIONS_SCHEMA)
 
 
 def aggregate_positions(scored_positions: DataFrame) -> DataFrame:

@@ -9,8 +9,6 @@ pipeline needs.
 
 from __future__ import annotations
 
-import logging
-
 from typing import Iterator
 
 import pandas as pd
@@ -184,16 +182,12 @@ def sample_token_budget(
     )
 
 
-_LOG = logging.getLogger(__name__)
-
-
 def token_cooccurrence(
     docs: DataFrame,
     min_df: int = 25,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_tokens_per_doc: int | None = 5000,
-    log_dropped: bool = False,
 ) -> DataFrame:
     """Document-level token co-occurrence statistics + PMI — the corpus
     association-mining op of a training-data pipeline (collocation /
@@ -219,14 +213,7 @@ def token_cooccurrence(
     the PMI signal). The DEFAULT is a conservative 5000 so the
     safe behavior is the ambient one at web scale (a doc must carry >5000
     DISTINCT min_df-frequent tokens before anything drops — ordinary
-    documents are untouched); pass None for exact small-corpus runs.
-
-    `log_dropped=True` counts and warn-logs the dropped (doc, token) rows.
-    It is OPT-IN (r6): the count is an extra action fired at
-    DataFrame-CONSTRUCTION time — an unconditional full cache pass per
-    invocation even when nothing is dropped and even if the caller never
-    executes the result. Auditing runs ask for it; the ambient path stays
-    lazy and one-job."""
+    documents are untouched); pass None for exact small-corpus runs."""
     tokens = docs.select(
         F.col(id_col).alias("doc"),
         F.explode(
@@ -241,8 +228,7 @@ def token_cooccurrence(
         wd = Window.partitionBy("doc").orderBy(
             F.col("df").asc(), F.col("token").asc()
         )
-        # one materialization serves the kept rows (both pair-join legs)
-        # AND the dropped count — no second pass over the ranked subtree.
+        # one materialization serves both pair-join legs.
         # persist, NOT localCheckpoint: now that the cap is the DEFAULT this
         # branch runs on every call, and a checkpoint of the corpus-sized
         # (doc, token) table would be unrecoverable on executor loss —
@@ -258,15 +244,6 @@ def token_cooccurrence(
         kept = ranked.filter(F.col("_rn") <= max_tokens_per_doc).select(
             "doc", "token"
         )
-        if log_dropped:
-            dropped = ranked.filter(F.col("_rn") > max_tokens_per_doc).count()
-            if dropped:
-                _LOG.warning(
-                    "token_cooccurrence: max_tokens_per_doc=%d dropped %d "
-                    "(doc, token) rows (kept the lowest-df tokens per doc)",
-                    max_tokens_per_doc,
-                    dropped,
-                )
     else:
         kept = tokens.join(vocab, "token", "left_semi")
     a = kept.select("doc", F.col("token").alias("token_a"))
@@ -305,7 +282,6 @@ def bm25_top_terms(
     min_df: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: str = "recompute",
 ) -> DataFrame:
     """Per-document top-k BM25-scored terms — corpus keyword extraction /
     relevance-feature materialization (the Okapi BM25 term weight every
@@ -332,22 +308,11 @@ def bm25_top_terms(
     )
     # tf feeds FOUR consumers (dl, stats via dl, dfreq, and the scored
     # join), so the plan carries four parallel Scan+Generate+HashAggregate
-    # subtrees. `materialize` picks the branch-point strategy:
-    #   - "recompute" (default): the four subtrees are independent
-    #     broadcast-building jobs that overlap on idle executors — at bench
-    #     scale this beats a persist (measured 5.5s vs 7.0s at sf1.0:
-    #     the cache write serializes what the scheduler overlapped);
-    #   - "persist": one tokenize pass + a MEMORY_AND_DISK cache of the
-    #     (doc, token, tf) table — the right trade once the corpus scan is
-    #     I/O-bound (at the 100-TB target four scans of the raw corpus
-    #     dwarf one materialization of the much smaller tf table).
-    if materialize not in ("recompute", "persist"):
-        raise ValueError(f"unknown materialize mode {materialize!r}")
+    # subtrees, recomputed rather than persisted: they are independent
+    # broadcast-building jobs that overlap on idle executors, which at
+    # bench scale beat a persist (measured 5.5s vs 7.0s at sf1.0: the cache
+    # write serializes what the scheduler overlapped).
     tf = tokens.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
-    if materialize == "persist":
-        from pyspark import StorageLevel
-
-        tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
     stats = dl.agg(
         F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")

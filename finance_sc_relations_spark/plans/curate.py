@@ -76,23 +76,18 @@ def curate_corpus(
     lang: str = "en",
     min_quality: float = 0.5,
     decontaminate_n: int = 13,
-    with_report: bool = False,
     id_col: str = "doc_id",
     text_col: str = "text",
     **minhash_params,
 ) -> dict:
-    """Returns {"curated": DataFrame, "report": DataFrame | None,
-    "cached": list[DataFrame]}.
+    """Returns {"curated": DataFrame, "cached": list[DataFrame]}.
 
-    report (when with_report) is one row per stage: (stage, n_docs) with the
-    survivor count AFTER that stage — computed over persisted stage frames
-    so the chain executes once, not once per count. "cached" lists the
-    frames this call persisted (branch points consumed by several
-    downstream passes); long-lived sessions should unpersist them after
-    materializing the curated output."""
+    "cached" lists the frames this call persisted (branch points consumed
+    by several downstream passes); long-lived sessions should unpersist
+    them after materializing the curated output. Per-stage survivor counts
+    are the `_lineage` output_rows of run_curation_checkpointed."""
     from pyspark import StorageLevel
 
-    stages: list[tuple[str, DataFrame]] = [("input", docs)]
     cached: list[DataFrame] = []
     params = dict(
         lang=lang, min_quality=min_quality, decontaminate_n=decontaminate_n,
@@ -111,38 +106,13 @@ def curate_corpus(
             # consumer. Bounded: survivors only.
             cur = cur.persist(StorageLevel.MEMORY_AND_DISK)
             cached.append(cur)
-        stages.append((name, cur))
 
     if eval_texts is not None:
         # decontaminate consumes its input twice (gram explode + anti-join)
         cur = cur.persist(StorageLevel.MEMORY_AND_DISK)
         cached.append(cur)
         cur = _gate_decontaminate(cur, **params)
-        stages.append(("decontaminate", cur))
-
-    report = None
-    if with_report:
-        # The raw input is NEVER persisted — pinning the full uncurated
-        # corpus to executor storage just to count it is a cluster-storage
-        # hazard at scale; its count is a plain scan. Post-gate stages are
-        # shrinking and each has a second consumer (its count + the next
-        # stage), so those are persisted — unless the main chain above
-        # already did (no double-persist, no duplicate `cached` entries).
-        already = {id(df) for df in cached}
-        persisted: list[tuple[str, DataFrame]] = []
-        for name, df in stages:
-            if name != "input" and id(df) not in already:
-                df = df.persist(StorageLevel.MEMORY_AND_DISK)
-                cached.append(df)
-                already.add(id(df))
-            persisted.append((name, df))
-        spark = docs.sparkSession
-        report = spark.createDataFrame(
-            [(name, df.count()) for name, df in persisted],
-            "stage string, n_docs long",
-        )
-        cur = persisted[-1][1]
-    return {"curated": cur, "report": report, "cached": cached}
+    return {"curated": cur, "cached": cached}
 
 
 def run_curation_checkpointed(
@@ -166,9 +136,8 @@ def run_curation_checkpointed(
     regenerating the input in place (same path, new content) invalidates
     every stage via the per-file (relpath, size, mtime_ns) fingerprint.
 
-    The per-stage survivor counts the eager report mode computes ad hoc are
-    here exactly the `_lineage` output_rows column — counting falls out of
-    checkpointing instead of costing extra actions.
+    The per-stage survivor counts are the `_lineage` output_rows column —
+    counting falls out of checkpointing instead of costing extra actions.
 
     Returns {"curated", "lineage", "run_id", "manager"}."""
     from .checkpoint import CheckpointManager, _input_signature, footer_rows

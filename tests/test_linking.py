@@ -24,7 +24,7 @@ def test_normalize_matches_reference_rules(spark):
 
 
 def test_exact_and_fuzzy_linking(spark):
-    cd = spark.createDataFrame(company_universe())
+    cd = company_universe()
     surfaces = spark.createDataFrame(
         [("Sonexa",), ("Sonexa Corporation",), ("Quantrix Semiconductors Corporation",),
          ("Quantrix Semiconductors Corp",),  # fuzzy variant
@@ -46,7 +46,7 @@ def test_exact_and_fuzzy_linking(spark):
 def test_connected_components_unify_alias_chain(spark):
     """Unknown surfaces linked by alias edges collapse to one canonical id,
     including transitive chains (a-b, b-c -> one component)."""
-    cd = spark.createDataFrame(company_universe())
+    cd = company_universe()
     surfaces = spark.createDataFrame(
         [("Zorblatt Industries Inc",), ("Zorblatt",), ("ZII Holdings",),
          ("Lonely Startup Inc",)],
@@ -146,7 +146,7 @@ def test_link_surfaces_emits_candidate_lists(spark):
     """L6: every surface carries its top-k sub-match-threshold candidates
     (reference org_links matches/candidates split, reporter.py:203-237).
     The Sonexa family is planted in the dictionary as near-duplicates."""
-    cd = spark.createDataFrame(company_universe())
+    cd = company_universe()
     surfaces = spark.createDataFrame(
         [("Sonexa",), ("Veltrix Systems",), ("Totally Unknown Ventures LLC",)],
         "surface string",
@@ -195,13 +195,13 @@ def test_distributed_linking_equals_broadcast_tier(spark):
     links AND candidate lists as the broadcast tier. "<name> Holdings"
     scores the "<name> Inc" and "<name> Ltd" forms equally in real
     arithmetic; their float32 cosines differ by an ulp either way, and
-    both tiers must link the min (form, entity_id) of the tie."""
+    both tiers must link the min (form, entity_id) of the tie. A second,
+    adversarial dictionary covers exact ties, an alias equal to its
+    canonical name, leading-'the' forms, a block with no dictionary forms
+    and a hot block spread over the salt buckets."""
     import numpy as np
 
-    from finance_sc_relations_spark.operators.linking import (
-        _best_form,
-        link_surfaces_distributed,
-    )
+    from finance_sc_relations_spark.operators.linking import _best_form
 
     # a forced one-ulp tie in either order picks the first form; a margin
     # of a fraction of a basis point still decides
@@ -216,13 +216,60 @@ def test_distributed_linking_equals_broadcast_tier(spark):
     assert _best_form(np.array([np.nextafter(thresh, down), thresh]), thresh) == 1
     assert _best_form(np.array([np.nextafter(thresh, down)] * 2), thresh) is None
 
-    cd = spark.createDataFrame(company_universe())
-    surfaces = spark.createDataFrame(
-        [("Sonexa",), ("Sonexa Corporation",), ("Veltrix Systems",),
-         ("Quantrix Semiconductors Corp",), ("Totally Unknown Ventures LLC",),
-         ("Quantrix",), ("Rustfield Semiconductors Holdings",),
-         ("Bluecrest Materials Holdings",)],
-        "surface string",
+    surfaces = [
+        "Sonexa", "Sonexa Corporation", "Veltrix Systems",
+        "Quantrix Semiconductors Corp", "Totally Unknown Ventures LLC",
+        "Quantrix", "Rustfield Semiconductors Holdings",
+        "Bluecrest Materials Holdings",
+    ]
+    universe = _tiers_agree(spark, company_universe(), surfaces)
+    for surface, name in (
+        ("Rustfield Semiconductors Holdings", "Rustfield Semiconductors Inc"),
+        ("Bluecrest Materials Holdings", "Bluecrest Materials Inc"),
+    ):
+        assert universe[surface][1] == name, (surface, universe[surface])
+
+    # adversarial dictionary: an alias equal to its canonical name, one
+    # alias shared by two entities (listed max entity_id first), a
+    # leading-'the' form, and a surface block with no dictionary forms
+    rows = [
+        ("LEI9", "Borvane Foods Ltd", ["Borvane"]),
+        ("LEI2", "Borvane Foods Corporation", ["Borvane", "Borvane Foods"]),
+        ("LEI5", "Arcwell Dynamics Inc", ["Arcwell Dynamics Inc", "Arcwell"]),
+        ("LEI7", "Corlane Group Holdings", None),
+        ("LEI8", "The Corlane Trust", []),
+    ]
+    cd_pdf = pd.DataFrame(
+        [(e, c, normalize_name(c)[:2], a) for e, c, a in rows],
+        columns=["entity_id", "canonical_name", "prefix2", "aliases"],
+    )
+    hot = [f"Borvane Foods Unit {i}" for i in range(30)]  # one 'bo' block
+    adversarial = _tiers_agree(spark, cd_pdf, hot + [
+        "Borvane", "Borvane Foods", "Arcwell Dynamics Inc",
+        "Arcwell Dynamics Labs", "The Corlane Group",
+        "The Corlane Trust", "Zyxel Unknown Networks",
+    ])
+    assert adversarial["Borvane"][:3] == ("LEI2", "Borvane Foods Corporation", 1.0)
+    assert adversarial["Arcwell Dynamics Inc"][:3] == (
+        "LEI5", "Arcwell Dynamics Inc", 1.0)
+    assert adversarial["Zyxel Unknown Networks"] == (None, None, None, ())
+    assert adversarial["The Corlane Trust"][0] == "LEI8"
+    assert any(adversarial[s][3] for s in hot)  # candidate lists compared
+
+
+def _tiers_agree(spark, cd_pdf, surfaces):
+    """Both linking tiers over the same dictionary and surfaces (the
+    distributed one with its default 4 salt buckets): equal links and
+    candidate lists, returned by surface."""
+    from finance_sc_relations_spark.operators.linking import (
+        link_surfaces_distributed,
+    )
+
+    surf = spark.createDataFrame([(s,) for s in surfaces], "surface string")
+    cd = spark.createDataFrame(
+        cd_pdf,
+        "entity_id string, canonical_name string, prefix2 string,"
+        " aliases array<string>",
     )
 
     def norm(df):
@@ -237,15 +284,10 @@ def test_distributed_linking_equals_broadcast_tier(spark):
             for r in df.collect()
         }
 
-    broadcast_out = norm(link_surfaces(surfaces, cd))
-    distributed_out = norm(link_surfaces_distributed(surfaces, cd))
-    assert broadcast_out == distributed_out
-    for surface, name in (
-        ("Rustfield Semiconductors Holdings", "Rustfield Semiconductors Inc"),
-        ("Bluecrest Materials Holdings", "Bluecrest Materials Inc"),
-    ):
-        for out in (broadcast_out, distributed_out):
-            assert out[surface][1] == name, (surface, out[surface])
+    broadcast_out = norm(link_surfaces(surf, cd_pdf))
+    assert broadcast_out == norm(link_surfaces_distributed(surf, cd))
+    assert len(broadcast_out) == len(set(surfaces))
+    return broadcast_out
 
 
 def test_pipeline_with_forced_distributed_linking(spark):

@@ -2,7 +2,7 @@
 every top-level name of a package module is used outside tests.
 
 Walks imports with `ast`, starting from the non-test entry points (the
-driver contract, the bench scripts, `scripts/` and `perfbench/`), and
+driver contract, `bench.py`, `scripts/` and `perfbench/`), and
 follows package imports transitively. A module that only tests import is
 dead code; delete it with its tests, or record here why it stays. The same
 holds for a top-level function, class or constant that no non-test file
@@ -28,18 +28,11 @@ ALLOWED_TEST_ONLY_NAMES = {
         "exact all-pairs oracle the LSH variant is checked against",
     "functions.tagging.extract_tagged_names":
         "oracle of the tagging property tests",
-    "functions.tagging.get_e1e2_start":
-        "reference port (T9, whitespace tokens) pinned by its reference "
-        "test; the runtime T9 is wordpiece.get_e1e2_start_ids",
-    "functions.relations.resort_relation":
-        "reference port (G5) pinned by the reference's own test values; "
-        "emit_triples applies the rule in Spark",
 }
 
 
 def _entry_points() -> list[Path]:
     return [REPO / "__spark_entry__.py", REPO / "bench.py",
-            REPO / "bench_extra.py",
             *sorted((REPO / "scripts").glob("*.py")),
             *sorted((REPO / "perfbench").glob("*.py"))]
 

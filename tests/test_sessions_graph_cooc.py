@@ -7,6 +7,31 @@ import pytest
 from pyspark.sql import functions as F
 
 
+def _stage_survivors(spark, docs, tmp_path, evals=None, **kwargs) -> dict:
+    """Per-stage survivor counts of the checkpointed curation run over
+    docs: the `_lineage` output_rows summed per stage, plus the first
+    stage's input_rows (a stage-level count on every partition row) under
+    "input"."""
+    from finance_sc_relations_spark.plans.curate import (
+        run_curation_checkpointed,
+    )
+
+    docs_path = str(tmp_path / "docs.parquet")
+    docs.write.parquet(docs_path)
+    evals_path = None
+    if evals is not None:
+        evals_path = str(tmp_path / "evals.parquet")
+        evals.write.parquet(evals_path)
+    out = run_curation_checkpointed(
+        spark, docs_path, tmp_path / "ckpt", eval_texts_path=evals_path,
+        **kwargs,
+    )
+    lin = out["lineage"].toPandas()
+    counts = lin.groupby("stage")["output_rows"].sum().to_dict()
+    counts["input"] = lin.loc[lin["stage"] == "curate_lang", "input_rows"].max()
+    return {k.removeprefix("curate_"): v for k, v in counts.items()}
+
+
 def _ts(minutes: float) -> datetime:
     return datetime(2024, 1, 1) + timedelta(minutes=minutes)
 
@@ -79,7 +104,9 @@ def test_token_cooccurrence_counts(spark):
     assert ab["pmi"] == pytest.approx(math.log(4 * 3 / (4 * 3)))
 
 
-def test_curate_corpus_stages_and_report(spark):
+def test_curate_corpus_stages_and_report(spark, tmp_path):
+    """Survivors of each curation gate; the per-stage report is the
+    checkpointed run's `_lineage`."""
     from finance_sc_relations_spark.plans.curate import curate_corpus
 
     good = (
@@ -104,12 +131,11 @@ def test_curate_corpus_stages_and_report(spark):
         docs.select("doc_id", "text", "source"),
         eval_texts=None,
         min_quality=0.5,
-        with_report=True,
     )
     kept = sorted(r["doc_id"] for r in out["curated"].collect())
     # 1 fails quality; 2 exact-dups 0; 3 near-dups 0 (minhash); 0 & 4 remain
     assert kept == [0, 4]
-    report = {r["stage"]: r["n_docs"] for r in out["report"].collect()}
+    report = _stage_survivors(spark, docs, tmp_path, min_quality=0.5)
     assert report["input"] == 5
     assert report["quality"] == 4
     assert report["exact_dedup"] == 3
@@ -206,8 +232,9 @@ def test_new_operators_degenerate_inputs(spark):
     assert {r["tag"] for r in out} == {"keep-a", "keep-b"}
 
 
-def test_curate_decontaminate_stage(spark):
-    """eval overlap drops a curated doc; the report carries the stage."""
+def test_curate_decontaminate_stage(spark, tmp_path):
+    """eval overlap drops a curated doc; the `_lineage` report carries the
+    stage."""
     from finance_sc_relations_spark.plans.curate import curate_corpus
 
     body_a = (
@@ -223,11 +250,10 @@ def test_curate_decontaminate_stage(spark):
         "doc_id long, text string, source string",
     )
     evals = spark.createDataFrame([(body_a[:400],)], "text string")
-    out = curate_corpus(docs, eval_texts=evals, min_quality=0.1,
-                        with_report=True)
+    out = curate_corpus(docs, eval_texts=evals, min_quality=0.1)
     kept = [r["doc_id"] for r in out["curated"].collect()]
     assert kept == [1]
-    report = {r["stage"]: r["n_docs"] for r in out["report"].collect()}
+    report = _stage_survivors(spark, docs, tmp_path, evals, min_quality=0.1)
     assert report["near_dup"] == 2 and report["decontaminate"] == 1
 
 
@@ -288,11 +314,9 @@ def test_triangle_count_degree_oriented_star(spark):
     assert out == {"hub": 1, "leaf0": 1, "leaf1": 1, "x": 1, "y": 1, "z": 1}
 
 
-def test_token_cooccurrence_per_doc_cap(spark, caplog):
-    """max_tokens_per_doc keeps each doc's rarest frequent tokens, logs the
-    drop count, and leaves under-cap corpora byte-identical."""
-    import logging
-
+def test_token_cooccurrence_per_doc_cap(spark):
+    """max_tokens_per_doc keeps each doc's rarest frequent tokens and
+    leaves under-cap corpora byte-identical."""
     from finance_sc_relations_spark.operators.text_stats import (
         token_cooccurrence,
     )
@@ -310,39 +334,24 @@ def test_token_cooccurrence_per_doc_cap(spark, caplog):
         (r["token_a"], r["token_b"]): r["c_ab"]
         for r in token_cooccurrence(docs, min_df=2).collect()
     }
-    # cap larger than any doc: identical output, nothing logged
-    with caplog.at_level(logging.WARNING):
-        capped_loose = {
-            (r["token_a"], r["token_b"]): r["c_ab"]
-            for r in token_cooccurrence(
-                docs, min_df=2, max_tokens_per_doc=10
-            ).collect()
-        }
+    # cap larger than any doc: identical output
+    capped_loose = {
+        (r["token_a"], r["token_b"]): r["c_ab"]
+        for r in token_cooccurrence(
+            docs, min_df=2, max_tokens_per_doc=10
+        ).collect()
+    }
     assert capped_loose == base
-    assert not any("dropped" in m for m in caplog.messages)
 
     # cap of 2: docs 0/1 keep their two RAREST tokens (ra, rb; df=2 beats
-    # common's df=3) and drop 'common'. The drop count is logged only when
-    # asked for (log_dropped=True; r6 made the audit count opt-in so the
-    # ambient capped path fires no eager job at construction time)
-    with caplog.at_level(logging.WARNING):
-        capped = {
-            (r["token_a"], r["token_b"]): r["c_ab"]
-            for r in token_cooccurrence(
-                docs, min_df=2, max_tokens_per_doc=2
-            ).collect()
-        }
+    # common's df=3) and drop 'common'
+    capped = {
+        (r["token_a"], r["token_b"]): r["c_ab"]
+        for r in token_cooccurrence(
+            docs, min_df=2, max_tokens_per_doc=2
+        ).collect()
+    }
     assert capped == {("ra", "rb"): 2}
-    assert not any("dropped" in m for m in caplog.messages)
-    with caplog.at_level(logging.WARNING):
-        audited = {
-            (r["token_a"], r["token_b"]): r["c_ab"]
-            for r in token_cooccurrence(
-                docs, min_df=2, max_tokens_per_doc=2, log_dropped=True
-            ).collect()
-        }
-    assert audited == {("ra", "rb"): 2}
-    assert any("dropped 2" in m for m in caplog.messages)
 
 
 def test_copurchase_hot_supplier_aqe_skew_split(spark):

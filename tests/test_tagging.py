@@ -106,12 +106,3 @@ def test_entity_annotation_same_group_overlap_skipped():
     # name appears only once.
     out = entity_annotation("Acme rose.", "Acme", "Acme", {"Acme": 0})
     assert out == []
-
-
-def test_get_e1e2_start():
-    from finance_sc_relations_spark.functions.tagging import get_e1e2_start
-
-    toks = "[E1] Acme Corp [/E1] supplies [E2] Beta [/E2] .".split()
-    assert get_e1e2_start(toks) == (0, 5)
-    assert get_e1e2_start(["no", "tags", "here"]) is None
-    assert get_e1e2_start(["[E1]", "only"]) is None
