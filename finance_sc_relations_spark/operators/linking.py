@@ -353,8 +353,8 @@ def link_surfaces_distributed(
     ).select(
         "entity_id",
         "canonical_name",
-        F.substring(normalized_name_col("form"), 1, 2).alias("prefix2"),
         "form",
+        F.substring(normalized_name_col("form"), 1, 2).alias("prefix2"),
         F.explode(salts).alias("salt"),
     )
     surf = (
