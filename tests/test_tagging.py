@@ -106,3 +106,26 @@ def test_entity_annotation_same_group_overlap_skipped():
     # name appears only once.
     out = entity_annotation("Acme rose.", "Acme", "Acme", {"Acme": 0})
     assert out == []
+
+
+def test_get_e1e2_start():
+    # the reference's own values (infer.py:439-442, whitespace tokens):
+    # first [E1] at 0, first [E2] at 5; a missing marker gives None. They
+    # run through the runtime id-level lookup both scoring paths use.
+    from finance_sc_relations_spark.functions.wordpiece import (
+        build_re_tokenizer,
+        get_e1e2_start_ids,
+    )
+
+    tok = build_re_tokenizer(["acme supplies beta", "acme buys beta"], vocab_size=100)
+    e1_id = tok.convert_tokens_to_ids("[E1]")
+    e2_id = tok.convert_tokens_to_ids("[E2]")
+
+    def start(toks):
+        return get_e1e2_start_ids(
+            [tok.convert_tokens_to_ids(t) for t in toks], e1_id, e2_id
+        )
+
+    assert start("[E1] Acme Corp [/E1] supplies [E2] Beta [/E2] .".split()) == (0, 5)
+    assert start(["no", "tags", "here"]) is None
+    assert start(["[E1]", "only"]) is None

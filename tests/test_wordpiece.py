@@ -66,16 +66,6 @@ def test_marker_positions_in_subword_ids():
     cut = tok.encode(sent, max_length=start[1])
     assert get_e1e2_start_ids(cut, e1_id, e2_id) is None
 
-    # the reference's own values (infer.py:439-442, whitespace tokens):
-    # first [E1] at 0, first [E2] at 5; a missing marker gives None
-    ref = "[E1] Acme Corp [/E1] supplies [E2] Beta [/E2] .".split()
-    assert get_e1e2_start_ids(
-        [tok.convert_tokens_to_ids(t) for t in ref], e1_id, e2_id
-    ) == (0, 5)
-    for toks in (["no", "tags", "here"], ["[E1]", "only"]):
-        ids_ = [tok.convert_tokens_to_ids(t) for t in toks]
-        assert get_e1e2_start_ids(ids_, e1_id, e2_id) is None
-
     # batch form flags exactly the truncated row
     enc, starts = encode_with_markers(tok, [sent, sent], None)
     assert starts[0] == starts[1] == start
